@@ -119,16 +119,13 @@ sandbox stand-in for N vs 4N executors per the driver instruction.
   map-only with ZERO shuffles — there is no algorithmic term that could
   scale with N; deviations from 1.0 in either direction are the box,
   not the plan.
-* SNOMED/HPO-scale dictionary (23k terms, Aho-Corasick path,
+* SNOMED/HPO-scale dictionary (23k terms, trie-regex kernel,
   `mentions_big_dict`): scaling efficiency **{eff_big:.3f}** at the same
   pair. The path is map-only like the small-dict stage; its efficiency
-  reads slightly lower because the 23k-term automaton is built once per
-  Python worker (~0.1 s) — a fixed per-worker cost whose aggregate is 4×
+  reads slightly lower because the 23k-term trie patterns are compiled
+  once per Python worker — a fixed per-worker cost whose aggregate is 4×
   larger at 4N and which amortizes to zero on a long-lived cluster or a
-  larger corpus. Kernel microbench: AC ≈150k turns/s/core ≈ 27× a
-  blocked 256-term alternation regex and ~2× a vectorized token-n-gram
-  join, so the Python automaton IS the fast path (VERDICT r02 #4
-  measured, no rewrite warranted)
+  larger corpus
 
 Why N={lo}: on this single box all cores share one memory bus, and the
 box's effective bandwidth varies between sessions (round 1 measured

@@ -109,8 +109,6 @@ class PipelineConfig:
     # data by contract — see operators/hierarchy.py). Above it, the
     # distributed iterative-self-join path runs.
     small_graph_threshold: int = 100_000
-    # Arrow batch size for pandas-UDF stages (amortizes automaton build).
-    arrow_max_records_per_batch: int = 10_000
     # Target partitions for the transcript side; None → leave to AQE.
     transcript_partitions: int | None = None
 

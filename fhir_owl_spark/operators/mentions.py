@@ -12,22 +12,14 @@ at i-1 and j are NOT in [a-z0-9]. ASCII word-boundary semantics —
 documented, deterministic, SQL-expressible for the DuckDB oracle when the
 corpus is space-separated.
 
-Three strategies, switched on dictionary size:
-  * ``regex``     — flat alternation per prefix layer, vectorized
-    ``pd.Series.str.findall`` (C-speed). O(n_terms × corpus); wins while
-    the dictionary is small (≤ 256 terms).
-  * ``trieregex`` — the same vectorized scan over a PREFIX-FACTORED
-    (trie) pattern, so matching cost is independent of term count while
-    staying in the C regex engine (~4× the Python automaton at 24k
-    terms, identical hits); the default for 256 < terms ≤ 65k. Compile
-    cost grows with total dictionary characters — cached per worker.
-  * ``ahocorasick`` — pure-Python Aho-Corasick automaton with output links
-    (reports ALL dictionary occurrences, including terms nested inside
-    longer terms — alternation regexes cannot). O(corpus + hits),
-    independent of dictionary size; the 10^5-term SNOMED-scale path. The
-    automaton is built once per executor worker and cached by dictionary
-    fingerprint, amortized over every Arrow batch that worker sees
-    (arrow.maxRecordsPerBatch keeps batches ≥10^4 rows).
+One kernel at every dictionary size: each prefix layer (see
+``_layer_terms``) becomes one PREFIX-FACTORED (trie) regex, scanned with
+the vectorized ``pd.Series.str.findall`` — the per-row work stays in the
+C regex engine, and the engine walks shared prefixes once, so scan cost
+does not grow with term count. Compile cost grows with total dictionary
+characters; the patterns are compiled once per Python worker and cached
+by dictionary, so every Arrow batch and every job on one dictionary
+reuses them.
 
 Scale notes (10^12 turns):
   * the dictionary is driver-collected then ``sc.broadcast`` — bounded by
@@ -42,7 +34,6 @@ Scale notes (10^12 turns):
 from __future__ import annotations
 
 import re
-from collections import deque
 from typing import Iterable, Iterator
 
 import pandas as pd
@@ -53,14 +44,6 @@ from ..config import PipelineConfig
 from ..schemas import MENTIONS
 
 _WORD_CHARS = frozenset("abcdefghijklmnopqrstuvwxyz0123456789")
-
-REGEX_STRATEGY_MAX_TERMS = 256
-# Above the flat-alternation cutoff, a TRIE-factored pattern keeps the
-# whole scan in the C regex engine (measured ~4× the pure-Python
-# Aho-Corasick loop at 24k terms, identical hits). Compile time and
-# pattern size grow with total dictionary characters, so beyond this cap
-# the automaton remains the safe path for SNOMED-scale (10^5+) term sets.
-TRIE_STRATEGY_MAX_TERMS = 65_536
 
 
 def _layer_terms(terms: list[str]) -> list[list[str]]:
@@ -75,9 +58,11 @@ def _layer_terms(terms: list[str]) -> list[list[str]]:
     layers: list[list[str]] = []
     while remaining:
         conflicted: set[str] = set()
+        n = len(remaining)
         for i, a in enumerate(remaining):
             la = len(a)
-            for b in remaining[i + 1 :]:
+            for j in range(i + 1, n):
+                b = remaining[j]
                 if not b.startswith(a):
                     break
                 if len(b) > la and b[la] not in _WORD_CHARS:
@@ -88,14 +73,6 @@ def _layer_terms(terms: list[str]) -> list[list[str]]:
         )
         remaining = sorted(conflicted)
     return layers
-
-
-def _layer_regex(layer: list[str]) -> "re.Pattern[str]":
-    alt = "|".join(re.escape(t) for t in layer)  # already longest-first
-    # zero-width: every start position is examined, so overlapping matches
-    # at DIFFERENT positions are all found; trailing-boundary failure
-    # backtracks into shorter branches automatically.
-    return re.compile(r"(?<![a-z0-9])(?=(" + alt + r")(?![a-z0-9]))")
 
 
 def _trie_pattern(terms: list[str]) -> str:
@@ -122,7 +99,14 @@ def _trie_pattern(terms: list[str]) -> str:
             if ch == end:
                 has_end = True
                 continue
-            alts.append(re.escape(ch) + emit(sub))
+            # a run of single-child, non-terminal nodes is a plain
+            # literal: extend it in a loop, so a long term does not
+            # recurse once per character
+            run = [ch]
+            while len(sub) == 1 and end not in sub:
+                ((ch, sub),) = sub.items()
+                run.append(ch)
+            alts.append(re.escape("".join(run)) + emit(sub))
         if not alts:
             return ""
         body = alts[0] if len(alts) == 1 else "(?:" + "|".join(alts) + ")"
@@ -139,9 +123,11 @@ def _trie_layer_regex(layer: list[str]) -> "re.Pattern[str]":
     return re.compile(r"(?<![a-z0-9])(?=(" + _trie_pattern(layer) + r")(?![a-z0-9]))")
 
 
-# single-entry compiled-pattern cache, same policy/rationale as
-# _AUTOMATON_CACHE below (trie compile is ~1-2 s at 20k terms; worker
-# reuse amortizes it across every batch and every job on one dictionary)
+# keyed by the terms tuple ITSELF (dict keys hash then compare by
+# equality), never by hash(terms): a long-lived Python worker running
+# successive jobs with different dictionaries could collide on the 64-bit
+# hash and silently reuse the wrong patterns. Single-entry policy — one
+# dictionary per job; clear on miss to avoid leaks.
 _TRIE_PATTERN_CACHE: dict[tuple[str, ...], "list[re.Pattern[str]]"] = {}
 
 
@@ -196,122 +182,14 @@ def linkable_terms(dictionary: DataFrame, cfg: PipelineConfig) -> list[tuple[str
 
 
 # ---------------------------------------------------------------------------
-# Aho-Corasick (pure Python, output links → all occurrences)
-# ---------------------------------------------------------------------------
-
-
-class AhoCorasick:
-    """Classic Aho-Corasick keyword automaton.
-
-    ``find_counts(text)`` returns {term_index: n_boundary_checked_hits}.
-    Standard construction: trie + BFS failure links + output links, so
-    every dictionary occurrence is reported even when nested in a longer
-    term's match.
-    """
-
-    def __init__(self, terms: list[str]):
-        self.terms = terms
-        self.goto: list[dict[str, int]] = [{}]
-        self.out: list[list[int]] = [[]]
-        self.fail: list[int] = [0]
-        for idx, term in enumerate(terms):
-            state = 0
-            for ch in term:
-                nxt = self.goto[state].get(ch)
-                if nxt is None:
-                    self.goto.append({})
-                    self.out.append([])
-                    self.fail.append(0)
-                    nxt = len(self.goto) - 1
-                    self.goto[state][ch] = nxt
-                state = nxt
-            self.out[state].append(idx)
-        # BFS failure links
-        queue = deque()
-        for ch, s in self.goto[0].items():
-            self.fail[s] = 0
-            queue.append(s)
-        while queue:
-            r = queue.popleft()
-            for ch, s in self.goto[r].items():
-                queue.append(s)
-                f = self.fail[r]
-                while f and ch not in self.goto[f]:
-                    f = self.fail[f]
-                self.fail[s] = self.goto[f].get(ch, 0)
-                if self.fail[s] == s:
-                    self.fail[s] = 0
-                self.out[s] = self.out[s] + self.out[self.fail[s]]
-        self.term_lens = [len(t) for t in terms]
-
-    def find_counts(self, text: str) -> dict[int, int]:
-        counts: dict[int, int] = {}
-        goto, fail, out, lens = self.goto, self.fail, self.out, self.term_lens
-        state = 0
-        n = len(text)
-        for j in range(n):
-            ch = text[j]
-            while state and ch not in goto[state]:
-                state = fail[state]
-            state = goto[state].get(ch, 0)
-            if out[state]:
-                for idx in out[state]:
-                    i = j + 1 - lens[idx]
-                    if (i == 0 or text[i - 1] not in _WORD_CHARS) and (
-                        j + 1 == n or text[j + 1] not in _WORD_CHARS
-                    ):
-                        counts[idx] = counts.get(idx, 0) + 1
-        return counts
-
-
-# keyed by the terms tuple ITSELF (dict keys hash then compare by
-# equality), never by hash(terms): a long-lived Python worker running
-# successive jobs with different dictionaries could collide on the 64-bit
-# hash and silently reuse the wrong automaton. Single-entry policy —
-# one dictionary per job; clear on miss to avoid leaks.
-_AUTOMATON_CACHE: dict[tuple[str, ...], AhoCorasick] = {}
-
-
-def _automaton_for(terms: tuple[str, ...]) -> AhoCorasick:
-    ac = _AUTOMATON_CACHE.get(terms)
-    if ac is None:
-        ac = AhoCorasick(list(terms))
-        _AUTOMATON_CACHE.clear()
-        _AUTOMATON_CACHE[terms] = ac
-    return ac
-
-
-# ---------------------------------------------------------------------------
 # mapInPandas stage
 # ---------------------------------------------------------------------------
-
-
-def _term_regex(term: str) -> str:
-    return r"(?<![a-z0-9])" + re.escape(term) + r"(?![a-z0-9])"
-
-
-def extract_mention_pairs(
-    transcripts: DataFrame,
-    dictionary: DataFrame,
-    cfg: PipelineConfig,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Distinct-ish (code, conv_id) pairs, deduped batch-locally inside
-    the UDF before any data returns to the JVM. For the triple path the
-    turn/term/score detail is dead weight — batch-local dedup cuts the
-    Arrow return volume and the dedup-shuffle input by the per-batch
-    duplication factor (hub terms repeat in most turns of a conv).
-    Global dedup still happens downstream on the triple key."""
-    return extract_mentions(
-        transcripts, dictionary, cfg, strategy=strategy, pairs_only=True
-    )
 
 
 def extract_mentions(
     transcripts: DataFrame,
     dictionary: DataFrame,
     cfg: PipelineConfig,
-    strategy: str = "auto",
     carry_cols: tuple[str, ...] = (),
     pairs_only: bool = False,
 ) -> DataFrame:
@@ -322,6 +200,13 @@ def extract_mentions(
     streaming DataFrames (no shuffle, no state). carry_cols: extra input
     columns threaded through to the output (e.g. the event-time column
     for streaming window aggs).
+
+    pairs_only: emit only (code, conv_id), deduped batch-locally inside
+    the UDF before any data returns to the JVM. For the triple path the
+    turn/term/score detail is dead weight — batch-local dedup cuts the
+    Arrow return volume and the dedup-shuffle input by the per-batch
+    duplication factor (hub terms repeat in most turns of a conv).
+    Global dedup still happens downstream on the triple key.
     """
     from pyspark.sql.types import StringType as _Str
     from pyspark.sql.types import StructField as _Sf
@@ -355,27 +240,12 @@ def extract_mentions(
     for t, c in pairs:
         term_codes[t] = term_codes[t] + (c,)
 
-    if strategy == "auto":
-        if len(term_list) <= REGEX_STRATEGY_MAX_TERMS:
-            strategy = "regex"
-        elif len(term_list) <= TRIE_STRATEGY_MAX_TERMS:
-            strategy = "trieregex"
-        else:
-            strategy = "ahocorasick"
-
     sc = transcripts.sparkSession.sparkContext
-    bc = sc.broadcast((term_list, term_codes, strategy))
+    bc = sc.broadcast((term_list, term_codes))
 
     def gen(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        terms, codes_of, strat = bc.value
-        patterns = None
-        ac = None
-        if strat == "regex":
-            patterns = [_layer_regex(layer) for layer in _layer_terms(list(terms))]
-        elif strat == "trieregex":
-            patterns = _trie_patterns_for(terms)
-        else:
-            ac = _automaton_for(terms)
+        terms, codes_of = bc.value
+        patterns = _trie_patterns_for(terms)
         code_map = pd.DataFrame(
             [(t, c) for t, cs in codes_of.items() for c in cs],
             columns=["term", "code"],
@@ -383,26 +253,16 @@ def extract_mentions(
         for pdf in batches:
             text = pdf["text"].fillna("").str.lower()
             parts: list[pd.DataFrame] = []
-            if patterns is not None:
-                # single alternation pass per layer (usually 1-2 layers):
-                # findall → explode → group counts; all C-speed
-                for pat in patterns:
-                    found = text.str.findall(pat)
-                    ex = found.explode().dropna()
-                    if len(ex) == 0:
-                        continue
-                    counts = ex.groupby([ex.index, ex.to_numpy()]).size()
-                    counts.index.names = ["_row", "term"]
-                    parts.append(counts.rename("n_hits").reset_index())
-            else:
-                recs = {"_row": [], "term": [], "n_hits": []}
-                for row, t in zip(pdf.index, text):
-                    for idx, n in ac.find_counts(t).items():
-                        recs["_row"].append(row)
-                        recs["term"].append(terms[idx])
-                        recs["n_hits"].append(n)
-                if recs["_row"]:
-                    parts.append(pd.DataFrame(recs))
+            # single alternation pass per layer (usually 1-2 layers):
+            # findall → explode → group counts; all C-speed
+            for pat in patterns:
+                found = text.str.findall(pat)
+                ex = found.explode().dropna()
+                if len(ex) == 0:
+                    continue
+                counts = ex.groupby([ex.index, ex.to_numpy()]).size()
+                counts.index.names = ["_row", "term"]
+                parts.append(counts.rename("n_hits").reset_index())
             if pairs_only:
                 if not parts:
                     yield pd.DataFrame(
@@ -452,11 +312,6 @@ def extract_mentions(
     return transcripts.select("conv_id", "turn_idx", "text", *carry).mapInPandas(
         gen, out_schema
     )
-
-
-def mention_conv_pairs(mentions: DataFrame) -> DataFrame:
-    """Distinct (code, conv_id) — the mentions-in edge payload."""
-    return mentions.select("code", "conv_id").distinct()
 
 
 def score_mentions_with_context(

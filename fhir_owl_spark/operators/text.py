@@ -937,7 +937,7 @@ def bpe_encode(
     is an iterative per-word computation that bounded Column
     expressions cannot express (the per-merge fold works for one known
     merge, not a 32k-entry ranked list). This is the engine's
-    established slow-path discipline (mentions' Aho-Corasick): an
+    established slow-path discipline (the mention scan): an
     Arrow-vectorized ``pandas_udf`` whose merge table ships once per
     executor in the task closure (model-sized, like the broadcast
     dictionary), with a per-batch WORD memo — natural-language batches

@@ -1,19 +1,22 @@
 """Mention-detection semantics: whole-word ASCII-boundary matching, case
-insensitivity, nested/overlapping terms, strategy equivalence (layered
-regex vs Aho-Corasick), deprecated/stop-term exclusion."""
+insensitivity, nested/overlapping terms, engine ≡ fixture model
+(fixtures.model_mentions), deprecated/stop-term exclusion."""
 
 from __future__ import annotations
 
 import datetime as dt
+from collections import Counter
 
 import pytest
+from pyspark.sql import functions as F
 
 from fhir_owl_spark.config import PipelineConfig
 from fhir_owl_spark.fixtures import Ontology, ontology_dfs, transcripts_df
 from fhir_owl_spark.operators.dictionary import build_concept_dictionary
 from fhir_owl_spark.operators.mentions import (
-    AhoCorasick,
     _layer_terms,
+    _trie_layer_regex,
+    _trie_patterns_for,
     extract_mentions,
 )
 from fhir_owl_spark.schemas import OWL_THING
@@ -24,6 +27,7 @@ def make_ont():
     o.concept(OWL_THING, "t", label="Thing")
     o.concept("http://x#Data", "t", label="data")
     o.concept("http://x#DataObject", "t", label="data object")
+    o.concept("http://x#Object", "t", label="object")
     o.concept("http://x#Scan", "t", label="scan")
     o.concept("http://x#Old", "t", label="legacy", deprecated=True)
     for c in o.concepts:
@@ -41,14 +45,27 @@ def turns(*texts):
     ]
 
 
-def run(spark, texts, strategy, cfg=None, ont=None):
+def run(spark, texts, cfg=None, ont=None, n_filler=0):
     o, c = make_ont()
     cfg = cfg or c
     ont = ont or o
     concepts, edges, synonyms = ontology_dfs(spark, ont)
     d = build_concept_dictionary(concepts, synonyms, cfg)
+    if n_filler:
+        # filler concepts whose terms ('zq0000042', ...) occur in no text:
+        # they only grow the dictionary
+        filler = spark.range(n_filler).select(
+            F.format_string("http://x#F%d", "id").alias("iri"),
+            F.format_string("F%d", "id").alias("code"),
+            F.format_string("zq%07d", "id").alias("display"),
+            F.array().cast("array<string>").alias("synonyms"),
+            F.lit(False).alias("deprecated"),
+            F.lit(False).alias("imported"),
+            F.lit(False).alias("root"),
+        )
+        d = d.unionByName(filler)
     tdf = transcripts_df(spark, turns(*texts))
-    m = extract_mentions(tdf, d, cfg, strategy=strategy)
+    m = extract_mentions(tdf, d, cfg)
     return {(r["conv_id"], r["code"], r["term"], r["n_hits"]) for r in m.collect()}
 
 
@@ -57,39 +74,60 @@ TEXTS = [
     "DATA Object pipeline",         # case-insensitive, multi-word across case
     "database scan running",        # 'data' must NOT match inside 'database'
     "scan scan scan",               # n_hits=3
-    "data, object!",                # punctuation boundary: 'data' yes, 'data object' no
+    "data, object!",                # punctuation boundary: 'data', 'object' yes; 'data object' no
     "legacy system",                # deprecated label must not link
     "",                             # empty text
+    "a data object here",           # 'object' nested as a suffix of 'data object'
+    "database",                     # no term matches inside a longer word
 ]
 
 EXPECTED = {
     ("c0", "Data", "data", 1),
     ("c0", "DataObject", "data object", 1),
+    ("c0", "Object", "object", 1),
     ("c1", "Data", "data", 1),
     ("c1", "DataObject", "data object", 1),
+    ("c1", "Object", "object", 1),
     ("c2", "Scan", "scan", 1),
     ("c3", "Scan", "scan", 3),
     ("c4", "Data", "data", 1),
+    ("c4", "Object", "object", 1),
+    ("c7", "Data", "data", 1),
+    ("c7", "DataObject", "data object", 1),
+    ("c7", "Object", "object", 1),
 }
 
 
-@pytest.mark.parametrize("strategy", ["regex", "trieregex", "ahocorasick"])
-def test_matching_semantics(spark, strategy):
-    assert run(spark, TEXTS, strategy) == EXPECTED
+# Dictionary sizes on each side of the former kernel cutovers (flat regex
+# up to 256 terms, trie regex up to 65,536, Aho-Corasick above). Each id
+# names the kernel that used to serve that size; the trie regex now serves
+# all of them, so the semantics must hold unchanged at every size.
+DICT_SIZES = {"regex": 0, "trieregex": 300, "ahocorasick": 65_537}
 
 
-def test_strategies_agree_on_fixture_corpus(spark):
+@pytest.mark.parametrize("size_class", list(DICT_SIZES))
+def test_matching_semantics(spark, size_class):
+    assert run(spark, TEXTS, n_filler=DICT_SIZES[size_class]) == EXPECTED
+
+
+def test_engine_matches_model_on_fixture_corpus(spark):
     from fhir_owl_spark import fixtures as fx
 
     ont, cfg = fx.pizza_fixture()
     texts = [t["text"] for t in fx.make_transcripts(ont, cfg, n_conv=20, seed=3)]
     concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
     d = build_concept_dictionary(concepts, synonyms, cfg)
-    tdf = transcripts_df(spark, turns(*texts))
-    a = {tuple(r) for r in extract_mentions(tdf, d, cfg, strategy="regex").collect()}
-    b = {tuple(r) for r in extract_mentions(tdf, d, cfg, strategy="ahocorasick").collect()}
-    c = {tuple(r) for r in extract_mentions(tdf, d, cfg, strategy="trieregex").collect()}
-    assert a == b == c and a
+    rows = turns(*texts)
+    tdf = transcripts_df(spark, rows)
+    got = {
+        (r["code"], r["conv_id"])
+        for r in extract_mentions(tdf, d, cfg).select("code", "conv_id").collect()
+    }
+    want = {
+        (code, conv_id)
+        for code, _, conv_id in fx.model_mentions(fx.model_concept_rows(ont, cfg), rows, cfg)
+    }
+    assert got == want and got
 
 
 def test_trie_pattern_language():
@@ -118,17 +156,34 @@ def test_layering():
 
 
 def test_ahocorasick_overlaps():
-    ac = AhoCorasick(["data", "data object", "object"])
-    counts = ac.find_counts("a data object here")
-    assert counts == {0: 1, 1: 1, 2: 1}
-    assert ac.find_counts("database") == {}
+    """The overlap cases of the removed Aho-Corasick kernel, checked on the
+    trie kernel: a term nested as a prefix ('data') and as a suffix
+    ('object') of 'data object' all match once, and no term matches
+    inside a longer word ('database')."""
+
+    def counts(text):
+        return Counter(
+            t for pat in _trie_patterns_for(("data", "data object", "object"))
+            for t in pat.findall(text)
+        )
+
+    assert counts("a data object here") == {"data": 1, "data object": 1, "object": 1}
+    assert counts("database") == {}
+
+
+def test_long_term_matches():
+    """A term thousands of characters long compiles and matches: the
+    pattern builder must not recurse once per character."""
+    term = "ab" * 2500
+    pat = _trie_layer_regex([term, "ab"])
+    assert pat.findall(f"x {term} y") == [term]
+    assert pat.findall(f"x {term}c y") == []
 
 
 def test_pairs_only_equals_distinct_pairs(spark):
     """pairs_only batch-dedup path must equal distinct (code, conv_id)
     of the full mention output."""
     from fhir_owl_spark import fixtures as fx
-    from fhir_owl_spark.operators.mentions import extract_mention_pairs
 
     ont, cfg = fx.pizza_fixture()
     texts = [t["text"] for t in fx.make_transcripts(ont, cfg, n_conv=15, seed=4)]
@@ -137,5 +192,8 @@ def test_pairs_only_equals_distinct_pairs(spark):
     tdf = transcripts_df(spark, turns(*texts))
     full = extract_mentions(tdf, d, cfg)
     a = {(r["code"], r["conv_id"]) for r in full.select("code", "conv_id").distinct().collect()}
-    b = {tuple(r) for r in extract_mention_pairs(tdf, d, cfg).distinct().collect()}
+    b = {
+        tuple(r)
+        for r in extract_mentions(tdf, d, cfg, pairs_only=True).distinct().collect()
+    }
     assert a == b and a
