@@ -17,7 +17,7 @@ Layout:
   session.py              SparkSession builder with scale-tuned confs
   fixtures.py             deterministic tabular pizza/duo-style fixtures + expected triples
   operators/dictionary.py concept canonicalization (codes/display/synonyms/flags)
-  operators/hierarchy.py  transitive closure + reduction (iterative self-joins)
+  operators/hierarchy.py  closure + reduction (driver SCC kernel; iterative self-joins)
   operators/mentions.py   broadcast-dictionary mention detection (Arrow pandas UDF)
   operators/dedup.py      canonical-key triple dedup + document dedup family
   operators/skew.py       salted two-phase aggregation
@@ -25,7 +25,6 @@ Layout:
   operators/text.py       language-ID / quality / token-count / fingerprint
   plans/build_graph.py    the end-to-end pipeline
   plans/lineage.py        per-partition lineage + checkpoint/resume
-  sources/table_io.py     parquet-locally / Iceberg-in-prod seam
   sources/owl_xml.py      driver-side RDF/XML → tabular ontology (fixture-scale only)
 """
 

@@ -98,16 +98,17 @@ class PipelineConfig:
     equivalence_mode: str = "group"
 
     # ---- scale knobs -------------------------------------------------------
-    # Closure iteration cap; exceeding it aborts like the reference's cycle
-    # error (GraphUtils.java:146) — a DAG deeper than this is treated as
-    # pathological.
+    # Iteration cap of the Spark closure loops (the distributed hierarchy
+    # path above small_graph_threshold); exceeding it aborts like the
+    # reference's cycle error (GraphUtils.java:146). The driver kernel has
+    # no cap — like the reference, it detects cycles exactly at any depth.
     max_closure_iterations: int = 64
     # Salt fan-out for skewed hub aggregation (two-phase agg).
     n_salt: int = 16
-    # Ontology hierarchies at or below this many edges are closed/reduced
-    # driver-side (one bounded collect; the ontology is broadcast-class
-    # data by contract — see operators/hierarchy.py). Above it, the
-    # distributed iterative-self-join path runs.
+    # Ontology hierarchies at or below this many edges (and concepts) are
+    # reduced by the driver kernel (one bounded collect; the ontology is
+    # broadcast-class data by contract — see operators/hierarchy.py).
+    # Above it, the distributed iterative-self-join path runs.
     small_graph_threshold: int = 100_000
     # Target partitions for the transcript side; None → leave to AQE.
     transcript_partitions: int | None = None

@@ -1,29 +1,40 @@
-"""Subsumption hierarchy: iterative transitive closure + transitive reduction.
+"""Subsumption hierarchy: transitive closure + transitive reduction.
 
 The reference computes this via a reasoner's transitive superclass relation
 plus an in-memory reduction (GraphUtils.transitiveReduction,
-/root/reference/src/main/java/au/csiro/fhir/owl/util/GraphUtils.java:53-175
-— its own comment calls the core step "really doing a self-join",
-GraphUtils.java:131-133). Here both are set-oriented DataFrame programs:
+GraphUtils.java:53-175 — its own comment calls the core step "really
+doing a self-join", GraphUtils.java:131-133). ``build_hierarchy`` has two
+paths, split by ``PipelineConfig.small_graph_threshold`` (edge and concept
+rows):
 
-  closure   — semi-naive fixpoint: join only the frontier (new pairs) with
-              the base edges each round, exactly the reference's queue-based
-              BFS (GraphUtils.java:13-31) one frontier at a time. Driver
-              loops; ``localCheckpoint`` per iteration truncates lineage so
-              the plan does not grow with depth. Iterations = hierarchy
-              depth (log-ish), NOT edge count.
-  reduction — direct parents = closure MINUS (closure ∘ closure): one
-              self-join + one left-anti join, no recursion, no driver data.
+  driver      — at or below the threshold, like the reference, the whole
+                graph is reduced in driver memory by ONE kernel
+                (``_driver_hierarchy``): iterative Tarjan SCC condensation,
+                then one big-int OR pass over the condensed DAG
+                (direct = ancestors & ~indirect). Cycles are detected
+                exactly, at any depth; no iteration cap applies.
+  distributed — above it, set-oriented DataFrame programs:
+    closure   — semi-naive fixpoint: join only the frontier (new pairs) with
+                the base edges each round, exactly the reference's
+                queue-based BFS (GraphUtils.java:13-31) one frontier at a
+                time. Driver loops; ``localCheckpoint`` per iteration
+                truncates lineage so the plan does not grow with depth.
+                Iterations = hierarchy depth, capped by
+                ``max_closure_iterations``.
+    reduction — direct parents = closure MINUS (closure ∘ closure): one
+                self-join + one left-anti join, no recursion, no driver data.
 
 Scale note: ontology graphs are tiny next to transcripts (≤10^7 edges),
-but this code is written distributed anyway — the same loop handles a
-10^9-edge hierarchy: each iteration is a shuffle-partitioned hash join,
-AQE coalesces the frontier as it shrinks.
+but the distributed path handles a 10^9-edge hierarchy: each iteration is
+a shuffle-partitioned hash join, AQE coalesces the frontier as it shrinks.
 
 Cycle parity: the reference aborts on a hierarchy cycle
-(RuntimeException "Cycle found...", GraphUtils.java:146). A cycle makes a
-node its own ancestor, so we detect child==parent rows in the closure and
-abort with the same error; the iteration cap is a backstop.
+(RuntimeException "Cycle found...", GraphUtils.java:146). Both paths raise
+``HierarchyCycleError("Cycle found in hierarchy involving: <member>")``
+naming a cycle member in ``abort`` mode: the driver kernel on the first
+strongly connected component with more than one member, the loop on the
+first child==parent closure row. ``group`` mode treats each cycle as an
+equivalence set instead (see ``PipelineConfig.equivalence_mode``).
 """
 
 from __future__ import annotations
@@ -477,164 +488,138 @@ def reachable_pairs(
     )
 
 
-def _closure_reduction_driver_side(
+def _driver_hierarchy(
     edge_rows: list[tuple[str, str]],
-    max_iterations: int = 64,
-    equivalence_mode: str = "abort",
-    reroot_nodes: set[str] | None = None,
+    equivalence_mode: str,
+    reroot_nodes: set[str],
 ) -> list[tuple[str, str]]:
-    """Small-graph fast path: exact closure + reduction in driver memory.
+    """Direct-parent edges of ``edge_rows`` (child, parent), computed in
+    driver memory: Tarjan SCC condensation, then one big-int OR pass over
+    the condensed DAG.
 
     The ontology side is broadcast-class data by contract (HPO ≈ 18k
     concepts; the reference itself holds the whole graph in one JVM —
-    GraphUtils.java:72-74), so below a size threshold the driver computes
-    the hierarchy directly instead of scheduling ~4 Spark jobs per depth
-    level. Distributed and driver paths produce identical results (both
-    are tested against the fixture model AND each other).
+    GraphUtils.java:72-74), so at or below ``small_graph_threshold`` the
+    driver computes the hierarchy directly instead of scheduling ~4 Spark
+    jobs per depth level. Cycles are found exactly, at any depth: in
+    ``abort`` mode the first strongly connected component with more than
+    one member raises; in ``group`` mode its members share the component's
+    external direct parents, a child of the component gets every member as
+    a parent, and a declared member (in ``reroot_nodes``) left with no
+    parent re-roots at owl:Thing — the same strict-superclass semantics as
+    the distributed path.
     """
-    parents_of: dict[str, set[str]] = {}
+    ids: dict[str, int] = {}
+    names: list[str] = []
+    adj: list[list[int]] = []
     for c, p in edge_rows:
-        if c != p:
-            parents_of.setdefault(c, set()).add(p)
-            parents_of.setdefault(p, set())
-    # Acyclic fast path (the overwhelmingly common case): topological
-    # order + bitset closure/reduction. Set algebra runs as big-int
-    # AND/OR (C-speed words) instead of per-element Python set walks —
-    # measured ~2.5× on the 18k-concept HPO-scale anchor. Indices are
-    # assigned parents-first, so a node's ancestor mask only has LOW
-    # bits set and int sizes stay bounded by the deepest ancestor
-    # index. Falls back to the original per-node stack walk when a
-    # cycle exists (Kahn leaves nodes unprocessed) or the graph is big
-    # enough that n² worst-case mask bytes could hurt.
-    if len(parents_of) <= 50_000:
-        fast = _closure_reduction_bitset(
-            parents_of, equivalence_mode, reroot_nodes
-        )
-        if fast is not None:
-            return fast
-    anc: dict[str, set[str]] = {}
-    cyclic_nodes: set[str] = set()
-    for n, direct_parents in parents_of.items():
-        seen: set[str] = set()
-        stack = list(direct_parents)
-        depth_guard = 0
-        while stack:
-            a = stack.pop()
-            if a in seen:
-                continue
-            seen.add(a)
-            stack.extend(parents_of.get(a, ()))
-            depth_guard += 1
-            if depth_guard > max_iterations * len(parents_of):
-                break
-        if n in seen:
-            if equivalence_mode == "abort":
-                raise HierarchyCycleError(f"Cycle found in hierarchy involving: {n}")
-            cyclic_nodes.add(n)
-        anc[n] = seen
-    if equivalence_mode == "group" and cyclic_nodes:
-        # STRICT ancestors: drop mutually-reachable pairs (equivalence-set
-        # members), mirroring the reasoner's strict-superclass relation
-        # (see PipelineConfig.equivalence_mode). Members keep the set's
-        # external ancestors; their external children keep ALL members.
-        # A mutual pair requires BOTH ends to reach themselves (be on a
-        # cycle), so only cyclic nodes need the strict rebuild — on acyclic
-        # graphs (the common case) this branch never runs and the fast
-        # path stays exactly as cheap as abort mode.
-        anc = {
-            n: (
-                {a for a in ancestors if n not in anc.get(a, ()) and a != n}
-                if n in cyclic_nodes
-                else ancestors
-            )
-            for n, ancestors in anc.items()
-        }
+        if c == p:
+            continue
+        ci = ids.get(c)
+        if ci is None:
+            ci = ids[c] = len(names)
+            names.append(c)
+            adj.append([])
+        pi = ids.get(p)
+        if pi is None:
+            pi = ids[p] = len(names)
+            names.append(p)
+            adj.append([])
+        adj[ci].append(pi)
+    n_nodes = len(names)
+
+    # Iterative Tarjan over child→parent edges. A component is emitted only
+    # after every component it can reach, i.e. parents first: component k's
+    # ancestors all have indices < k, so its mask only has low bits set.
+    order = [0] * n_nodes  # DFS visit number, 0 = unvisited
+    low = [0] * n_nodes
+    comp = [-1] * n_nodes  # -1 while the node is still on the Tarjan stack
+    stack: list[int] = []
+    members: list[list[int]] = []
+    visit = 0
+    for root in range(n_nodes):
+        if order[root]:
+            continue
+        visit += 1
+        order[root] = low[root] = visit
+        stack.append(root)
+        calls = [(root, iter(adj[root]))]
+        while calls:
+            v, edges_left = calls[-1]
+            for w in edges_left:
+                if not order[w]:
+                    visit += 1
+                    order[w] = low[w] = visit
+                    stack.append(w)
+                    calls.append((w, iter(adj[w])))
+                    break
+                if comp[w] < 0 and order[w] < low[v]:
+                    low[v] = order[w]
+            else:
+                calls.pop()
+                if calls and low[v] < low[calls[-1][0]]:
+                    low[calls[-1][0]] = low[v]
+                if low[v] == order[v]:
+                    k = len(members)
+                    scc = []
+                    while True:
+                        w = stack.pop()
+                        comp[w] = k
+                        scc.append(w)
+                        if w == v:
+                            break
+                    if len(scc) > 1 and equivalence_mode == "abort":
+                        raise HierarchyCycleError(
+                            f"Cycle found in hierarchy involving: {names[v]}"
+                        )
+                    members.append(scc)
+
+    # Reduction over the condensed DAG with ONE big-int OR per edge:
+    #   anc[k]      = ⋃_d ({d} ∪ anc[d])   over external successors d
+    #   indirect[k] = ⋃_d anc[d]           (reached via ≥2 condensed edges)
+    # direct = anc & ~indirect is exactly the transitive reduction. A
+    # component's mask is dropped once its last child has read it, so
+    # only the masks of the unfinished frontier stay alive.
+    readers = [0] * len(members)
+    for m in range(n_nodes):
+        cm = comp[m]
+        for p in adj[m]:
+            if comp[p] != cm:
+                readers[comp[p]] += 1
+    masks = [0] * len(members)
+    group = equivalence_mode == "group"
     out: list[tuple[str, str]] = []
-    empty: set[str] = set()
-    for n, ancestors in anc.items():
-        # direct = ancestors not reachable through another ancestor:
-        # one C-level set.union of the ancestors' ancestor-sets beats the
-        # O(|anc|²) any()-loop ~10× on deep ontologies (HPO-scale)
-        indirect = set().union(*(anc.get(b, empty) for b in ancestors)) if ancestors else empty
-        direct = ancestors - indirect
-        out.extend((n, a) for a in direct)
-        if (
-            not direct
-            and n not in TOP_ENTITIES
-            and equivalence_mode == "group"
-            and (reroot_nodes is None or n in reroot_nodes)
-        ):
-            # an equivalence set whose only ancestors were in-set lost them
-            # all in the strict filter — re-root at Thing (reasoner parity).
-            # reroot_nodes restricts this to DECLARED concepts so dangling
-            # edge endpoints (parents from unmapped imports) don't get
-            # invented Thing edges — matching the distributed path, whose
-            # orphan re-root joins against the concepts table
-            out.append((n, OWL_THING))
-    return out
-
-
-def _closure_reduction_bitset(
-    parents_of: dict[str, set[str]],
-    equivalence_mode: str,
-    reroot_nodes: set[str] | None,
-) -> list[tuple[str, str]] | None:
-    """Exact closure + reduction over an ACYCLIC parent graph using
-    int bitmasks (see the call site for rationale). Returns None when
-    the graph has a cycle — the caller's stack-walk path owns cycle
-    semantics (abort / equivalence grouping)."""
-    from collections import deque
-
-    n_nodes = len(parents_of)
-    children_of: dict[str, list[str]] = {n: [] for n in parents_of}
-    indeg: dict[str, int] = {}
-    for n, ps in parents_of.items():
-        indeg[n] = len(ps)
-        for p in ps:
-            children_of[p].append(n)
-    queue = deque(n for n, d in indeg.items() if d == 0)
-    order: list[str] = []
-    while queue:
-        n = queue.popleft()
-        order.append(n)
-        for ch in children_of[n]:
-            indeg[ch] -= 1
-            if indeg[ch] == 0:
-                queue.append(ch)
-    if len(order) < n_nodes:
-        return None  # cycle — caller's path handles it
-
-    # Ancestor masks memoized along the topo order with ONE big-int OR
-    # per asserted edge — O(E) word-ops total, never O(n²):
-    #   anc[n]      = ⋃_p ({p} ∪ anc[p])   over asserted parents p
-    #   indirect[n] = ⋃_p anc[p]           (ancestors via ≥2-edge paths;
-    #                 ind(p) ⊆ anc(p) collapses the recursion)
-    # direct = anc & ~indirect is exactly the transitive reduction.
-    index = {n: i for i, n in enumerate(order)}
-    anc_mask: list[int] = [0] * n_nodes
-    out: list[tuple[str, str]] = []
-    for n in order:
-        am = 0
-        im = 0
-        for p in parents_of[n]:
-            pam = anc_mask[index[p]]
-            am |= pam | (1 << index[p])
-            im |= pam
-        anc_mask[index[n]] = am
+    for k, scc in enumerate(members):
+        am = im = 0
+        for m in scc:
+            for p in adj[m]:
+                d = comp[p]
+                if d == k:
+                    continue
+                dm = masks[d]
+                am |= dm | (1 << d)
+                im |= dm
+                readers[d] -= 1
+                if not readers[d]:
+                    masks[d] = 0
+        if readers[k]:
+            masks[k] = am
         direct = am & ~im
-        emitted = False
+        parents: list[str] = []
         while direct:
-            low = direct & -direct
-            out.append((n, order[low.bit_length() - 1]))
-            emitted = True
-            direct ^= low
-        if (
-            not emitted
-            and n not in TOP_ENTITIES
-            and equivalence_mode == "group"
-            and (reroot_nodes is None or n in reroot_nodes)
-        ):
-            out.append((n, OWL_THING))
+            bit = direct & -direct
+            parents.extend(names[w] for w in members[bit.bit_length() - 1])
+            direct ^= bit
+        for m in scc:
+            n = names[m]
+            out.extend((n, a) for a in parents)
+            if (
+                group
+                and not parents
+                and n not in TOP_ENTITIES
+                and n in reroot_nodes
+            ):
+                out.append((n, OWL_THING))
     return out
 
 
@@ -680,7 +665,7 @@ def build_hierarchy(
     mode = getattr(cfg, "equivalence_mode", "abort")
     th = cfg.small_graph_threshold
 
-    # Small-graph fast path: collect the RAW bounded inputs and assemble
+    # Driver path: collect the RAW bounded inputs and assemble
     # dropped/nodes/parentless in Python. The ontology side is
     # broadcast-class data by contract (the reference holds the whole
     # graph in one JVM — GraphUtils.java:72-74); two bounded collects on
@@ -709,12 +694,7 @@ def build_hierarchy(
                 for n in node_set
                 if n not in TOP_ENTITIES and n not in children
             ]
-            reduced = _closure_reduction_driver_side(
-                completed_rows,
-                cfg.max_closure_iterations,
-                equivalence_mode=mode,
-                reroot_nodes=node_set,
-            )
+            reduced = _driver_hierarchy(completed_rows, mode, node_set)
             from ..schemas import ONTOLOGY_EDGES
 
             if reduced:
@@ -736,7 +716,7 @@ def build_hierarchy(
 
     nodes = concepts.join(dropped, "iri", "left_anti").select("iri")
 
-    # no .distinct() here: the driver fast path dedups in Python sets and
+    # no .distinct() here: the driver kernel ignores duplicate edges and
     # the distributed path's transitive_closure dedups its base — an extra
     # shuffle would only add latency. (Duplicate rows count toward the
     # small_graph_threshold limit probe — conservative: at worst a graph

@@ -174,7 +174,7 @@ def build_graph_resumable(
     # of a single _chunk directory (filtering the raw input per chunk
     # would re-scan everything n_chunks times). The staging dir is also
     # the pinned-input checkpoint: a resumed run reads the identical bytes
-    # (the Iceberg analog is a snapshot-id-pinned read, table_io.py).
+    # (the Iceberg analog is a snapshot-id-pinned read).
     todo = [c for c in range(n_chunks) if c not in done]
     staging = f"{output_dir}/_staged_input"
     if todo and not Path(f"{staging}/_SUCCESS").exists():

@@ -1,1 +1,1 @@
-from . import owl_xml, table_io  # noqa: F401
+from . import owl_xml  # noqa: F401

@@ -62,6 +62,9 @@ _STRING_ESCAPES = {
 }
 
 
+_HEX_DIGITS = "0123456789abcdefABCDEF"
+
+
 def _unescape(raw: str) -> str:
     out = []
     i = 0
@@ -73,13 +76,13 @@ def _unescape(raw: str) -> str:
                 out.append(_STRING_ESCAPES[nxt])
                 i += 2
                 continue
-            if nxt == "u" and i + 6 <= len(raw):
-                out.append(chr(int(raw[i + 2:i + 6], 16)))
-                i += 6
-                continue
-            if nxt == "U" and i + 10 <= len(raw):
-                out.append(chr(int(raw[i + 2:i + 10], 16)))
-                i += 10
+            width = {"u": 4, "U": 8}.get(nxt, 0)
+            if width and i + 2 + width <= len(raw):
+                code = raw[i + 2:i + 2 + width]
+                if any(ch not in _HEX_DIGITS for ch in code) or int(code, 16) > 0x10FFFF:
+                    raise TurtleSyntaxError(f"invalid escape \\{nxt}{code}")
+                out.append(chr(int(code, 16)))
+                i += 2 + width
                 continue
         out.append(c)
         i += 1

@@ -139,6 +139,26 @@ class TestTurtleReader:
         assert ("Child", "child label",
                 "http://www.w3.org/2000/01/rdf-schema#label") in syns
 
+    def test_unicode_escapes(self, tmp_path):
+        """\\u / \\U escapes decode; a malformed one is a TurtleSyntaxError,
+        not a bare ValueError from int()/chr()."""
+        from fhir_owl_spark.sources.turtle import TurtleSyntaxError
+
+        head = (
+            "@prefix owl: <http://www.w3.org/2002/07/owl#> .\n"
+            "@prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .\n"
+            "<http://ex/A> a owl:Class .\n"
+        )
+        f = tmp_path / "ok.ttl"
+        f.write_text(head + '<http://ex/A> rdfs:label "caf\\u00e9 \\U0001F600" .\n')
+        syns = {s["synonym"] for s in parse_turtle(str(f)).tables.synonyms}
+        assert "caf\u00e9 \U0001F600" in syns
+        for bad in ("\\u|\\Kg", "\\uZZZZ", "\\U00110000"):
+            f = tmp_path / "bad.ttl"
+            f.write_text(head + f'<http://ex/A> rdfs:label "x{bad}y" .\n')
+            with pytest.raises(TurtleSyntaxError, match="invalid escape"):
+                parse_turtle(str(f))
+
     def test_dispatcher(self, tmp_path):
         f = tmp_path / "d.ttl"
         f.write_text(TTL)

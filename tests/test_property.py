@@ -28,7 +28,9 @@ SYN_POOL = ["syn one", "syn two", "Gamma", "wiki", "iota", "kappa mu"]
 
 
 @st.composite
-def ontologies(draw):
+def ontologies(draw, cyclic=False):
+    """Random ontology; ``cyclic=True`` also draws edges to the node itself
+    and to later nodes, so cycles (equivalence sets) of any length occur."""
     n = draw(st.integers(min_value=2, max_value=10))
     o = fx.Ontology()
     o.concept(OWL_THING, "main", label="Thing")
@@ -51,6 +53,11 @@ def ontologies(draw):
         for prop in ("label", "hasExactSynonym", "altLabel"):
             for _ in range(draw(st.integers(0, 2))):
                 o.synonym(iri, draw(st.sampled_from(SYN_POOL)), prop=prop)
+    if cyclic:
+        for i, iri in enumerate(iris):
+            for target in iris[i:]:
+                if draw(st.integers(0, 5)) == 0:
+                    o.edge(iri, target)
     return o
 
 
@@ -115,6 +122,109 @@ def test_cycle_aborts_both_paths(spark):
         build_graph(spark, concepts, edges, synonyms, tdf, cfg).count()
     with pytest.raises((HierarchyCycleError, RuntimeError)):
         fx.model_build_graph(ont, [], cfg)
+
+
+def _triples_or_cycle(spark, ont, cfg):
+    """build_graph's triple set, or HierarchyCycleError if it raised."""
+    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
+    tdf = fx.transcripts_df(spark, [])
+    try:
+        return {
+            (r["subj"], r["pred"], r["obj"])
+            for r in build_graph(spark, concepts, edges, synonyms, tdf, cfg).collect()
+        }
+    except HierarchyCycleError as e:
+        return e
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(ont=ontologies(cyclic=True), cfg=configs())
+def test_cyclic_group_mode_paths_equal_model(spark, ont, cfg):
+    """group mode on random CYCLIC ontologies: the driver kernel, the
+    distributed path and the model give the same triples."""
+    cfg = dataclasses.replace(cfg, equivalence_mode="group")
+    expected = fx.model_build_graph(ont, [], cfg)
+    assert _triples_or_cycle(spark, ont, cfg) == expected
+    dist = dataclasses.replace(cfg, small_graph_threshold=0)
+    assert _triples_or_cycle(spark, ont, dist) == expected
+
+
+@settings(
+    max_examples=6,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(ont=ontologies(cyclic=True), cfg=configs())
+def test_cyclic_abort_mode_paths_raise_with_model(spark, ont, cfg):
+    """abort mode on random CYCLIC ontologies: both engine paths raise
+    HierarchyCycleError exactly when the model raises, and equal the model
+    otherwise."""
+    cfg = dataclasses.replace(cfg, equivalence_mode="abort")
+    try:
+        expected = fx.model_build_graph(ont, [], cfg)
+    except RuntimeError:
+        expected = None
+    for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
+        got = _triples_or_cycle(spark, ont, c)
+        if expected is None:
+            assert isinstance(got, HierarchyCycleError)
+        else:
+            assert got == expected
+
+
+def test_cycle_message_names_member_both_paths(spark):
+    """abort mode names a CYCLE MEMBER on both paths — never the child
+    below the cycle or the parent above it."""
+    from fhir_owl_spark.operators.hierarchy import build_hierarchy
+
+    ont = fx.Ontology()
+    ont.concept(OWL_THING, "x", label="Thing")
+    cycle = [f"{NS}A", f"{NS}B", f"{NS}C"]
+    for iri in cycle + [f"{NS}Child", f"{NS}Parent"]:
+        ont.concept(iri, "x", label=iri.split("#")[1])
+    for c, p in zip(cycle, cycle[1:] + cycle[:1]):
+        ont.edge(c, p)
+    ont.edge(f"{NS}Child", cycle[0])
+    ont.edge(cycle[1], f"{NS}Parent")
+    concepts, edges, _ = fx.ontology_dfs(spark, ont)
+    cfg = PipelineConfig(equivalence_mode="abort")
+    prefix = "Cycle found in hierarchy involving: "
+    for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
+        with pytest.raises(HierarchyCycleError, match=prefix) as err:
+            build_hierarchy(concepts, edges, c).collect()
+        assert str(err.value).split(prefix, 1)[1] in cycle
+
+
+def test_deep_chain_driver_path_equals_model(spark):
+    """A 100-level chain (deeper than max_closure_iterations) through the
+    driver kernel equals the model: like the reference, the driver path
+    has no depth cap."""
+    from fhir_owl_spark.operators.hierarchy import build_hierarchy
+
+    ont = fx.Ontology()
+    ont.concept(OWL_THING, "x", label="Thing")
+    chain = [f"{NS}L{i:03d}" for i in range(100)]
+    for i, iri in enumerate(chain):
+        ont.concept(iri, "x", label=f"level {i}")
+        if i:
+            ont.edge(iri, chain[i - 1])
+        if i >= 10 and i % 10 == 0:
+            ont.edge(iri, chain[i - 10])  # redundant: reduced away
+    cfg = PipelineConfig()
+    assert cfg.max_closure_iterations < len(chain)
+    concepts, edges, _ = fx.ontology_dfs(spark, ont)
+    got = {
+        (r["child_iri"], r["parent_iri"])
+        for r in build_hierarchy(concepts, edges, cfg).collect()
+    }
+    expected = {(c, p) for c, ps in fx.model_hierarchy(ont, cfg).items() for p in ps}
+    assert got == expected
+    assert (chain[0], OWL_THING) in got and (chain[99], chain[98]) in got
+    assert len(got) == len(chain)
 
 
 def test_equivalence_group_mode_both_paths(spark):
