@@ -12,7 +12,7 @@ preferred term property = rdfs:label; synonym properties = [rdfs:label].
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -103,17 +103,11 @@ class PipelineConfig:
     # reference's cycle error (GraphUtils.java:146). The driver kernel has
     # no cap — like the reference, it detects cycles exactly at any depth.
     max_closure_iterations: int = 64
-    # Salt fan-out for skewed hub aggregation (two-phase agg).
-    n_salt: int = 16
     # Ontology hierarchies at or below this many edges (and concepts) are
     # reduced by the driver kernel (one bounded collect; the ontology is
     # broadcast-class data by contract — see operators/hierarchy.py).
     # Above it, the distributed iterative-self-join path runs.
     small_graph_threshold: int = 100_000
-    # Target partitions for the transcript side; None → leave to AQE.
-    transcript_partitions: int | None = None
-
-    extra: dict = field(default_factory=dict, compare=False, hash=False)
 
     def __post_init__(self):
         # eager enum validation, mirroring the reference's argument setters

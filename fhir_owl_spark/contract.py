@@ -26,7 +26,7 @@ from . import fixtures as fx
 from .config import PipelineConfig
 from .operators import dedup, mentions, similarity, skew, text
 from .operators.hierarchy import transitive_closure, transitive_reduction
-from .plans.build_graph import build_graph
+from .plans.build_graph import build_graph, mention_triples
 from .schemas import TOP_ENTITIES
 
 US = "\x1f"  # unit separator for hash keys
@@ -275,11 +275,7 @@ def q_kg_mentions(spark, sf_dir) -> DataFrame:
     dictionary = build_concept_dictionary(concepts, synonyms, cfg)
     transcripts = fx.documents_as_transcripts(spark, sf_dir)
     m = mentions.extract_mentions(transcripts, dictionary, cfg)
-    return m.select(
-        F.col("code").alias("subj"),
-        F.lit("mentions-in").alias("pred"),
-        F.col("conv_id").alias("obj"),
-    ).distinct()
+    return mention_triples(m).select("subj", "pred", "obj").distinct()
 
 
 def q_kg_mention_counts(spark, sf_dir) -> DataFrame:

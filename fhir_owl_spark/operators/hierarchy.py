@@ -662,7 +662,7 @@ def build_hierarchy(
     has Thing among its superclasses (FhirOwlService.java:532-533) — this
     is what terminates every reference concept chain at Thing.
     """
-    mode = getattr(cfg, "equivalence_mode", "abort")
+    mode = cfg.equivalence_mode
     th = cfg.small_graph_threshold
 
     # Driver path: collect the RAW bounded inputs and assemble

@@ -5,6 +5,15 @@ Reference lifecycle being re-expressed (FhirOwlService.createCodeSystem,
 ontology → dictionary → hierarchy (closure + reduction) → per-concept rows
 → serialized output, PLUS the transcript graft (mention triples).
 
+Every entry point — ``build_graph`` here, ``build_graph_resumable``
+(plans/lineage.py), ``refresh_graph`` (plans/refresh.py) and
+``export_codesystem`` (plans/export.py) — shares one ontology stage:
+``ontology_stage`` derives has_imports once and checkpoints the concept
+dictionary, ``isa_rows`` holds the one parent rule (parent codes, Nothing
+and deprecated parents dropped) and ``mention_triples`` the one
+mentions-in projection. Each caller runs ``build_hierarchy`` itself, so a
+resume whose ontology chunk is committed does no hierarchy work.
+
 Physical shape at 10^12-turn scale:
   * ontology stages touch only the small side (broadcast-class data);
   * mention extraction is map-only over transcripts — no shuffle;
@@ -17,6 +26,8 @@ Physical shape at 10^12-turn scale:
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -60,6 +71,77 @@ def triples_with_key(triples: DataFrame) -> DataFrame:
     return keyed.dropDuplicates()
 
 
+def ontology_stage(
+    concepts: DataFrame,
+    edges: DataFrame,
+    synonyms: DataFrame,
+    cfg: PipelineConfig,
+) -> tuple[PipelineConfig, DataFrame, DataFrame, DataFrame]:
+    """The ontology stage every entry point shares → (cfg, concepts,
+    edges, dictionary).
+
+    has_imports is derived ONCE into the returned cfg: the dictionary
+    and the is-a parent codes would otherwise each run their own probe
+    job for the same answer (derive_has_imports returns cfg.has_imports
+    verbatim when it is set). The dictionary is consumed several times
+    (triples, the mention broadcast, export, the refresh diff) and is
+    small by design — materialized once, eagerly. Callers must use the
+    returned concepts and edges, and build the hierarchy themselves."""
+    if cfg.has_imports is None:
+        cfg = dataclasses.replace(
+            cfg, has_imports=derive_has_imports(concepts, cfg)
+        )
+    dictionary = build_concept_dictionary(concepts, synonyms, cfg)
+    return cfg, concepts, edges, dictionary.localCheckpoint(eager=True)
+
+
+def isa_rows(
+    dictionary: DataFrame,
+    direct: DataFrame,
+    concepts: DataFrame,
+    cfg: PipelineConfig,
+) -> DataFrame:
+    """Direct parents of emitted non-root concepts → (child_iri, subj,
+    parent_code). Deprecated parents are dropped WITHOUT relinking and
+    Nothing parents dropped (FhirOwlService.java:620-647); parents keep
+    the code-annotation-free derivation (parent_code_col), and parents
+    outside the concepts table (undeclared) fall back to their IRI."""
+    has_imports = derive_has_imports(concepts, cfg)
+    parent_meta = concepts.select(
+        F.col("iri").alias("parent_iri"),
+        parent_code_col(cfg, has_imports, "iri").alias("parent_code"),
+        F.coalesce("deprecated", F.lit(False)).alias("parent_deprecated"),
+    )
+    isa = (
+        dictionary.filter(~F.col("root"))
+        .select(F.col("iri").alias("child_iri"), F.col("code").alias("subj"))
+        # both sides are ontology-bounded; without the hint Spark has no
+        # size stats for the checkpointed/driver-built inputs and falls
+        # back to SortMergeJoin — two shuffles + sorts for nothing
+        .join(F.broadcast(direct), "child_iri")
+        .filter(F.col("parent_iri") != OWL_NOTHING)
+        .join(F.broadcast(parent_meta), "parent_iri", "left")
+    )
+    if not cfg.include_deprecated:
+        isa = isa.filter(~F.coalesce("parent_deprecated", F.lit(False)))
+    return isa.select(
+        "child_iri",
+        "subj",
+        F.coalesce("parent_code", F.col("parent_iri")).alias("parent_code"),
+    )
+
+
+def mention_triples(pairs: DataFrame) -> DataFrame:
+    """(code, conv_id) mention pairs → mentions-in triples."""
+    return pairs.select(
+        F.col("code").alias("subj"),
+        F.lit("mentions-in").alias("pred"),
+        F.col("conv_id").alias("obj"),
+        F.lit("conv").alias("obj_type"),
+        F.col("conv_id").alias("conv_id"),
+    )
+
+
 def concept_triples(
     dictionary: DataFrame,
     direct_parents: DataFrame,
@@ -69,9 +151,8 @@ def concept_triples(
     """Dictionary + reduced hierarchy → ontology-side triples.
 
     Emits per concept: has-display, imported, deprecated, root,
-    synonym-of*, and is-a* for non-root concepts (deprecated parents
-    dropped WITHOUT relinking, Nothing parents dropped —
-    FhirOwlService.java:620-631).
+    synonym-of*, and is-a* for non-root concepts (the parent rule is
+    ``isa_rows``).
     """
     d = dictionary
 
@@ -99,39 +180,14 @@ def concept_triples(
             F.lit("string").alias("obj_type"),
             F.lit(None).cast("string").alias("conv_id"),
         ),
-    ]
-
-    # is-a: children are emitted non-root concepts; parents keep the
-    # code-annotation-free derivation (parent_code_col).
-    has_imports = derive_has_imports(concepts, cfg)
-    parent_meta = concepts.select(
-        F.col("iri").alias("parent_iri"),
-        parent_code_col(cfg, has_imports, "iri").alias("parent_code"),
-        F.coalesce("deprecated", F.lit(False)).alias("parent_deprecated"),
-    )
-    isa = (
-        d.filter(~F.col("root"))
-        .select(F.col("iri").alias("child_iri"), F.col("code").alias("subj"))
-        # both sides are ontology-bounded; without the hint Spark has no
-        # size stats for the checkpointed/driver-built inputs and falls
-        # back to SortMergeJoin — two shuffles + sorts for nothing
-        .join(F.broadcast(direct_parents), "child_iri")
-        .filter(F.col("parent_iri") != OWL_NOTHING)
-        .join(F.broadcast(parent_meta), "parent_iri", "left")
-    )
-    if not cfg.include_deprecated:
-        isa = isa.filter(~F.coalesce("parent_deprecated", F.lit(False)))
-    parts.append(
-        isa.select(
+        isa_rows(d, direct_parents, concepts, cfg).select(
             "subj",
             F.lit("is-a").alias("pred"),
-            # parents outside the concepts table (undeclared) fall back to
-            # IRI-derived local code semantics
-            F.coalesce("parent_code", F.col("parent_iri")).alias("obj"),
+            F.col("parent_code").alias("obj"),
             F.lit("code").alias("obj_type"),
             F.lit(None).cast("string").alias("conv_id"),
-        )
-    )
+        ),
+    ]
 
     out = parts[0]
     for p in parts[1:]:
@@ -142,18 +198,23 @@ def concept_triples(
 def materialize_ontology_inputs(
     concepts: DataFrame, edges: DataFrame, synonyms: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Materialize the three ontology tables in ONE job.
+    """Materialize the three ontology tables in ONE job (three lazy
+    localCheckpoints + one union-count action; every frame keeps its
+    exact input schema).
 
-    The ontology side is broadcast-class by contract (≤10^7 rows) but
-    feeds MANY small jobs downstream (dictionary aggregation, the
-    hierarchy's bounded probes, parent metadata, linkable-term collect).
-    Re-evaluating the caller's source plan for each of those jobs is
-    the dominant fixed cost of the whole ontology stage — measured
-    0.4–1.0 s PER JOB on driver-built inputs (each task round-trips the
-    pickled rows through a Python worker), ~0.05–0.2 s once cached.
-    Three LAZY localCheckpoints + one union-count action materialize
-    all three in a single job while every frame keeps its exact input
-    schema (guide §5: cache what is reused; §2.4: fewer jobs)."""
+    No pipeline calls this: ``ontology_stage`` leaves its inputs as the
+    caller built them, because the extra job did not pay for itself.
+    Spark jobs per call, stage without → with this call (Spark 4, local
+    mode; counts repeat exactly): ``perfbench`` corpus workload, seed 21,
+    ``build`` op 23 → 29 and ``export`` op 7 → 13 (export median
+    0.67 → 0.99 s on a shared 4-vCPU VM, +55%); on pizza fixture frames,
+    ``build_graph(...).count()`` 9 → 17, a one-chunk
+    ``build_graph_resumable`` 23 → 31 and ``export_codesystem`` 7 → 15.
+    Fixture frames are Arrow-backed local
+    relations: Spark answers the stage's bounded collects on them without
+    launching a job, and the checkpoint turns those collects into jobs.
+    Kept only for the benchmark's per-layer probes (perfbench/probes.py),
+    which time the ontology frames as their own layer."""
     concepts = concepts.localCheckpoint(eager=False)
     edges = edges.localCheckpoint(eager=False)
     synonyms = synonyms.localCheckpoint(eager=False)
@@ -221,46 +282,20 @@ def build_graph(
                 f"turn_idx={bad[0]['turn_idx']}"
             )
 
-    concepts, edges, synonyms = materialize_ontology_inputs(
-        concepts, edges, synonyms
+    cfg, concepts, edges, dictionary = ontology_stage(
+        concepts, edges, synonyms, cfg
     )
-    if cfg.has_imports is None:
-        # derive once here: both build_concept_dictionary and
-        # concept_triples would otherwise run their own probe job for
-        # the same answer (derive_has_imports returns cfg.has_imports
-        # verbatim when it is set, so this is semantics-preserving)
-        import dataclasses
-
-        cfg = dataclasses.replace(
-            cfg, has_imports=derive_has_imports(concepts, cfg)
-        )
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg)
-    # The dictionary is consumed twice (triples + mention broadcast) and is
-    # small by design — materialize once. LAZY: the checkpoint's blocks are
-    # computed inside the first consumer's job (the linkable-term collect
-    # in extract_mentions) instead of a dedicated eager job.
-    dictionary = dictionary.localCheckpoint(eager=False)
-
     direct = build_hierarchy(concepts, edges, cfg)
     onto = concept_triples(dictionary, direct, concepts, cfg)
 
-    if cfg.transcript_partitions:
-        transcripts = transcripts.repartition(cfg.transcript_partitions)
     # pairs_only: batch-local dedup inside the UDF (hub terms repeat in
     # most turns of a conversation) — global dedup still happens in the
     # final key-hash dropDuplicates, one shuffle, map-side combined.
     pairs = extract_mentions(transcripts, dictionary, cfg, pairs_only=True)
     if related_npmi is not None:
         pairs = pairs.localCheckpoint(eager=True)
-    mention_triples = pairs.select(
-        F.col("code").alias("subj"),
-        F.lit("mentions-in").alias("pred"),
-        F.col("conv_id").alias("obj"),
-        F.lit("conv").alias("obj_type"),
-        F.col("conv_id").alias("conv_id"),
-    )
 
-    all_triples = onto.unionByName(mention_triples)
+    all_triples = onto.unionByName(mention_triples(pairs))
     if related_npmi is not None:
         from ..operators.graph import pmi_edges
 

@@ -2,7 +2,9 @@
 §2.1): the reference's final output is a CodeSystem JSON document
 (FhirOwlService.java:135-140 via HAPI); this export rebuilds that shape
 from the engine's dictionary + hierarchy so a reference user can diff the
-two converters concept-by-concept.
+two converters concept-by-concept. The dictionary and the parent rows
+come from the ontology stage build_graph uses (plans/build_graph.py:
+ontology_stage, isa_rows), so the export and the triples cannot disagree.
 
 Driver-side by design: the concept list is ontology-scale (broadcast
 class), never transcript-scale. The designation `use` coding mirrors the
@@ -15,16 +17,11 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
-from ..operators.dictionary import (
-    build_concept_dictionary,
-    derive_has_imports,
-    parent_code_col,
-)
 from ..operators.hierarchy import build_hierarchy
-from ..schemas import OWL_NOTHING
+from .build_graph import isa_rows, ontology_stage
 
 SYNONYM_USE = {
     "system": "http://snomed.info/sct",
@@ -43,31 +40,18 @@ def export_codesystem(
 ) -> dict:
     """→ CodeSystem-shaped dict (resourceType/url/version/…/count/concept[])."""
     cfg = cfg or PipelineConfig()
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint(
-        eager=True
+    cfg, concepts, edges, dictionary = ontology_stage(
+        concepts, edges, synonyms, cfg
     )
     direct = build_hierarchy(concepts, edges, cfg)
-
-    has_imports = derive_has_imports(concepts, cfg)
-    parent_meta = concepts.select(
-        F.col("iri").alias("parent_iri"),
-        parent_code_col(cfg, has_imports, "iri").alias("parent_code"),
-        F.coalesce("deprecated", F.lit(False)).alias("parent_deprecated"),
-    )
-    isa = (
-        dictionary.filter(~F.col("root"))
-        .select(F.col("iri").alias("child_iri"))
-        .join(F.broadcast(direct), "child_iri")
-        .filter(F.col("parent_iri") != OWL_NOTHING)
-        .join(F.broadcast(parent_meta), "parent_iri", "left")
-    )
-    if not cfg.include_deprecated:
-        isa = isa.filter(~F.coalesce("parent_deprecated", F.lit(False)))
+    # the same parent rows build_graph emits as is-a triples
     parents_of: dict[str, list[str]] = {}
-    for r in isa.select(
-        "child_iri", F.coalesce("parent_code", F.col("parent_iri")).alias("pc")
-    ).collect():
-        parents_of.setdefault(r["child_iri"], []).append(r["pc"])
+    for r in (
+        isa_rows(dictionary, direct, concepts, cfg)
+        .select("child_iri", "parent_code")
+        .collect()
+    ):
+        parents_of.setdefault(r["child_iri"], []).append(r["parent_code"])
 
     concept_list = []
     for r in sorted(dictionary.collect(), key=lambda x: x["code"]):

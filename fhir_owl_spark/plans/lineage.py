@@ -16,7 +16,9 @@ snapshot id for byte-identical resume reads):
   * Each completed chunk appends one lineage row
     (run_id, partition_id, input_rows, output_triples, timestamps,
     checkpoint_id) AFTER its data directory is fully written — the
-    lineage row is the commit record.
+    lineage row is the commit record. ``write_committed_chunk`` is the
+    one commit function: the resumable loop and the CLI's --refresh-from
+    path both commit through it.
   * Resume: chunks present in lineage are skipped; data directories of
     non-committed chunks are deleted and rewritten (write-ahead dirs,
     commit via lineage) — exactly-once output regardless of where the
@@ -34,10 +36,14 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..operators.dictionary import build_concept_dictionary
 from ..operators.hierarchy import build_hierarchy
 from ..operators.mentions import extract_mentions
-from ..plans.build_graph import concept_triples, triples_with_key
+from ..plans.build_graph import (
+    concept_triples,
+    mention_triples,
+    ontology_stage,
+    triples_with_key,
+)
 from ..schemas import LINEAGE, TRIPLES
 
 ONTOLOGY_CHUNK = -1
@@ -86,16 +92,20 @@ def write_committed_chunk(
     input_rows: int,
     run_id: str,
 ) -> int:
-    """Public single-chunk commit: the write_chunk protocol (discard
-    leftovers → pred-partitioned write → schema-read count → lineage
-    append) for callers outside the resumable loop (the CLI's
-    --refresh-from path). Returns the committed row count."""
-    import shutil as _shutil
-
+    """Commit one chunk: discard leftovers → pred-partitioned write →
+    schema-read count → lineage append. The one commit path of the
+    resumable loop and of the CLI's --refresh-from. Returns the
+    committed row count."""
     started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     chunk_dir = f"{output_dir}/triples/chunk={chunk}"
-    _shutil.rmtree(chunk_dir, ignore_errors=True)
+    # non-committed leftovers from a dead run are discarded
+    shutil.rmtree(chunk_dir, ignore_errors=True)
+    # pred partitioning (north star: triples partitioned by pred) —
+    # layout: triples/chunk=N/pred=X/part-*.parquet; readers prune
+    # whole predicate subtrees (e.g. only mentions-in) at the scan.
     df.write.partitionBy("pred").parquet(chunk_dir)
+    # explicit schema: an empty chunk writes no part files and schema
+    # inference would fail (TRIPLES includes the pred partition column)
     n_out = spark.read.schema(TRIPLES).parquet(chunk_dir).count()
     _commit_lineage(
         spark, output_dir, run_id, chunk, input_rows, n_out, started,
@@ -125,7 +135,6 @@ def build_graph_resumable(
     cfg = cfg or PipelineConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     done = completed_chunks(spark, output_dir)
-    triples_dir = f"{output_dir}/triples"
 
     # The chunk keying (pmod(hash, n_chunks)) is part of the output's
     # identity: resuming with a different n_chunks would silently skip or
@@ -143,31 +152,15 @@ def build_graph_resumable(
         meta_path.parent.mkdir(parents=True, exist_ok=True)
         meta_path.write_text(json.dumps({"n_chunks": n_chunks}))
 
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint(
-        eager=True
+    cfg, concepts, edges, dictionary = ontology_stage(
+        concepts, edges, synonyms, cfg
     )
-
-    def write_chunk(chunk: int, df: DataFrame, input_rows: int) -> None:
-        started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        chunk_dir = f"{triples_dir}/chunk={chunk}"
-        # non-committed leftovers from a dead run are discarded
-        shutil.rmtree(chunk_dir, ignore_errors=True)
-        ckpt = f"{run_id}:{chunk}"
-        # pred partitioning (north star: triples partitioned by pred) —
-        # layout: triples/chunk=N/pred=X/part-*.parquet; readers prune
-        # whole predicate subtrees (e.g. only mentions-in) at the scan.
-        df.write.partitionBy("pred").parquet(chunk_dir)
-        # explicit schema: an empty chunk writes no part files and schema
-        # inference would fail (TRIPLES includes the pred partition column)
-        n_out = spark.read.schema(TRIPLES).parquet(chunk_dir).count()
-        _commit_lineage(
-            spark, output_dir, run_id, chunk, input_rows, n_out, started, ckpt
-        )
-
     if ONTOLOGY_CHUNK not in done:
         direct = build_hierarchy(concepts, edges, cfg)
         onto = triples_with_key(concept_triples(dictionary, direct, concepts, cfg))
-        write_chunk(ONTOLOGY_CHUNK, onto, concepts.count())
+        write_committed_chunk(
+            spark, output_dir, ONTOLOGY_CHUNK, onto, concepts.count(), run_id
+        )
 
     # Stage the input ONCE, partitioned by the chunk key: one scan of the
     # transcripts total, and every per-chunk read below is a pruned scan
@@ -196,15 +189,11 @@ def build_graph_resumable(
         )
         n_in = part.count()
         # pairs_only: batch-local dedup inside the UDF (same as build_graph)
-        pairs_df = extract_mentions(part, dictionary, cfg, pairs_only=True)
-        mention_triples = pairs_df.select(
-            F.col("code").alias("subj"),
-            F.lit("mentions-in").alias("pred"),
-            F.col("conv_id").alias("obj"),
-            F.lit("conv").alias("obj_type"),
-            F.col("conv_id").alias("conv_id"),
+        pairs = extract_mentions(part, dictionary, cfg, pairs_only=True)
+        write_committed_chunk(
+            spark, output_dir, chunk, triples_with_key(mention_triples(pairs)),
+            n_in, run_id,
         )
-        write_chunk(chunk, triples_with_key(mention_triples), n_in)
         written += 1
         if fail_after_chunks is not None and written >= fail_after_chunks:
             raise RuntimeError(f"simulated failure after {written} chunks")

@@ -36,12 +36,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..operators.dictionary import build_concept_dictionary
 from ..operators.hierarchy import build_hierarchy
 from ..operators.mentions import extract_mentions
 from .build_graph import (
     concept_triples,
-    materialize_ontology_inputs,
+    mention_triples,
+    ontology_stage,
     triple_key_col,
     triples_with_key,
 )
@@ -139,14 +139,9 @@ def refresh_graph(
             "recipe plans/build_graph.py documents for the chunked path"
         )
 
-    concepts, edges, synonyms = materialize_ontology_inputs(
-        concepts, edges, synonyms
+    cfg, concepts, edges, dictionary = ontology_stage(
+        concepts, edges, synonyms, cfg
     )
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg)
-    # eager here (unlike build_graph): the very next consumer is the
-    # affected_codes checkpoint whose job would otherwise recompute the
-    # dictionary shuffle on both sides of its full-outer join
-    dictionary = dictionary.localCheckpoint(eager=True)
     direct = build_hierarchy(concepts, edges, cfg)
     onto = concept_triples(dictionary, direct, concepts, cfg)
 
@@ -177,14 +172,8 @@ def refresh_graph(
         ).select(*TRIPLE_COLS)
     else:
         delta_dict = dictionary.join(F.broadcast(affected), "code", "semi")
-        new_mentions = extract_mentions(
-            transcripts, delta_dict, cfg, pairs_only=True
-        ).select(
-            F.col("code").alias("subj"),
-            F.lit("mentions-in").alias("pred"),
-            F.col("conv_id").alias("obj"),
-            F.lit("conv").alias("obj_type"),
-            F.col("conv_id").alias("conv_id"),
+        new_mentions = mention_triples(
+            extract_mentions(transcripts, delta_dict, cfg, pairs_only=True)
         )
 
     # The key-hash DEDUP runs only over the FRESH rows (ontology triples

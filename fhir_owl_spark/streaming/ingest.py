@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
 from ..operators.mentions import extract_mentions
+from ..plans.build_graph import mention_triples
 from ..schemas import TRANSCRIPTS
 
 
@@ -40,14 +41,7 @@ def stream_mention_triples(
     Dedup note: a streaming global dropDuplicates would need unbounded
     state; instead the sink stays append-only and dedup happens at read
     time (or compaction), exactly like the batch lineage protocol."""
-    m = extract_mentions(transcripts, dictionary, cfg)
-    return m.select(
-        F.col("code").alias("subj"),
-        F.lit("mentions-in").alias("pred"),
-        F.col("conv_id").alias("obj"),
-        F.lit("conv").alias("obj_type"),
-        F.col("conv_id").alias("conv_id"),
-    )
+    return mention_triples(extract_mentions(transcripts, dictionary, cfg))
 
 
 def windowed_mention_counts(

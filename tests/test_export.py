@@ -3,10 +3,14 @@ emitted JSON (MetadataDefaultsTest / FhirOwlServiceTest assertions)."""
 
 from __future__ import annotations
 
+import dataclasses
 import json
+
+import pytest
 
 from fhir_owl_spark import fixtures as fx
 from fhir_owl_spark.config import DUO_CONFIG
+from fhir_owl_spark.plans.build_graph import build_graph
 from fhir_owl_spark.plans.export import export_codesystem, write_codesystem_json
 from fhir_owl_spark.sources.owl_xml import (
     RDFS_LABEL,
@@ -53,6 +57,38 @@ def test_pizza_fixture_export(spark):
     )
 
 
+@pytest.mark.parametrize("include_deprecated", [False, True])
+@pytest.mark.parametrize(
+    "fixture", ["pizza_fixture", "duo_fixture", "equivalence_fixture"]
+)
+def test_export_matches_build_graph_triples(spark, fixture, include_deprecated):
+    """Every concept fact the export carries equals the build's triple
+    for it: codes and displays (has-display), designations (synonym-of),
+    the three flags and the parent properties (is-a)."""
+    ont, cfg = getattr(fx, fixture)()
+    cfg = dataclasses.replace(cfg, include_deprecated=include_deprecated)
+    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
+    cs = export_codesystem(spark, concepts, edges, synonyms, cfg)
+    no_turns = fx.transcripts_df(spark, [])
+    triples: dict[str, set] = {}
+    for r in build_graph(spark, concepts, edges, synonyms, no_turns, cfg).collect():
+        triples.setdefault(r["pred"], set()).add((r["subj"], r["obj"]))
+
+    codes = [c["code"] for c in cs["concept"]]
+    assert len(codes) == len(set(codes)) == cs["count"]
+    assert {(c["code"], c["display"]) for c in cs["concept"]} == triples["has-display"]
+    assert {
+        (c["code"], d["value"]) for c in cs["concept"] for d in c.get("designation", [])
+    } == triples.get("synonym-of", set())
+    for flag in ("imported", "root", "deprecated"):
+        assert {
+            (c["code"], str(prop(c, flag)["valueBoolean"]).lower()) for c in cs["concept"]
+        } == triples[flag], flag
+    assert {
+        (c["code"], pc) for c in cs["concept"] for pc in parents(c)
+    } == triples.get("is-a", set())
+
+
 def test_real_duo_export_with_metadata(spark, tmp_path):
     parsed = parse_owl_xml(
         "/root/reference/src/test/resources/duo.owl", include_object_properties=False
@@ -90,10 +126,6 @@ def test_real_duo_export_with_metadata(spark, tmp_path):
 # flags — the behavior spec is MetadataFromInputTest.java:48-100 plus
 # createCodeSystem (FhirOwlService.java:313-475).
 # ---------------------------------------------------------------------------
-
-import dataclasses
-
-import pytest
 
 from fhir_owl_spark.config import PipelineConfig
 from fhir_owl_spark.metadata import (

@@ -485,3 +485,47 @@ def test_bpe_pairs_plan_take_ordered(spark):
     assert "TakeOrderedAndProject" in plan
     for py_node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
         assert py_node not in plan
+
+
+# Spark jobs each call ran before build_graph, the resumable build and the
+# export shared one ontology stage: this test's own counting, run on that
+# tree (Spark 4, local session of conftest.py), gave the same numbers on
+# every run. A change may lower them, never raise them.
+PARENT_JOBS = {"build_graph_count": 16, "resumable": 23, "export": 7}
+
+
+def test_pipeline_job_counts(spark, tmp_path):
+    """Job-count guard for the three ontology entry points: build_graph
+    then count, a one-chunk resumable build, and the CodeSystem export,
+    each on fresh pizza fixture frames, counted by job group."""
+    import uuid
+
+    from fhir_owl_spark.plans.export import export_codesystem
+    from fhir_owl_spark.plans.lineage import build_graph_resumable
+
+    ont, cfg = fx.pizza_fixture()
+    turns = fx.make_transcripts(ont, cfg, n_conv=30, seed=42)
+    sc = spark.sparkContext
+
+    def jobs(fn) -> int:
+        group = f"job-count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(*fx.ontology_dfs(spark, ont), fx.transcripts_df(spark, turns))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {
+        "build_graph_count": jobs(
+            lambda c, e, s, t: build_graph(spark, c, e, s, t, cfg).count()
+        ),
+        "resumable": jobs(
+            lambda c, e, s, t: build_graph_resumable(
+                spark, c, e, s, t, str(tmp_path / "out"), cfg, n_chunks=1
+            )
+        ),
+        "export": jobs(lambda c, e, s, t: export_codesystem(spark, c, e, s, cfg)),
+    }
+    print("job counts", got)
+    assert all(got[k] <= PARENT_JOBS[k] for k in PARENT_JOBS), (got, PARENT_JOBS)
