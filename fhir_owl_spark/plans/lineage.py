@@ -13,12 +13,17 @@ snapshot id for byte-identical resume reads):
     partitioning or parallelism. Conversations never straddle chunks, so
     per-chunk dedup ≡ global dedup for mention triples (the triple key
     embeds conv_id), and the ontology triples are their own chunk (-1).
-  * Each completed chunk appends one lineage row
+  * A chunk commits in two steps: its data write, then one lineage file
     (run_id, partition_id, input_rows, output_triples, timestamps,
-    checkpoint_id) AFTER its data directory is fully written — the
-    lineage row is the commit record. ``write_committed_chunk`` is the
-    one commit function: the resumable loop and the CLI's --refresh-from
-    path both commit through it.
+    checkpoint_id) as a JSON line, written under a dot-prefixed temp
+    name and renamed into ``_lineage/part-<uuid>.json``. The rename is
+    the atomic commit record. The counts are observed on the writes
+    themselves (``DataFrame.observe``): output_triples on the chunk
+    write, and every transcript chunk's input_rows on the one staging
+    write of the input. A commit therefore runs the chunk's own write
+    job and no other Spark work, and the log is read on the driver.
+    ``write_committed_chunk`` is the one commit function: the resumable
+    loop and the CLI's --refresh-from path both commit through it.
   * Resume: chunks present in lineage are skipped; data directories of
     non-committed chunks are deleted and rewritten (write-ahead dirs,
     commit via lineage) — exactly-once output regardless of where the
@@ -29,11 +34,13 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 import shutil
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..config import PipelineConfig
 from ..operators.hierarchy import build_hierarchy
@@ -47,41 +54,60 @@ from ..plans.build_graph import (
 from ..schemas import LINEAGE, TRIPLES
 
 ONTOLOGY_CHUNK = -1
+# the committed layout: triples/chunk=N/pred=X/part-*.parquet
+_CHUNKED_TRIPLES = StructType(TRIPLES.fields + [StructField("chunk", IntegerType())])
 
 
-def _lineage_path(output_dir: str) -> str:
-    return f"{output_dir}/_lineage"
+def _lineage_path(output_dir: str) -> Path:
+    return Path(output_dir, "_lineage")
+
+
+def _write_atomic(path: Path, text: str) -> None:
+    """Write ``text`` to ``path`` via a dot-prefixed temp file and a
+    rename: readers see the whole file or none (Spark and the log reader
+    both skip dot-prefixed names)."""
+    tmp = path.with_name(f".{path.name}.tmp")
+    tmp.write_text(text)
+    os.replace(tmp, path)
+
+
+def _lineage_dir(output_dir: str) -> Path | None:
+    """The lineage log directory, None before the first commit. A log of
+    parquet files (the layout before lineage files were JSON) is refused
+    rather than read as a build with no commits."""
+    p = _lineage_path(output_dir)
+    if not p.is_dir():
+        return None
+    if any(p.glob("*.parquet")):
+        raise ValueError(
+            f"{p} holds a parquet lineage log of an older layout; rebuild "
+            "this output"
+        )
+    return p
+
+
+def lineage_rows(output_dir: str) -> list[dict]:
+    """The committed lineage rows, read on the driver without a Spark job.
+    Timestamps stay ISO strings here; ``read_lineage`` types them."""
+    p = _lineage_dir(output_dir)
+    if p is None:
+        return []
+    return [json.loads(f.read_text()) for f in sorted(p.glob("part-*.json"))]
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
-    p = Path(_lineage_path(output_dir))
-    if not p.exists() or not any(p.iterdir()):
+    p = _lineage_dir(output_dir)
+    if p is None:
         return spark.createDataFrame([], LINEAGE)
-    return spark.read.schema(LINEAGE).parquet(str(p))
+    return spark.read.schema(LINEAGE).json(str(p))
 
 
 def completed_chunks(spark: SparkSession, output_dir: str) -> set[int]:
-    return {
-        r["partition_id"] for r in read_lineage(spark, output_dir).select("partition_id").collect()
-    }
+    return {r["partition_id"] for r in lineage_rows(output_dir)}
 
 
-def _commit_lineage(spark, output_dir, run_id, chunk, input_rows, output_rows,
-                    started, checkpoint_id):
-    row = [
-        (
-            run_id,
-            chunk,
-            input_rows,
-            output_rows,
-            started,
-            dt.datetime.now(dt.timezone.utc).replace(tzinfo=None),
-            checkpoint_id,
-        )
-    ]
-    spark.createDataFrame(row, LINEAGE).coalesce(1).write.mode("append").parquet(
-        _lineage_path(output_dir)
-    )
+def _utc_now() -> dt.datetime:
+    return dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
 
 def write_committed_chunk(
@@ -92,26 +118,56 @@ def write_committed_chunk(
     input_rows: int,
     run_id: str,
 ) -> int:
-    """Commit one chunk: discard leftovers → pred-partitioned write →
-    schema-read count → lineage append. The one commit path of the
-    resumable loop and of the CLI's --refresh-from. Returns the
-    committed row count."""
-    started = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
+    """Commit one chunk: discard leftovers → pred-partitioned write with
+    its row count observed → lineage file renamed into place. The one
+    commit path of the resumable loop and of the CLI's --refresh-from.
+    Returns the committed row count."""
+    started = _utc_now()
     chunk_dir = f"{output_dir}/triples/chunk={chunk}"
     # non-committed leftovers from a dead run are discarded
     shutil.rmtree(chunk_dir, ignore_errors=True)
     # pred partitioning (north star: triples partitioned by pred) —
     # layout: triples/chunk=N/pred=X/part-*.parquet; readers prune
     # whole predicate subtrees (e.g. only mentions-in) at the scan.
-    df.write.partitionBy("pred").parquet(chunk_dir)
-    # explicit schema: an empty chunk writes no part files and schema
-    # inference would fail (TRIPLES includes the pred partition column)
-    n_out = spark.read.schema(TRIPLES).parquet(chunk_dir).count()
-    _commit_lineage(
-        spark, output_dir, run_id, chunk, input_rows, n_out, started,
-        f"{run_id}:{chunk}",
-    )
+    observed = Observation()  # unnamed → a unique name per commit
+    df.observe(observed, F.count(F.lit(1)).alias("n")).write.partitionBy(
+        "pred"
+    ).parquet(chunk_dir)
+    n_out = observed.get["n"]
+    row = {
+        "run_id": run_id,
+        "partition_id": chunk,
+        "input_rows": input_rows,
+        "output_triples": n_out,
+        "started_ts": started.isoformat(),
+        "finished_ts": _utc_now().isoformat(),
+        "checkpoint_id": f"{run_id}:{chunk}",
+    }
+    lineage = _lineage_path(output_dir)
+    lineage.mkdir(parents=True, exist_ok=True)
+    _write_atomic(lineage / f"part-{uuid.uuid4().hex}.json", json.dumps(row) + "\n")
     return n_out
+
+
+def _stage_input(transcripts: DataFrame, staging: str, n_chunks: int) -> list[int]:
+    """Write the input partitioned by chunk key → per-chunk row counts,
+    observed on that write and saved as ``_counts.json``, which is also
+    the staging-complete marker (a staging dir without it is restaged)."""
+    counts_path = Path(staging) / "_counts.json"
+    if counts_path.exists():
+        return json.loads(counts_path.read_text())["input_rows"]
+    shutil.rmtree(staging, ignore_errors=True)
+    staged = transcripts.withColumn(
+        "_chunk", F.pmod(F.xxhash64("conv_id"), F.lit(n_chunks)).cast("int")
+    )
+    counts = Observation()
+    staged.observe(
+        counts, *[F.count_if(F.col("_chunk") == c).alias(str(c)) for c in range(n_chunks)]
+    ).write.partitionBy("_chunk").parquet(staging)
+    observed = counts.get
+    input_rows = [observed[str(c)] for c in range(n_chunks)]
+    _write_atomic(counts_path, json.dumps({"input_rows": input_rows}))
+    return input_rows
 
 
 def build_graph_resumable(
@@ -170,51 +226,38 @@ def build_graph_resumable(
     # (the Iceberg analog is a snapshot-id-pinned read).
     todo = [c for c in range(n_chunks) if c not in done]
     staging = f"{output_dir}/_staged_input"
-    if todo and not Path(f"{staging}/_SUCCESS").exists():
-        shutil.rmtree(staging, ignore_errors=True)
-        (
-            transcripts.withColumn(
-                "_chunk", F.pmod(F.xxhash64("conv_id"), F.lit(n_chunks)).cast("int")
-            )
-            .write.partitionBy("_chunk")
-            .parquet(staging)
-        )
-    written = 0
-    for chunk in todo:
+    input_rows = _stage_input(transcripts, staging, n_chunks) if todo else []
+    for written, chunk in enumerate(todo, 1):
         part = (
             spark.read.schema(transcripts.schema)
             .parquet(f"{staging}/_chunk={chunk}")
             if Path(f"{staging}/_chunk={chunk}").exists()
             else transcripts.limit(0)
         )
-        n_in = part.count()
         # pairs_only: batch-local dedup inside the UDF (same as build_graph)
         pairs = extract_mentions(part, dictionary, cfg, pairs_only=True)
         write_committed_chunk(
             spark, output_dir, chunk, triples_with_key(mention_triples(pairs)),
-            n_in, run_id,
+            input_rows[chunk], run_id,
         )
-        written += 1
         if fail_after_chunks is not None and written >= fail_after_chunks:
             raise RuntimeError(f"simulated failure after {written} chunks")
-    # all chunks committed → the staged input has served its purpose
-    if completed_chunks(spark, output_dir) >= set(range(n_chunks)) | {ONTOLOGY_CHUNK}:
-        shutil.rmtree(staging, ignore_errors=True)
+    # every chunk is committed once the loop returns → the staged input
+    # has served its purpose
+    shutil.rmtree(staging, ignore_errors=True)
     return run_id
 
 
 def read_triples(spark: SparkSession, output_dir: str) -> DataFrame:
     """Committed-only read: the lineage table IS the commit log, so the
     scan is filtered to chunks with a lineage row. A chunk whose data
-    write finished but whose lineage append didn't (crash in the gap) is
-    invisible to readers until a resume rewrites and commits it —
-    otherwise the 'commit record' would not actually gate the read path.
-    The filter is on the chunk partition column → partition pruning, no
-    extra scan."""
-    try:
-        df = spark.read.parquet(f"{output_dir}/triples")
-    except Exception:
-        # every chunk empty → no part files anywhere → schema-less dirs
-        return spark.createDataFrame([], TRIPLES)
+    write finished but whose lineage file was not renamed in (crash in
+    the gap) is invisible to readers until a resume rewrites and commits
+    it — otherwise the 'commit record' would not actually gate the read
+    path. The filter is on the chunk partition column → partition
+    pruning, no extra scan. The explicit schema reads chunk directories
+    that hold no part files (every row of the chunk empty) as no rows,
+    and lets a corrupt part file raise."""
     committed = completed_chunks(spark, output_dir)
+    df = spark.read.schema(_CHUNKED_TRIPLES).parquet(f"{output_dir}/triples")
     return df.filter(F.col("chunk").isin(sorted(committed))).drop("chunk")

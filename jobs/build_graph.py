@@ -213,7 +213,7 @@ def main(argv=None) -> int:
     from fhir_owl_spark.plans.build_graph import validate_turn_ordering
     from fhir_owl_spark.plans.lineage import (
         build_graph_resumable,
-        read_lineage,
+        lineage_rows,
         read_triples,
     )
     from fhir_owl_spark.session import get_spark
@@ -344,10 +344,7 @@ def main(argv=None) -> int:
         # (one chunk + a lineage commit row) so read_triples — and a
         # future --refresh-from — read refresh output uniformly
         run_id = args.run_id or uuid.uuid4().hex[:12]
-        v1_rows = sum(
-            r["output_triples"]
-            for r in read_lineage(spark, args.refresh_from).collect()
-        )
+        v1_rows = sum(r["output_triples"] for r in lineage_rows(args.refresh_from))
         n_triples = write_committed_chunk(
             spark, args.output, 0, refreshed, v1_rows, run_id
         )
@@ -365,13 +362,14 @@ def main(argv=None) -> int:
         spark, concepts, edges, synonyms, transcripts, args.output, cfg,
         n_chunks=args.chunks, run_id=args.run_id,
     )
-    lineage = read_lineage(spark, args.output)
-    n_triples = read_triples(spark, args.output).count()
+    # chunks are disjoint (by predicate, and by conversation), so the
+    # committed rows sum to the triple count without re-scanning them
+    lineage = lineage_rows(args.output)
     summary = {
         "run_id": run_id,
         "output": args.output,
-        "chunks": lineage.count(),
-        "triples": n_triples,
+        "chunks": len(lineage),
+        "triples": sum(r["output_triples"] for r in lineage),
     }
 
     if args.export_codesystem:

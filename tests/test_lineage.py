@@ -4,6 +4,10 @@ produce the identical triple set (BASELINE.md resume-correctness row)."""
 from __future__ import annotations
 
 import dataclasses
+import json
+import shutil
+from collections import Counter
+from pathlib import Path
 
 import pytest
 
@@ -41,6 +45,34 @@ def triple_set(df):
     return {(r["subj"], r["pred"], r["obj"]) for r in df.collect()}
 
 
+def rows_by_hash(tdf):
+    """xxhash64(conv_id) of every transcript row: the model of the chunk
+    key, pmod(xxhash64(conv_id), n) (Python's % is non-negative too)."""
+    return Counter(
+        r["h"] for r in tdf.select(F.xxhash64("conv_id").alias("h")).collect()
+    )
+
+
+def assert_lineage_counts(spark, out, concepts, tdf, n_chunks):
+    """Each committed chunk's lineage counts equal the model: input_rows
+    = the chunk's transcript rows (the concept rows for the ontology
+    chunk), output_triples = the rows committed under its directory."""
+    model_in = Counter()
+    for h, n in rows_by_hash(tdf).items():
+        model_in[h % n_chunks] += n
+    model_in[-1] = concepts.count()
+    committed = {
+        r["chunk"]: r["count"]
+        for r in spark.read.parquet(f"{out}/triples").groupBy("chunk").count().collect()
+    }
+    rows = read_lineage(spark, out).collect()
+    assert sorted(r["partition_id"] for r in rows) == list(range(-1, n_chunks))
+    for r in rows:
+        c = r["partition_id"]
+        assert r["input_rows"] == model_in[c], (c, r["input_rows"], model_in[c])
+        assert r["output_triples"] == committed.get(c, 0), (c, r["output_triples"])
+
+
 def test_kill_and_resume_identical(spark, inputs, tmp_path):
     for i, (concepts, edges, synonyms, tdf, cfg) in enumerate(inputs):
         out = str(tmp_path / f"graph-{i}")
@@ -66,11 +98,65 @@ def test_kill_and_resume_identical(spark, inputs, tmp_path):
         # metrics recorded
         assert all(r["output_triples"] >= 0 and r["finished_ts"] is not None for r in rows)
 
+        assert_lineage_counts(spark, out, concepts, tdf, 4)
+
         resumed = triple_set(read_triples(spark, out))
         single_shot = triple_set(
             build_graph(spark, concepts, edges, synonyms, tdf, cfg)
         )
         assert resumed == single_shot
+
+
+def test_lineage_counts_match_chunk_rows(spark, inputs, tmp_path):
+    """With a chunk count that leaves one chunk without conversations
+    (its empty-input branch), every lineage row's input_rows and
+    output_triples equal the chunk's transcript rows and committed rows."""
+    for i, (concepts, edges, synonyms, tdf, cfg) in enumerate(inputs):
+        hashes = rows_by_hash(tdf)
+        n_chunks = next(
+            n for n in range(2, 64) if len({h % n for h in hashes}) < n
+        )
+        out = str(tmp_path / f"graph-{i}")
+        build_graph_resumable(
+            spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=n_chunks
+        )
+        assert_lineage_counts(spark, out, concepts, tdf, n_chunks)
+        assert not Path(f"{out}/_staged_input").exists()
+
+
+def test_restages_input_without_counts(spark, inputs, tmp_path):
+    """A staged input without its counts file is incomplete (the staging
+    write died before the counts were saved) and is staged again on
+    resume: a chunk directory missing from it must not read as empty."""
+    for i, (concepts, edges, synonyms, tdf, cfg) in enumerate(inputs):
+        out = str(tmp_path / f"graph-{i}")
+        with pytest.raises(RuntimeError, match="simulated failure"):
+            build_graph_resumable(
+                spark, concepts, edges, synonyms, tdf, out, cfg,
+                n_chunks=4, fail_after_chunks=1,
+            )
+        staging = Path(out) / "_staged_input"
+        (staging / "_counts.json").unlink()
+        shutil.rmtree(staging / "_chunk=3")
+        build_graph_resumable(
+            spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=4
+        )
+        assert_lineage_counts(spark, out, concepts, tdf, 4)
+        assert triple_set(read_triples(spark, out)) == triple_set(
+            build_graph(spark, concepts, edges, synonyms, tdf, cfg)
+        )
+
+
+def test_read_raises_on_corrupt_commit(spark, inputs, tmp_path):
+    """Corrupt part files under committed chunks fail the read instead of
+    reading back as an empty graph."""
+    concepts, edges, synonyms, tdf, cfg = inputs[0]
+    out = str(tmp_path / "graph")
+    build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=2)
+    for part in Path(out, "triples").glob("chunk=*/pred=*/part-*.parquet"):
+        part.write_bytes(b"not parquet")
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        read_triples(spark, out).count()
 
 
 def test_rerun_is_noop(spark, inputs, tmp_path):
@@ -102,9 +188,9 @@ def test_resume_rejects_chunk_count_change(spark, inputs, tmp_path):
 
 
 def test_read_skips_uncommitted_chunk(spark, inputs, tmp_path):
-    """A chunk directory whose data write finished but whose lineage commit
-    row was never appended (crash in the gap) must be INVISIBLE to readers
-    — the lineage commit record gates the read path."""
+    """A chunk directory whose data write finished but whose lineage file
+    was never renamed into place (crash in the gap) must be INVISIBLE to
+    readers — the lineage commit record gates the read path."""
     for i, (concepts, edges, synonyms, tdf, cfg) in enumerate(inputs):
         out = str(tmp_path / f"graph-{i}")
         build_graph_resumable(
@@ -120,7 +206,24 @@ def test_read_skips_uncommitted_chunk(spark, inputs, tmp_path):
         orphan.write.mode("overwrite").partitionBy("pred").parquet(
             f"{out}/triples/chunk=99"
         )
+        # ... and its lineage row written but never renamed into place
+        row = read_lineage(spark, out).first().asDict()
+        row.update(partition_id=99, started_ts=None, finished_ts=None)
+        Path(f"{out}/_lineage/.part-orphan.json.tmp").write_text(json.dumps(row))
 
+        assert 99 not in completed_chunks(spark, out)
+        assert read_lineage(spark, out).filter("partition_id = 99").count() == 0
         after = triple_set(read_triples(spark, out))
         assert after == before
         assert not any(s.startswith("ORPHAN_") for s, _, _ in after)
+
+
+def test_rejects_parquet_lineage_log(spark, tmp_path):
+    """An output whose lineage log is parquet (the layout before lineage
+    files were JSON) is refused, not read as a build with no commits."""
+    (tmp_path / "_lineage").mkdir()
+    (tmp_path / "_lineage" / "part-00000.snappy.parquet").write_bytes(b"")
+    with pytest.raises(ValueError, match="older layout"):
+        completed_chunks(spark, str(tmp_path))
+    with pytest.raises(ValueError, match="older layout"):
+        read_lineage(spark, str(tmp_path))

@@ -487,27 +487,43 @@ def test_bpe_pairs_plan_take_ordered(spark):
         assert py_node not in plan
 
 
-# Spark jobs each call ran before build_graph, the resumable build and the
-# export shared one ontology stage: this test's own counting, run on that
-# tree (Spark 4, local session of conftest.py), gave the same numbers on
-# every run. A change may lower them, never raise them.
-PARENT_JOBS = {"build_graph_count": 16, "resumable": 23, "export": 7}
+# Spark jobs per call, counted by this test (Spark 4, local session of
+# conftest.py); the counts repeat exactly. build_graph_count and export:
+# the tree before build_graph, the resumable build and the export shared
+# one ontology stage. resumable and refresh: the tree whose chunk commits
+# observe their counts on the writes and write the lineage row on the
+# driver (resumable 23 → 13, refresh 23 → 17). A change may lower them,
+# never raise them.
+PARENT_JOBS = {"build_graph_count": 16, "resumable": 13, "export": 7, "refresh": 17}
 
 
 def test_pipeline_job_counts(spark, tmp_path):
-    """Job-count guard for the three ontology entry points: build_graph
-    then count, a one-chunk resumable build, and the CodeSystem export,
-    each on fresh pizza fixture frames, counted by job group."""
+    """Job-count guard for the ontology entry points: build_graph then
+    count, a one-chunk resumable build, the CodeSystem export, and a
+    refresh of a committed build onto a relabelled release committed
+    through write_committed_chunk, each on fresh pizza fixture frames,
+    counted by job group."""
+    import copy
     import uuid
 
     from fhir_owl_spark.plans.export import export_codesystem
-    from fhir_owl_spark.plans.lineage import build_graph_resumable
+    from fhir_owl_spark.plans.lineage import (
+        build_graph_resumable,
+        lineage_rows,
+        read_triples,
+        write_committed_chunk,
+    )
+    from fhir_owl_spark.plans.refresh import refresh_graph
 
     ont, cfg = fx.pizza_fixture()
     turns = fx.make_transcripts(ont, cfg, n_conv=30, seed=42)
+    ont2 = copy.deepcopy(ont)
+    relabelled = next(c for c in ont2.concepts if c["label"])
+    relabelled["label"] += " renamed"
+    ont2.synonym(ont2.concepts[2]["iri"], "brand new synonym")
     sc = spark.sparkContext
 
-    def jobs(fn) -> int:
+    def jobs(fn, ont=ont) -> int:
         group = f"job-count-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
@@ -516,16 +532,26 @@ def test_pipeline_job_counts(spark, tmp_path):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
+    v1 = str(tmp_path / "out")
+
+    def refresh(c, e, s, t):
+        refreshed = refresh_graph(spark, read_triples(spark, v1), c, e, s, t, cfg)
+        v1_rows = sum(r["output_triples"] for r in lineage_rows(v1))
+        write_committed_chunk(
+            spark, str(tmp_path / "refreshed"), 0, refreshed, v1_rows, "run"
+        )
+
     got = {
         "build_graph_count": jobs(
             lambda c, e, s, t: build_graph(spark, c, e, s, t, cfg).count()
         ),
         "resumable": jobs(
             lambda c, e, s, t: build_graph_resumable(
-                spark, c, e, s, t, str(tmp_path / "out"), cfg, n_chunks=1
+                spark, c, e, s, t, v1, cfg, n_chunks=1
             )
         ),
         "export": jobs(lambda c, e, s, t: export_codesystem(spark, c, e, s, cfg)),
+        "refresh": jobs(refresh, ont=ont2),
     }
     print("job counts", got)
     assert all(got[k] <= PARENT_JOBS[k] for k in PARENT_JOBS), (got, PARENT_JOBS)
