@@ -589,40 +589,21 @@ def make_transcripts(
 # ---------------------------------------------------------------------------
 
 
-def _local_df(spark, rows: list[tuple], schema):
-    """Arrow-backed local relation from driver rows.
-
-    createDataFrame over a plain Python list parallelizes PICKLED rows:
-    every later action re-reads them through a Python worker round trip
-    (~0.3s/job on 32 cores even for 25 rows). Routing through pandas
-    lets the session's Arrow path ship JVM-readable batches instead —
-    measured ~3x cheaper per action, identical schema (the explicit
-    StructType is passed through) and values (dtype=object keeps None
-    as null; scalar string/bool columns only on this path)."""
-    import pandas as pd
-
-    pdf = pd.DataFrame(
-        rows if rows else None,
-        columns=[f.name for f in schema.fields],
-        dtype=object,
-    )
-    return spark.createDataFrame(pdf, schema)
-
-
 def ontology_dfs(spark, ont: Ontology):
     from .schemas import ONTOLOGY_CONCEPTS, ONTOLOGY_EDGES, ONTOLOGY_SYNONYMS
+    from .session import local_frame
 
-    concepts = _local_df(
+    concepts = local_frame(
         spark,
         [tuple(c[f.name] for f in ONTOLOGY_CONCEPTS.fields) for c in ont.concepts],
         ONTOLOGY_CONCEPTS,
     )
-    edges = _local_df(
+    edges = local_frame(
         spark,
         [tuple(e[f.name] for f in ONTOLOGY_EDGES.fields) for e in ont.edges],
         ONTOLOGY_EDGES,
     )
-    synonyms = _local_df(
+    synonyms = local_frame(
         spark,
         [tuple(s[f.name] for f in ONTOLOGY_SYNONYMS.fields) for s in ont.synonyms],
         ONTOLOGY_SYNONYMS,

@@ -30,6 +30,13 @@ def shortform(col):
     return F.regexp_extract(col, SHORTFORM_REGEX, 1)
 
 
+def shortform_str(iri: str) -> str:
+    """``shortform`` on the driver: the trailing run of characters other
+    than '/' and '#' — "" for an IRI ending in one, the value
+    regexp_extract returns when the pattern does not match."""
+    return iri[max(iri.rfind("/"), iri.rfind("#")) + 1 :]
+
+
 def derive_has_imports(concepts: DataFrame, cfg: PipelineConfig) -> bool:
     """hasImports (FhirOwlService.java:505): with no imports, nothing is
     imported regardless of set membership. One tiny action on the small
@@ -52,6 +59,21 @@ def imported_col(cfg: PipelineConfig, has_imports: bool, iri_col="iri"):
     if not has_imports:
         return F.lit(False)
     return F.coalesce(F.col("imported"), F.lit(False))
+
+
+def imported_flag(iri: str, imported: bool | None, cfg: PipelineConfig) -> bool:
+    """``imported_col`` for one driver row (``cfg.has_imports`` derived)."""
+    if cfg.main_namespaces:
+        return not any(iri.startswith(ns) for ns in cfg.main_namespaces)
+    return bool(cfg.has_imports and imported)
+
+
+def local_code_str(code: str, cfg: PipelineConfig) -> str:
+    """``local_code_col`` for one driver value (Spark's replace leaves
+    the string as it is when the search string is empty)."""
+    if cfg.code_replace and cfg.code_replace[0]:
+        return code.replace(*cfg.code_replace)
+    return code
 
 
 def local_code_col(code_col, cfg: PipelineConfig):
@@ -187,6 +209,82 @@ def parent_code_col(cfg: PipelineConfig, has_imports: bool, iri_col="iri"):
     return F.when(imported, F.col(iri_col)).otherwise(
         local_code_col(shortform(F.col(iri_col)), cfg)
     )
+
+
+def parent_code_str(iri: str, imported: bool | None, cfg: PipelineConfig) -> str:
+    """``parent_code_col`` for one driver row (``cfg.has_imports`` derived)."""
+    if imported_flag(iri, imported, cfg):
+        return iri
+    return local_code_str(shortform_str(iri), cfg)
+
+
+def dictionary_rows(
+    concept_rows: list[tuple],
+    synonym_rows: list[tuple],
+    cfg: PipelineConfig,
+) -> list[tuple]:
+    """``build_concept_dictionary`` on the driver, row for row →
+    CONCEPT_DICTIONARY tuples. concept_rows are (iri, label, deprecated,
+    imported, unsatisfiable), synonym_rows (iri, synonym, prop);
+    ``cfg.has_imports`` must already be derived.
+
+    The same stages (F1–F8, A1–A4) with the Spark program's value
+    semantics: min is the binary string order, a code-annotation
+    candidate is never excluded, a label of "" still wins over the
+    code, and one output row is emitted per surviving concept row."""
+    excluded = set(cfg.labels_to_exclude)
+    synonym_props = set(cfg.synonym_props)
+    # iri → [preferred, synonym set, code annotation]; one pass, the
+    # driver twin of the conditional aggregation
+    per_iri: dict[str, list] = {}
+    for iri, syn, prop in synonym_rows:
+        if syn is None:
+            continue
+        agg = per_iri.get(iri)
+        if agg is None:
+            agg = per_iri[iri] = [None, set(), None]
+        if cfg.code_prop and prop == cfg.code_prop and (agg[2] is None or syn < agg[2]):
+            agg[2] = syn
+        if syn in excluded:
+            continue
+        if prop == cfg.display_prop and (agg[0] is None or syn < agg[0]):
+            agg[0] = syn
+        if prop in synonym_props:
+            agg[1].add(syn)
+
+    none = (None, set(), None)
+    out = []
+    for iri, label, deprecated, imported, unsatisfiable in concept_rows:
+        if iri == OWL_NOTHING or unsatisfiable:
+            continue
+        deprecated = bool(deprecated)
+        if deprecated and not cfg.include_deprecated:
+            continue
+        preferred, syns, code_anno = per_iri.get(iri, none)
+        is_imported = imported_flag(iri, imported, cfg)
+        code = code_anno
+        if code is None:
+            code = iri if is_imported else shortform_str(iri)
+        if not is_imported:
+            code = local_code_str(code, cfg)
+        if preferred is not None:
+            display = preferred
+        elif syns:
+            display = min(syns)
+        elif label is not None:
+            display = label
+        else:
+            display = SPECIAL_DISPLAYS.get(code, code)
+        out.append((
+            iri,
+            code,
+            display,
+            sorted(syns - {display}),
+            deprecated,
+            is_imported,
+            iri in TOP_ENTITIES,
+        ))
+    return out
 
 
 def broadcast_dictionary(dictionary: DataFrame) -> DataFrame:

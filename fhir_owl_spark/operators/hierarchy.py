@@ -623,6 +623,39 @@ def _driver_hierarchy(
     return out
 
 
+def driver_direct_parents(
+    concept_rows: list[tuple],
+    edge_rows: list[tuple],
+    equivalence_mode: str,
+) -> list[tuple[str, str]]:
+    """``build_hierarchy``'s driver path on collected rows: concept_rows
+    are (iri, unsatisfiable), edge_rows (child_iri, parent_iri).
+
+    Drops owl:Nothing, unsatisfiable nodes and self-loops, completes
+    every parentless non-top node with an edge to owl:Thing, then
+    reduces with ``_driver_hierarchy``. The one driver-side statement of
+    these semantics: ``build_hierarchy`` and the ontology stage of
+    plans/build_graph.py both call it."""
+    # positional access throughout: ~3× cheaper than by-name Row lookup
+    # at HPO scale
+    dropped = {
+        r[0] for r in concept_rows if r[0] == OWL_NOTHING or bool(r[1])
+    }
+    nodes = {r[0] for r in concept_rows} - dropped
+    eset = [
+        (c, p)
+        for c, p in edge_rows
+        if c != p and c not in dropped and p not in dropped
+    ]
+    children = {c for c, _ in eset}
+    completed = eset + [
+        (n, OWL_THING)
+        for n in nodes
+        if n not in TOP_ENTITIES and n not in children
+    ]
+    return _driver_hierarchy(completed, equivalence_mode, nodes)
+
+
 def transitive_reduction(
     closure: DataFrame, child_col: str = "child_iri", parent_col: str = "parent_iri"
 ) -> DataFrame:
@@ -677,37 +710,14 @@ def build_hierarchy(
             concepts.select("iri", "unsatisfiable").limit(th + 1).collect()
         )
         if len(concept_head) <= th:
-            # positional Row access throughout: ~3× cheaper than by-name
-            # lookup at HPO scale (the select above fixes the order)
-            dropped_set = {
-                r[0] for r in concept_head if r[0] == OWL_NOTHING or bool(r[1])
-            }
-            node_set = {r[0] for r in concept_head} - dropped_set
-            eset = [
-                (c, p)
-                for c, p in edge_head
-                if c != p and c not in dropped_set and p not in dropped_set
-            ]
-            children = {c for c, _ in eset}
-            completed_rows = eset + [
-                (n, OWL_THING)
-                for n in node_set
-                if n not in TOP_ENTITIES and n not in children
-            ]
-            reduced = _driver_hierarchy(completed_rows, mode, node_set)
             from ..schemas import ONTOLOGY_EDGES
+            from ..session import local_frame
 
-            if reduced:
-                # Arrow path: a pandas frame serializes as columnar Arrow
-                # batches instead of per-row pickles — measured ~3× faster
-                # to first action at HPO scale (19.8k edges)
-                import pandas as _pd
-
-                return concepts.sparkSession.createDataFrame(
-                    _pd.DataFrame(reduced, columns=["child_iri", "parent_iri"]),
-                    ONTOLOGY_EDGES,
-                )
-            return concepts.sparkSession.createDataFrame([], ONTOLOGY_EDGES)
+            return local_frame(
+                concepts.sparkSession,
+                driver_direct_parents(concept_head, edge_head, mode),
+                ONTOLOGY_EDGES,
+            )
 
     # distributed path: the same set logic as DataFrame programs
     dropped = concepts.filter(

@@ -7,12 +7,26 @@ ontology → dictionary → hierarchy (closure + reduction) → per-concept rows
 
 Every entry point — ``build_graph`` here, ``build_graph_resumable``
 (plans/lineage.py), ``refresh_graph`` (plans/refresh.py) and
-``export_codesystem`` (plans/export.py) — shares one ontology stage:
-``ontology_stage`` derives has_imports once and checkpoints the concept
-dictionary, ``isa_rows`` holds the one parent rule (parent codes, Nothing
-and deprecated parents dropped) and ``mention_triples`` the one
-mentions-in projection. Each caller runs ``build_hierarchy`` itself, so a
-resume whose ontology chunk is committed does no hierarchy work.
+``export_codesystem`` (plans/export.py) — shares one ontology stage,
+``ontology_stage``, and ``mention_triples``, the one mentions-in
+projection. The stage derives has_imports once and yields the concept
+dictionary and the is-a rows (``isa_rows``: parent codes, Nothing and
+deprecated parents dropped, undeclared parents as their IRI). Its gate is
+the hierarchy's, ``small_graph_threshold`` rows on each of concepts,
+edges and synonyms, probed with a bounded collect:
+
+  * at or below it (every ontology the benchmarks and fixtures run), the
+    probes are the only collects, and ONE driver pass computes the
+    dictionary rows, the direct parents (the hierarchy's driver kernel)
+    and the is-a rows — the reference's one in-memory pass
+    (FhirOwlService.java:299-591). The export renders those rows with no
+    Spark job; the other entry points get them as Arrow-backed local
+    relations, so their joins and the mention-term collect plan over
+    local data;
+  * above it, the Spark-column dictionary runs under an eager
+    localCheckpoint and ``build_hierarchy`` takes its distributed path
+    on first use of the is-a rows, so a resume whose ontology chunk is
+    committed does no hierarchy work.
 
 Physical shape at 10^12-turn scale:
   * ontology stages touch only the small side (broadcast-class data);
@@ -28,19 +42,24 @@ Physical shape at 10^12-turn scale:
 from __future__ import annotations
 
 import dataclasses
+import functools
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..config import PipelineConfig
 from ..operators.dictionary import (
     build_concept_dictionary,
     derive_has_imports,
+    dictionary_rows,
     parent_code_col,
+    parent_code_str,
 )
-from ..operators.hierarchy import build_hierarchy
+from ..operators.hierarchy import build_hierarchy, driver_direct_parents
 from ..operators.mentions import extract_mentions
-from ..schemas import OWL_NOTHING
+from ..schemas import CONCEPT_DICTIONARY, OWL_NOTHING
+from ..session import local_frame
 
 # Field separator for the canonical key — unit separator, cannot appear in
 # IRIs/codes/conv ids.
@@ -71,28 +90,121 @@ def triples_with_key(triples: DataFrame) -> DataFrame:
     return keyed.dropDuplicates()
 
 
+# is-a rows of emitted non-root concepts (see isa_rows); the nullability
+# is the Spark program's, so both sides of the gate write the same
+# parquet schema
+ISA_ROWS = StructType(
+    [
+        StructField("child_iri", StringType(), nullable=False),
+        StructField("subj", StringType(), nullable=False),
+        StructField("parent_code", StringType(), nullable=False),
+    ]
+)
+_CONCEPT_COLS = ("iri", "label", "deprecated", "imported", "unsatisfiable")
+_SYNONYM_COLS = ("iri", "synonym", "prop")
+
+
+@dataclasses.dataclass
+class OntologyStage:
+    """The ontology stage every entry point shares (``ontology_stage``).
+
+    ``cfg`` carries the derived has_imports. Below the gate ``rows``
+    holds the driver pass's dictionary rows (CONCEPT_DICTIONARY order)
+    and is-a rows (ISA_ROWS order), and the frames are local relations
+    built from them on first use. Above it ``rows`` is None, and on first
+    use the dictionary is the Spark-column program under an eager
+    localCheckpoint and the is-a rows run ``build_hierarchy``, so a
+    resume whose ontology chunk is committed does no hierarchy work."""
+
+    cfg: PipelineConfig
+    concepts: DataFrame
+    edges: DataFrame
+    synonyms: DataFrame
+    rows: tuple[list[tuple], list[tuple]] | None
+    n_concepts: int | None  # concept rows, known below the gate
+
+    @functools.cached_property
+    def dictionary(self) -> DataFrame:
+        if self.rows is None:
+            return build_concept_dictionary(
+                self.concepts, self.synonyms, self.cfg
+            ).localCheckpoint(eager=True)
+        return local_frame(
+            self.concepts.sparkSession, self.rows[0], CONCEPT_DICTIONARY
+        )
+
+    @functools.cached_property
+    def isa(self) -> DataFrame:
+        """(child_iri, subj, parent_code) — see ``isa_rows``."""
+        if self.rows is None:
+            direct = build_hierarchy(self.concepts, self.edges, self.cfg)
+            return isa_rows(self.dictionary, direct, self.concepts, self.cfg)
+        return local_frame(self.concepts.sparkSession, self.rows[1], ISA_ROWS)
+
+    def concept_count(self) -> int:
+        if self.n_concepts is None:
+            return self.concepts.count()
+        return self.n_concepts
+
+    def triples(self) -> DataFrame:
+        """The ontology-side triples (``ontology_triples``)."""
+        return ontology_triples(self.dictionary, self.isa)
+
+    def export_rows(self) -> tuple[list[tuple], list[tuple]]:
+        """(dictionary rows, is-a rows) on the driver: the driver pass's
+        own rows below the gate (no Spark job), collected above it."""
+        if self.rows is None:
+            return self.dictionary.collect(), self.isa.collect()
+        return self.rows
+
+
 def ontology_stage(
     concepts: DataFrame,
     edges: DataFrame,
     synonyms: DataFrame,
     cfg: PipelineConfig,
-) -> tuple[PipelineConfig, DataFrame, DataFrame, DataFrame]:
-    """The ontology stage every entry point shares → (cfg, concepts,
-    edges, dictionary).
+) -> OntologyStage:
+    """The ontology stage every entry point shares.
 
-    has_imports is derived ONCE into the returned cfg: the dictionary
-    and the is-a parent codes would otherwise each run their own probe
-    job for the same answer (derive_has_imports returns cfg.has_imports
-    verbatim when it is set). The dictionary is consumed several times
-    (triples, the mention broadcast, export, the refresh diff) and is
-    small by design — materialized once, eagerly. Callers must use the
-    returned concepts and edges, and build the hierarchy themselves."""
+    The gate is ``cfg.small_graph_threshold`` rows on each of concepts,
+    edges and synonyms, probed with the bounded ``limit(th + 1)
+    .collect()`` that ``build_hierarchy`` uses (a probe of a local
+    relation runs no Spark job). At or below it the probes ARE the
+    collects — each table once, as positional tuples — and one driver
+    pass derives has_imports, the dictionary rows
+    (``dictionary_rows``), the direct parents
+    (``driver_direct_parents``) and the is-a rows (``_driver_isa_rows``).
+    Above it has_imports is derived by one probe job and the
+    Spark-column programs run. Either way has_imports is derived ONCE,
+    into the returned cfg."""
+    th = cfg.small_graph_threshold
+    heads = []
+    for df, cols in (
+        (concepts, _CONCEPT_COLS),
+        (edges, ("child_iri", "parent_iri")),
+        (synonyms, _SYNONYM_COLS),
+    ):
+        head = df.select(*cols).limit(th + 1).collect()
+        if len(head) > th:
+            if cfg.has_imports is None:
+                cfg = dataclasses.replace(
+                    cfg, has_imports=derive_has_imports(concepts, cfg)
+                )
+            return OntologyStage(cfg, concepts, edges, synonyms, None, None)
+        heads.append(head)
+    concept_rows, edge_rows, synonym_rows = heads
     if cfg.has_imports is None:
         cfg = dataclasses.replace(
-            cfg, has_imports=derive_has_imports(concepts, cfg)
+            cfg, has_imports=any(bool(r[3]) for r in concept_rows)
         )
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg)
-    return cfg, concepts, edges, dictionary.localCheckpoint(eager=True)
+    dict_rows = dictionary_rows(concept_rows, synonym_rows, cfg)
+    direct = driver_direct_parents(
+        [(r[0], r[4]) for r in concept_rows], edge_rows, cfg.equivalence_mode
+    )
+    isa = _driver_isa_rows(dict_rows, direct, concept_rows, cfg)
+    return OntologyStage(
+        cfg, concepts, edges, synonyms, (dict_rows, isa), len(concept_rows)
+    )
 
 
 def isa_rows(
@@ -105,11 +217,12 @@ def isa_rows(
     parent_code). Deprecated parents are dropped WITHOUT relinking and
     Nothing parents dropped (FhirOwlService.java:620-647); parents keep
     the code-annotation-free derivation (parent_code_col), and parents
-    outside the concepts table (undeclared) fall back to their IRI."""
-    has_imports = derive_has_imports(concepts, cfg)
+    outside the concepts table (undeclared) fall back to their IRI.
+    ``cfg.has_imports`` must be derived (``ontology_stage`` does it);
+    ``_driver_isa_rows`` is the same rule on driver rows."""
     parent_meta = concepts.select(
         F.col("iri").alias("parent_iri"),
-        parent_code_col(cfg, has_imports, "iri").alias("parent_code"),
+        parent_code_col(cfg, cfg.has_imports, "iri").alias("parent_code"),
         F.coalesce("deprecated", F.lit(False)).alias("parent_deprecated"),
     )
     isa = (
@@ -131,6 +244,36 @@ def isa_rows(
     )
 
 
+def _driver_isa_rows(
+    dict_rows: list[tuple],
+    direct: list[tuple[str, str]],
+    concept_rows: list[tuple],
+    cfg: PipelineConfig,
+) -> list[tuple]:
+    """``isa_rows`` on driver rows, with the same join multiplicities:
+    one row per (emitted non-root child row, direct parent, parent
+    concept row)."""
+    parent_meta: dict[str, list[tuple[str, bool]]] = {}
+    for iri, _label, deprecated, imported, _unsat in concept_rows:
+        parent_meta.setdefault(iri, []).append(
+            (parent_code_str(iri, imported, cfg), bool(deprecated))
+        )
+    parents_of: dict[str, list[str]] = {}
+    for child, parent in direct:
+        if parent != OWL_NOTHING:
+            parents_of.setdefault(child, []).append(parent)
+    out = []
+    for iri, code, *_, root in dict_rows:
+        if root:
+            continue
+        for parent in parents_of.get(iri, ()):
+            # an undeclared parent falls back to its IRI
+            for parent_code, deprecated in parent_meta.get(parent, ((parent, False),)):
+                if not deprecated or cfg.include_deprecated:
+                    out.append((iri, code, parent_code))
+    return out
+
+
 def mention_triples(pairs: DataFrame) -> DataFrame:
     """(code, conv_id) mention pairs → mentions-in triples."""
     return pairs.select(
@@ -142,13 +285,8 @@ def mention_triples(pairs: DataFrame) -> DataFrame:
     )
 
 
-def concept_triples(
-    dictionary: DataFrame,
-    direct_parents: DataFrame,
-    concepts: DataFrame,
-    cfg: PipelineConfig,
-) -> DataFrame:
-    """Dictionary + reduced hierarchy → ontology-side triples.
+def ontology_triples(dictionary: DataFrame, isa: DataFrame) -> DataFrame:
+    """Dictionary + is-a rows → ontology-side triples.
 
     Emits per concept: has-display, imported, deprecated, root,
     synonym-of*, and is-a* for non-root concepts (the parent rule is
@@ -180,7 +318,7 @@ def concept_triples(
             F.lit("string").alias("obj_type"),
             F.lit(None).cast("string").alias("conv_id"),
         ),
-        isa_rows(d, direct_parents, concepts, cfg).select(
+        isa.select(
             "subj",
             F.lit("is-a").alias("pred"),
             F.col("parent_code").alias("obj"),
@@ -195,6 +333,24 @@ def concept_triples(
     return out
 
 
+def concept_triples(
+    dictionary: DataFrame,
+    direct_parents: DataFrame,
+    concepts: DataFrame,
+    cfg: PipelineConfig,
+) -> DataFrame:
+    """Dictionary + reduced hierarchy → ontology-side triples, for a
+    caller holding its own dictionary and hierarchy frames (the
+    pipelines use ``OntologyStage.triples``)."""
+    if cfg.has_imports is None:
+        cfg = dataclasses.replace(
+            cfg, has_imports=derive_has_imports(concepts, cfg)
+        )
+    return ontology_triples(
+        dictionary, isa_rows(dictionary, direct_parents, concepts, cfg)
+    )
+
+
 def materialize_ontology_inputs(
     concepts: DataFrame, edges: DataFrame, synonyms: DataFrame
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -202,17 +358,12 @@ def materialize_ontology_inputs(
     localCheckpoints + one union-count action; every frame keeps its
     exact input schema).
 
-    No pipeline calls this: ``ontology_stage`` leaves its inputs as the
-    caller built them, because the extra job did not pay for itself.
-    Spark jobs per call, stage without → with this call (Spark 4, local
-    mode; counts repeat exactly): ``perfbench`` corpus workload, seed 21,
-    ``build`` op 23 → 29 and ``export`` op 7 → 13 (export median
-    0.67 → 0.99 s on a shared 4-vCPU VM, +55%); on pizza fixture frames,
-    ``build_graph(...).count()`` 9 → 17, a one-chunk
-    ``build_graph_resumable`` 23 → 31 and ``export_codesystem`` 7 → 15.
-    Fixture frames are Arrow-backed local
-    relations: Spark answers the stage's bounded collects on them without
-    launching a job, and the checkpoint turns those collects into jobs.
+    No pipeline calls this. Checkpointed frames are no longer local
+    relations, so every bounded collect of the ontology stage becomes a
+    job. Spark jobs per call without → with this call first, its own job
+    included (Spark 4, local mode, pizza fixture frames):
+    ``build_graph(...).count()`` 4 → 12, a one-chunk
+    ``build_graph_resumable`` 6 → 14 and ``export_codesystem`` 0 → 8.
     Kept only for the benchmark's per-layer probes (perfbench/probes.py),
     which time the ontology frames as their own layer."""
     concepts = concepts.localCheckpoint(eager=False)
@@ -282,16 +433,14 @@ def build_graph(
                 f"turn_idx={bad[0]['turn_idx']}"
             )
 
-    cfg, concepts, edges, dictionary = ontology_stage(
-        concepts, edges, synonyms, cfg
-    )
-    direct = build_hierarchy(concepts, edges, cfg)
-    onto = concept_triples(dictionary, direct, concepts, cfg)
+    stage = ontology_stage(concepts, edges, synonyms, cfg)
+    cfg = stage.cfg
+    onto = stage.triples()
 
     # pairs_only: batch-local dedup inside the UDF (hub terms repeat in
     # most turns of a conversation) — global dedup still happens in the
     # final key-hash dropDuplicates, one shuffle, map-side combined.
-    pairs = extract_mentions(transcripts, dictionary, cfg, pairs_only=True)
+    pairs = extract_mentions(transcripts, stage.dictionary, cfg, pairs_only=True)
     if related_npmi is not None:
         pairs = pairs.localCheckpoint(eager=True)
 

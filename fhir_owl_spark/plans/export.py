@@ -4,11 +4,15 @@
 from the engine's dictionary + hierarchy so a reference user can diff the
 two converters concept-by-concept. The dictionary and the parent rows
 come from the ontology stage build_graph uses (plans/build_graph.py:
-ontology_stage, isa_rows), so the export and the triples cannot disagree.
+ontology_stage), so the export and the triples cannot disagree.
 
 Driver-side by design: the concept list is ontology-scale (broadcast
-class), never transcript-scale. The designation `use` coding mirrors the
-reference's fixed SNOMED 'Synonym' coding (addSynonyms,
+class), never transcript-scale. At or below ``small_graph_threshold``
+rows per ontology table the stage is one driver pass and the export
+renders its rows with no further Spark job (none at all on
+local-relation inputs); above it, the Spark-column stage's rows are
+collected. The designation `use` coding mirrors the reference's fixed
+SNOMED 'Synonym' coding (addSynonyms,
 FhirOwlService.java:905-913); the property list mirrors processEntity
 (imported, root, deprecated, parent*).
 """
@@ -20,8 +24,7 @@ import json
 from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
-from ..operators.hierarchy import build_hierarchy
-from .build_graph import isa_rows, ontology_stage
+from .build_graph import ontology_stage
 
 SYNONYM_USE = {
     "system": "http://snomed.info/sct",
@@ -40,32 +43,31 @@ def export_codesystem(
 ) -> dict:
     """→ CodeSystem-shaped dict (resourceType/url/version/…/count/concept[])."""
     cfg = cfg or PipelineConfig()
-    cfg, concepts, edges, dictionary = ontology_stage(
-        concepts, edges, synonyms, cfg
-    )
-    direct = build_hierarchy(concepts, edges, cfg)
+    stage = ontology_stage(concepts, edges, synonyms, cfg)
+    cfg = stage.cfg
+    dict_rows, isa = stage.export_rows()
     # the same parent rows build_graph emits as is-a triples
     parents_of: dict[str, list[str]] = {}
-    for r in (
-        isa_rows(dictionary, direct, concepts, cfg)
-        .select("child_iri", "parent_code")
-        .collect()
-    ):
-        parents_of.setdefault(r["child_iri"], []).append(r["parent_code"])
+    for child_iri, _subj, parent_code in isa:
+        parents_of.setdefault(child_iri, []).append(parent_code)
 
+    # positional CONCEPT_DICTIONARY fields: driver tuples and Spark Rows
+    # alike
     concept_list = []
-    for r in sorted(dictionary.collect(), key=lambda x: x["code"]):
-        cdc: dict = {"code": r["code"], "display": r["display"]}
-        if r["synonyms"]:
+    for iri, code, display, synonyms, deprecated, imported, root in sorted(
+        dict_rows, key=lambda r: r[1]
+    ):
+        cdc: dict = {"code": code, "display": display}
+        if synonyms:
             cdc["designation"] = [
-                {"use": SYNONYM_USE, "value": s} for s in sorted(r["synonyms"])
+                {"use": SYNONYM_USE, "value": s} for s in sorted(synonyms)
             ]
         props = []
-        for pc in sorted(parents_of.get(r["iri"], [])):
+        for pc in sorted(parents_of.get(iri, [])):
             props.append({"code": "parent", "valueCode": pc})
-        props.append({"code": "imported", "valueBoolean": bool(r["imported"])})
-        props.append({"code": "root", "valueBoolean": bool(r["root"])})
-        props.append({"code": "deprecated", "valueBoolean": bool(r["deprecated"])})
+        props.append({"code": "imported", "valueBoolean": bool(imported)})
+        props.append({"code": "root", "valueBoolean": bool(root)})
+        props.append({"code": "deprecated", "valueBoolean": bool(deprecated)})
         cdc["property"] = props
         concept_list.append(cdc)
 

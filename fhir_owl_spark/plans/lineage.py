@@ -43,15 +43,14 @@ from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
 from ..config import PipelineConfig
-from ..operators.hierarchy import build_hierarchy
 from ..operators.mentions import extract_mentions
 from ..plans.build_graph import (
-    concept_triples,
     mention_triples,
     ontology_stage,
     triples_with_key,
 )
 from ..schemas import LINEAGE, TRIPLES
+from ..session import local_frame
 
 ONTOLOGY_CHUNK = -1
 # the committed layout: triples/chunk=N/pred=X/part-*.parquet
@@ -86,20 +85,29 @@ def _lineage_dir(output_dir: str) -> Path | None:
     return p
 
 
+def _lineage_files(output_dir: str) -> list[Path]:
+    """The committed lineage files: renamed-in ``part-*.json`` only, never
+    a dot-prefixed temp file."""
+    p = _lineage_dir(output_dir)
+    return [] if p is None else sorted(p.glob("part-*.json"))
+
+
 def lineage_rows(output_dir: str) -> list[dict]:
     """The committed lineage rows, read on the driver without a Spark job.
     Timestamps stay ISO strings here; ``read_lineage`` types them."""
-    p = _lineage_dir(output_dir)
-    if p is None:
-        return []
-    return [json.loads(f.read_text()) for f in sorted(p.glob("part-*.json"))]
+    return [json.loads(f.read_text()) for f in _lineage_files(output_dir)]
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
-    p = _lineage_dir(output_dir)
-    if p is None:
-        return spark.createDataFrame([], LINEAGE)
-    return spark.read.schema(LINEAGE).json(str(p))
+    """The committed lineage rows as a LINEAGE frame. The scan lists the
+    committed files by name: Spark drops underscore-prefixed directories
+    from a directory listing (and warns that every path was ignored), so
+    ``_lineage/`` itself is never handed to the reader. An empty log is
+    an empty frame and runs no job."""
+    files = _lineage_files(output_dir)
+    if not files:
+        return local_frame(spark, [], LINEAGE)
+    return spark.read.schema(LINEAGE).json([str(f) for f in files])
 
 
 def completed_chunks(spark: SparkSession, output_dir: str) -> set[int]:
@@ -208,14 +216,12 @@ def build_graph_resumable(
         meta_path.parent.mkdir(parents=True, exist_ok=True)
         meta_path.write_text(json.dumps({"n_chunks": n_chunks}))
 
-    cfg, concepts, edges, dictionary = ontology_stage(
-        concepts, edges, synonyms, cfg
-    )
+    stage = ontology_stage(concepts, edges, synonyms, cfg)
+    cfg = stage.cfg
     if ONTOLOGY_CHUNK not in done:
-        direct = build_hierarchy(concepts, edges, cfg)
-        onto = triples_with_key(concept_triples(dictionary, direct, concepts, cfg))
         write_committed_chunk(
-            spark, output_dir, ONTOLOGY_CHUNK, onto, concepts.count(), run_id
+            spark, output_dir, ONTOLOGY_CHUNK, triples_with_key(stage.triples()),
+            stage.concept_count(), run_id,
         )
 
     # Stage the input ONCE, partitioned by the chunk key: one scan of the
@@ -235,7 +241,7 @@ def build_graph_resumable(
             else transcripts.limit(0)
         )
         # pairs_only: batch-local dedup inside the UDF (same as build_graph)
-        pairs = extract_mentions(part, dictionary, cfg, pairs_only=True)
+        pairs = extract_mentions(part, stage.dictionary, cfg, pairs_only=True)
         write_committed_chunk(
             spark, output_dir, chunk, triples_with_key(mention_triples(pairs)),
             input_rows[chunk], run_id,

@@ -36,10 +36,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..config import PipelineConfig
-from ..operators.hierarchy import build_hierarchy
 from ..operators.mentions import extract_mentions
 from .build_graph import (
-    concept_triples,
     mention_triples,
     ontology_stage,
     triple_key_col,
@@ -139,11 +137,9 @@ def refresh_graph(
             "recipe plans/build_graph.py documents for the chunked path"
         )
 
-    cfg, concepts, edges, dictionary = ontology_stage(
-        concepts, edges, synonyms, cfg
-    )
-    direct = build_hierarchy(concepts, edges, cfg)
-    onto = concept_triples(dictionary, direct, concepts, cfg)
+    stage = ontology_stage(concepts, edges, synonyms, cfg)
+    cfg, dictionary = stage.cfg, stage.dictionary
+    onto = stage.triples()
 
     affected = affected_codes(old_triples, dictionary).localCheckpoint(
         eager=True

@@ -76,10 +76,10 @@ CONCEPT_DICTIONARY = StructType(
         StructField("iri", StringType(), nullable=False),
         StructField("code", StringType(), nullable=False),
         StructField("display", StringType()),
-        StructField("synonyms", ArrayType(StringType())),
-        StructField("deprecated", BooleanType()),
-        StructField("imported", BooleanType()),
-        StructField("root", BooleanType()),
+        StructField("synonyms", ArrayType(StringType()), nullable=False),
+        StructField("deprecated", BooleanType(), nullable=False),
+        StructField("imported", BooleanType(), nullable=False),
+        StructField("root", BooleanType(), nullable=False),
     ]
 )
 

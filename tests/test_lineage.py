@@ -18,6 +18,7 @@ from fhir_owl_spark.plans.build_graph import build_graph
 from fhir_owl_spark.plans.lineage import (
     build_graph_resumable,
     completed_chunks,
+    lineage_rows,
     read_lineage,
     read_triples,
 )
@@ -216,6 +217,41 @@ def test_read_skips_uncommitted_chunk(spark, inputs, tmp_path):
         after = triple_set(read_triples(spark, out))
         assert after == before
         assert not any(s.startswith("ORPHAN_") for s, _, _ in after)
+
+
+def test_read_lineage_reads_committed_files(spark, inputs, tmp_path):
+    """read_lineage scans exactly the committed part files (named, so
+    Spark's hidden-directory filter never sees ``_lineage/``), returns the
+    rows lineage_rows reads, skips a dot-prefixed temp file, and reads an
+    empty log without a Spark job."""
+    import uuid
+    from urllib.parse import urlparse
+
+    concepts, edges, synonyms, tdf, cfg = inputs[0]
+    out = str(tmp_path / "graph")
+    sc = spark.sparkContext
+    group = f"read-lineage-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        assert read_lineage(spark, out).collect() == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+    build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=2)
+    log = Path(out, "_lineage")
+    (log / ".part-pending.json.tmp").write_text('{"partition_id": 7}\n')
+    committed = sorted(log.glob("part-*.json"))
+    assert len(committed) == 3
+
+    df = read_lineage(spark, out)
+    assert sorted(Path(urlparse(f).path) for f in df.inputFiles()) == committed
+    keys = ("partition_id", "input_rows", "output_triples", "run_id", "checkpoint_id")
+    rows = df.collect()
+    assert all(r["started_ts"] and r["finished_ts"] for r in rows)
+    assert sorted(tuple(r[k] for k in keys) for r in rows) == sorted(
+        tuple(r[k] for k in keys) for r in lineage_rows(out)
+    )
 
 
 def test_rejects_parquet_lineage_log(spark, tmp_path):

@@ -54,19 +54,35 @@ def test_mentions_no_shuffle_before_udf(spark, transcripts_parquet):
 
 
 def test_isa_parent_join_is_broadcast(spark, transcripts_parquet):
+    import dataclasses
+    import re
+
+    from fhir_owl_spark.operators.hierarchy import build_hierarchy
+    from fhir_owl_spark.plans.build_graph import isa_rows
+
     ont, cfg = fx.pizza_fixture()
     concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
+    # The Spark-column stage (above small_graph_threshold) joins ontology
+    # frames for the is-a parent rule: every such join is broadcast — a
+    # SortMergeJoin means a size hint went missing (both sides are
+    # ontology-bounded by contract; the checkpointed dictionary has no
+    # size stats)
+    cfg = dataclasses.replace(cfg, has_imports=False)
+    dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint()
+    isa_plan = plan_of(
+        isa_rows(dictionary, build_hierarchy(concepts, edges, cfg), concepts, cfg)
+    )
+    assert "BroadcastHashJoin" in isa_plan
+    assert "SortMergeJoin" not in isa_plan, isa_plan
+
+    # Below the gate the stage's dictionary and is-a rows are local
+    # relations: the pipeline plan has no join at all
     tdf = spark.read.parquet(transcripts_parquet)
-    out = build_graph(spark, concepts, edges, synonyms, tdf, cfg)
-    plan = plan_of(out)
-    assert "BroadcastHashJoin" in plan
-    # every ontology join is broadcast — a SortMergeJoin means a size hint
-    # went missing (both sides are ontology-bounded by contract)
-    assert "SortMergeJoin" not in plan, plan
+    plan = plan_of(build_graph(spark, concepts, edges, synonyms, tdf, cfg))
+    tree = plan.split("\n\n")[0]
+    assert "Join" not in tree, plan
     # exactly ONE shuffle exchange in the whole pipeline (the key-hash
     # dedup); all other exchanges must be broadcasts
-    import re
-    tree = plan.split("\n\n")[0]
     shuffles = [l for l in tree.splitlines()
                 if re.search(r"\bExchange\b", l) and "BroadcastExchange" not in l]
     assert len(shuffles) == 1, plan
@@ -488,13 +504,14 @@ def test_bpe_pairs_plan_take_ordered(spark):
 
 
 # Spark jobs per call, counted by this test (Spark 4, local session of
-# conftest.py); the counts repeat exactly. build_graph_count and export:
-# the tree before build_graph, the resumable build and the export shared
-# one ontology stage. resumable and refresh: the tree whose chunk commits
-# observe their counts on the writes and write the lineage row on the
-# driver (resumable 23 → 13, refresh 23 → 17). A change may lower them,
+# conftest.py); the counts repeat exactly. They are the tree whose
+# ontology stage runs as one driver pass below small_graph_threshold:
+# the fixture frames are local relations, so the stage's collects, the
+# dictionary and the is-a rows run no job, and the export none at all
+# (the Spark-column stage measured build_graph_count 9, resumable 13,
+# export 7, refresh 17 on the same calls). A change may lower them,
 # never raise them.
-PARENT_JOBS = {"build_graph_count": 16, "resumable": 13, "export": 7, "refresh": 17}
+PARENT_JOBS = {"build_graph_count": 4, "resumable": 6, "export": 0, "refresh": 12}
 
 
 def test_pipeline_job_counts(spark, tmp_path):
