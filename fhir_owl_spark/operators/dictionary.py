@@ -3,7 +3,10 @@
 Re-expresses the reference's per-concept projection (processEntity,
 /root/reference/src/main/java/au/csiro/fhir/owl/FhirOwlService.java:803-903)
 as pure Column expressions + two tiny groupBy joins. Everything here is
-Catalyst-optimizable; no UDFs.
+Catalyst-optimizable; no UDFs. ``dictionary_rows`` is the same program
+on driver rows: the ontology stage every pipeline shares
+(plans/build_graph.py) runs it, and the column program serves callers
+that hold frames (the oracle queries, streaming).
 
 Scale note: the ontology side is the SMALL side by design (HPO ≈ 18k
 concepts, reference README.md:98-104; even giant ontologies are ≤10^7

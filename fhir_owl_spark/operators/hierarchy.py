@@ -718,8 +718,16 @@ def build_hierarchy(
                 driver_direct_parents(concept_head, edge_head, mode),
                 ONTOLOGY_EDGES,
             )
+    return distributed_direct_parents(concepts, edges, cfg)
 
-    # distributed path: the same set logic as DataFrame programs
+
+def distributed_direct_parents(
+    concepts: DataFrame, edges: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """``build_hierarchy``'s distributed path, the set logic of
+    ``driver_direct_parents`` as DataFrame programs; for a caller that
+    has already applied the size gate."""
+    mode = cfg.equivalence_mode
     dropped = concepts.filter(
         (F.col("iri") == OWL_NOTHING) | F.coalesce("unsatisfiable", F.lit(False))
     ).select("iri")

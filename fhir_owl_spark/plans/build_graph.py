@@ -7,26 +7,24 @@ ontology → dictionary → hierarchy (closure + reduction) → per-concept rows
 
 Every entry point — ``build_graph`` here, ``build_graph_resumable``
 (plans/lineage.py), ``refresh_graph`` (plans/refresh.py) and
-``export_codesystem`` (plans/export.py) — shares one ontology stage,
-``ontology_stage``, and ``mention_triples``, the one mentions-in
-projection. The stage derives has_imports once and yields the concept
-dictionary and the is-a rows (``isa_rows``: parent codes, Nothing and
-deprecated parents dropped, undeclared parents as their IRI). Its gate is
-the hierarchy's, ``small_graph_threshold`` rows on each of concepts,
-edges and synonyms, probed with a bounded collect:
+``export_codesystem`` (plans/export.py) — shares one ontology stage and
+``mention_triples``, the one mentions-in projection. The stage
+(``ontology_rows``) is the reference's one in-memory pass
+(FhirOwlService.java:299-591): the concept and synonym tables are
+collected once, as positional rows, and the driver derives has_imports,
+the dictionary rows (``dictionary_rows``) and the is-a rows
+(``isa_rows``: parent codes, Nothing and deprecated parents dropped,
+undeclared parents as their IRI). The ontology is broadcast-class data
+by contract, and ``linkable_terms`` and the export hold the whole
+dictionary on the driver anyway, so the dictionary runs there at every
+size. The only size gate is the hierarchy's: the direct parents come
+from the driver kernel at or below ``small_graph_threshold`` concept and
+edge rows, else from the distributed program, collected.
 
-  * at or below it (every ontology the benchmarks and fixtures run), the
-    probes are the only collects, and ONE driver pass computes the
-    dictionary rows, the direct parents (the hierarchy's driver kernel)
-    and the is-a rows — the reference's one in-memory pass
-    (FhirOwlService.java:299-591). The export renders those rows with no
-    Spark job; the other entry points get them as Arrow-backed local
-    relations, so their joins and the mention-term collect plan over
-    local data;
-  * above it, the Spark-column dictionary runs under an eager
-    localCheckpoint and ``build_hierarchy`` takes its distributed path
-    on first use of the is-a rows, so a resume whose ontology chunk is
-    committed does no hierarchy work.
+The export renders the rows directly (no Spark job on local-relation
+inputs); ``ontology_stage`` hands the other entry points the dictionary
+and is-a rows as Arrow-backed local relations, so their joins and the
+mention-term collect plan over local data.
 
 Physical shape at 10^12-turn scale:
   * ontology stages touch only the small side (broadcast-class data);
@@ -42,21 +40,18 @@ Physical shape at 10^12-turn scale:
 from __future__ import annotations
 
 import dataclasses
-import functools
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..config import PipelineConfig
-from ..operators.dictionary import (
-    build_concept_dictionary,
-    derive_has_imports,
-    dictionary_rows,
-    parent_code_col,
-    parent_code_str,
+from ..operators.dictionary import dictionary_rows, parent_code_str
+from ..operators.hierarchy import (
+    distributed_direct_parents,
+    driver_direct_parents,
 )
-from ..operators.hierarchy import build_hierarchy, driver_direct_parents
 from ..operators.mentions import extract_mentions
 from ..schemas import CONCEPT_DICTIONARY, OWL_NOTHING
 from ..session import local_frame
@@ -91,8 +86,8 @@ def triples_with_key(triples: DataFrame) -> DataFrame:
 
 
 # is-a rows of emitted non-root concepts (see isa_rows); the nullability
-# is the Spark program's, so both sides of the gate write the same
-# parquet schema
+# is the Spark program's, so the ontology chunk's parquet schema keeps
+# ``subj`` required
 ISA_ROWS = StructType(
     [
         StructField("child_iri", StringType(), nullable=False),
@@ -104,58 +99,64 @@ _CONCEPT_COLS = ("iri", "label", "deprecated", "imported", "unsatisfiable")
 _SYNONYM_COLS = ("iri", "synonym", "prop")
 
 
-@dataclasses.dataclass
-class OntologyStage:
-    """The ontology stage every entry point shares (``ontology_stage``).
+class OntologyRows(NamedTuple):
+    """The ontology stage on the driver (``ontology_rows``)."""
 
-    ``cfg`` carries the derived has_imports. Below the gate ``rows``
-    holds the driver pass's dictionary rows (CONCEPT_DICTIONARY order)
-    and is-a rows (ISA_ROWS order), and the frames are local relations
-    built from them on first use. Above it ``rows`` is None, and on first
-    use the dictionary is the Spark-column program under an eager
-    localCheckpoint and the is-a rows run ``build_hierarchy``, so a
-    resume whose ontology chunk is committed does no hierarchy work."""
+    cfg: PipelineConfig  # has_imports derived
+    dictionary: list[tuple]  # CONCEPT_DICTIONARY order
+    isa: list[tuple] | None  # ISA_ROWS order; None unless hierarchy=True
+    n_concepts: int  # concept table rows
+
+
+class OntologyStage(NamedTuple):
+    """The ontology stage as frames (``ontology_stage``): the dictionary
+    and is-a rows as Arrow-backed local relations."""
 
     cfg: PipelineConfig
-    concepts: DataFrame
-    edges: DataFrame
-    synonyms: DataFrame
-    rows: tuple[list[tuple], list[tuple]] | None
-    n_concepts: int | None  # concept rows, known below the gate
-
-    @functools.cached_property
-    def dictionary(self) -> DataFrame:
-        if self.rows is None:
-            return build_concept_dictionary(
-                self.concepts, self.synonyms, self.cfg
-            ).localCheckpoint(eager=True)
-        return local_frame(
-            self.concepts.sparkSession, self.rows[0], CONCEPT_DICTIONARY
-        )
-
-    @functools.cached_property
-    def isa(self) -> DataFrame:
-        """(child_iri, subj, parent_code) — see ``isa_rows``."""
-        if self.rows is None:
-            direct = build_hierarchy(self.concepts, self.edges, self.cfg)
-            return isa_rows(self.dictionary, direct, self.concepts, self.cfg)
-        return local_frame(self.concepts.sparkSession, self.rows[1], ISA_ROWS)
-
-    def concept_count(self) -> int:
-        if self.n_concepts is None:
-            return self.concepts.count()
-        return self.n_concepts
+    dictionary: DataFrame
+    isa: DataFrame | None
+    n_concepts: int
 
     def triples(self) -> DataFrame:
         """The ontology-side triples (``ontology_triples``)."""
         return ontology_triples(self.dictionary, self.isa)
 
-    def export_rows(self) -> tuple[list[tuple], list[tuple]]:
-        """(dictionary rows, is-a rows) on the driver: the driver pass's
-        own rows below the gate (no Spark job), collected above it."""
-        if self.rows is None:
-            return self.dictionary.collect(), self.isa.collect()
-        return self.rows
+
+def ontology_rows(
+    concepts: DataFrame,
+    edges: DataFrame,
+    synonyms: DataFrame,
+    cfg: PipelineConfig,
+    hierarchy: bool = True,
+) -> OntologyRows:
+    """The ontology stage every entry point shares, in one driver pass.
+
+    Concepts and synonyms are collected once each, as positional tuples
+    (a collect of a local relation runs no Spark job). has_imports is
+    derived ONCE from the concept rows, into the returned cfg; then the
+    dictionary rows (``dictionary_rows``) and, unless ``hierarchy`` is
+    off (a resume whose ontology chunk is committed needs only the
+    dictionary), the direct parents (``_direct_parents``) and the is-a
+    rows (``isa_rows``)."""
+    concept_rows = concepts.select(*_CONCEPT_COLS).collect()
+    synonym_rows = synonyms.select(*_SYNONYM_COLS).collect()
+    cfg = _with_has_imports(cfg, concept_rows)
+    dict_rows = dictionary_rows(concept_rows, synonym_rows, cfg)
+    isa = None
+    if hierarchy:
+        direct = _direct_parents(concepts, edges, concept_rows, cfg)
+        isa = isa_rows(dict_rows, direct, concept_rows, cfg)
+    return OntologyRows(cfg, dict_rows, isa, len(concept_rows))
+
+
+def _with_has_imports(cfg: PipelineConfig, concept_rows: list[tuple]):
+    """cfg with has_imports derived from the concept rows
+    (``derive_has_imports`` on the driver) unless it is set."""
+    if cfg.has_imports is not None:
+        return cfg
+    return dataclasses.replace(
+        cfg, has_imports=any(bool(r[3]) for r in concept_rows)
+    )
 
 
 def ontology_stage(
@@ -163,96 +164,57 @@ def ontology_stage(
     edges: DataFrame,
     synonyms: DataFrame,
     cfg: PipelineConfig,
+    hierarchy: bool = True,
 ) -> OntologyStage:
-    """The ontology stage every entry point shares.
-
-    The gate is ``cfg.small_graph_threshold`` rows on each of concepts,
-    edges and synonyms, probed with the bounded ``limit(th + 1)
-    .collect()`` that ``build_hierarchy`` uses (a probe of a local
-    relation runs no Spark job). At or below it the probes ARE the
-    collects — each table once, as positional tuples — and one driver
-    pass derives has_imports, the dictionary rows
-    (``dictionary_rows``), the direct parents
-    (``driver_direct_parents``) and the is-a rows (``_driver_isa_rows``).
-    Above it has_imports is derived by one probe job and the
-    Spark-column programs run. Either way has_imports is derived ONCE,
-    into the returned cfg."""
-    th = cfg.small_graph_threshold
-    heads = []
-    for df, cols in (
-        (concepts, _CONCEPT_COLS),
-        (edges, ("child_iri", "parent_iri")),
-        (synonyms, _SYNONYM_COLS),
-    ):
-        head = df.select(*cols).limit(th + 1).collect()
-        if len(head) > th:
-            if cfg.has_imports is None:
-                cfg = dataclasses.replace(
-                    cfg, has_imports=derive_has_imports(concepts, cfg)
-                )
-            return OntologyStage(cfg, concepts, edges, synonyms, None, None)
-        heads.append(head)
-    concept_rows, edge_rows, synonym_rows = heads
-    if cfg.has_imports is None:
-        cfg = dataclasses.replace(
-            cfg, has_imports=any(bool(r[3]) for r in concept_rows)
-        )
-    dict_rows = dictionary_rows(concept_rows, synonym_rows, cfg)
-    direct = driver_direct_parents(
-        [(r[0], r[4]) for r in concept_rows], edge_rows, cfg.equivalence_mode
-    )
-    isa = _driver_isa_rows(dict_rows, direct, concept_rows, cfg)
+    """``ontology_rows`` as local relations, for the entry points that
+    join or scan them; the driver rows are released on return."""
+    rows = ontology_rows(concepts, edges, synonyms, cfg, hierarchy)
+    spark = concepts.sparkSession
     return OntologyStage(
-        cfg, concepts, edges, synonyms, (dict_rows, isa), len(concept_rows)
+        rows.cfg,
+        local_frame(spark, rows.dictionary, CONCEPT_DICTIONARY),
+        None if rows.isa is None else local_frame(spark, rows.isa, ISA_ROWS),
+        rows.n_concepts,
     )
+
+
+def _direct_parents(
+    concepts: DataFrame,
+    edges: DataFrame,
+    concept_rows: list[tuple],
+    cfg: PipelineConfig,
+) -> list[tuple[str, str]]:
+    """``build_hierarchy`` on concepts the stage already holds: the same
+    gate (``small_graph_threshold`` concept and edge rows) with the
+    concept side counted for free, so only the edges get the bounded
+    probe. At or below it the driver kernel; above it the distributed
+    program, collected (its output is ontology-scale)."""
+    th = cfg.small_graph_threshold
+    if len(concept_rows) <= th:
+        edge_rows = edges.select("child_iri", "parent_iri").limit(th + 1).collect()
+        if len(edge_rows) <= th:
+            return driver_direct_parents(
+                [(r[0], r[4]) for r in concept_rows],
+                edge_rows,
+                cfg.equivalence_mode,
+            )
+    return distributed_direct_parents(concepts, edges, cfg).collect()
 
 
 def isa_rows(
-    dictionary: DataFrame,
-    direct: DataFrame,
-    concepts: DataFrame,
-    cfg: PipelineConfig,
-) -> DataFrame:
-    """Direct parents of emitted non-root concepts → (child_iri, subj,
-    parent_code). Deprecated parents are dropped WITHOUT relinking and
-    Nothing parents dropped (FhirOwlService.java:620-647); parents keep
-    the code-annotation-free derivation (parent_code_col), and parents
-    outside the concepts table (undeclared) fall back to their IRI.
-    ``cfg.has_imports`` must be derived (``ontology_stage`` does it);
-    ``_driver_isa_rows`` is the same rule on driver rows."""
-    parent_meta = concepts.select(
-        F.col("iri").alias("parent_iri"),
-        parent_code_col(cfg, cfg.has_imports, "iri").alias("parent_code"),
-        F.coalesce("deprecated", F.lit(False)).alias("parent_deprecated"),
-    )
-    isa = (
-        dictionary.filter(~F.col("root"))
-        .select(F.col("iri").alias("child_iri"), F.col("code").alias("subj"))
-        # both sides are ontology-bounded; without the hint Spark has no
-        # size stats for the checkpointed/driver-built inputs and falls
-        # back to SortMergeJoin — two shuffles + sorts for nothing
-        .join(F.broadcast(direct), "child_iri")
-        .filter(F.col("parent_iri") != OWL_NOTHING)
-        .join(F.broadcast(parent_meta), "parent_iri", "left")
-    )
-    if not cfg.include_deprecated:
-        isa = isa.filter(~F.coalesce("parent_deprecated", F.lit(False)))
-    return isa.select(
-        "child_iri",
-        "subj",
-        F.coalesce("parent_code", F.col("parent_iri")).alias("parent_code"),
-    )
-
-
-def _driver_isa_rows(
     dict_rows: list[tuple],
     direct: list[tuple[str, str]],
     concept_rows: list[tuple],
     cfg: PipelineConfig,
 ) -> list[tuple]:
-    """``isa_rows`` on driver rows, with the same join multiplicities:
-    one row per (emitted non-root child row, direct parent, parent
-    concept row)."""
+    """Direct parents of emitted non-root concepts → (child_iri, subj,
+    parent_code) rows. Deprecated parents are dropped WITHOUT relinking
+    unless ``cfg.include_deprecated``, and Nothing parents dropped
+    (FhirOwlService.java:620-647); parents keep the code-annotation-free
+    derivation (``parent_code_str``), and parents outside the concepts
+    table (undeclared) fall back to their IRI. One row per (emitted
+    non-root child, direct parent, parent concept row).
+    ``cfg.has_imports`` must be derived."""
     parent_meta: dict[str, list[tuple[str, bool]]] = {}
     for iri, _label, deprecated, imported, _unsat in concept_rows:
         parent_meta.setdefault(iri, []).append(
@@ -267,7 +229,6 @@ def _driver_isa_rows(
         if root:
             continue
         for parent in parents_of.get(iri, ()):
-            # an undeclared parent falls back to its IRI
             for parent_code, deprecated in parent_meta.get(parent, ((parent, False),)):
                 if not deprecated or cfg.include_deprecated:
                     out.append((iri, code, parent_code))
@@ -341,13 +302,18 @@ def concept_triples(
 ) -> DataFrame:
     """Dictionary + reduced hierarchy → ontology-side triples, for a
     caller holding its own dictionary and hierarchy frames (the
-    pipelines use ``OntologyStage.triples``)."""
-    if cfg.has_imports is None:
-        cfg = dataclasses.replace(
-            cfg, has_imports=derive_has_imports(concepts, cfg)
-        )
+    pipelines use ``ontology_stage``). The three are ontology-scale:
+    they are collected and the parent rule is ``isa_rows``."""
+    concept_rows = concepts.select(*_CONCEPT_COLS).collect()
+    cfg = _with_has_imports(cfg, concept_rows)
+    isa = isa_rows(
+        dictionary.select("iri", "code", "root").collect(),
+        direct_parents.select("child_iri", "parent_iri").collect(),
+        concept_rows,
+        cfg,
+    )
     return ontology_triples(
-        dictionary, isa_rows(dictionary, direct_parents, concepts, cfg)
+        dictionary, local_frame(dictionary.sparkSession, isa, ISA_ROWS)
     )
 
 

@@ -4,17 +4,15 @@
 from the engine's dictionary + hierarchy so a reference user can diff the
 two converters concept-by-concept. The dictionary and the parent rows
 come from the ontology stage build_graph uses (plans/build_graph.py:
-ontology_stage), so the export and the triples cannot disagree.
+ontology_rows), so the export and the triples cannot disagree.
 
 Driver-side by design: the concept list is ontology-scale (broadcast
-class), never transcript-scale. At or below ``small_graph_threshold``
-rows per ontology table the stage is one driver pass and the export
-renders its rows with no further Spark job (none at all on
-local-relation inputs); above it, the Spark-column stage's rows are
-collected. The designation `use` coding mirrors the reference's fixed
-SNOMED 'Synonym' coding (addSynonyms,
-FhirOwlService.java:905-913); the property list mirrors processEntity
-(imported, root, deprecated, parent*).
+class), never transcript-scale. The stage is one driver pass, and the
+export renders its rows directly: on local-relation inputs at or below
+``small_graph_threshold`` it runs no Spark job at all. The designation
+`use` coding mirrors the reference's fixed SNOMED 'Synonym' coding
+(addSynonyms, FhirOwlService.java:905-913); the property list mirrors
+processEntity (imported, root, deprecated, parent*).
 """
 
 from __future__ import annotations
@@ -24,7 +22,7 @@ import json
 from pyspark.sql import DataFrame
 
 from ..config import PipelineConfig
-from .build_graph import ontology_stage
+from .build_graph import ontology_rows
 
 SYNONYM_USE = {
     "system": "http://snomed.info/sct",
@@ -43,16 +41,12 @@ def export_codesystem(
 ) -> dict:
     """→ CodeSystem-shaped dict (resourceType/url/version/…/count/concept[])."""
     cfg = cfg or PipelineConfig()
-    stage = ontology_stage(concepts, edges, synonyms, cfg)
-    cfg = stage.cfg
-    dict_rows, isa = stage.export_rows()
+    cfg, dict_rows, isa, _ = ontology_rows(concepts, edges, synonyms, cfg)
     # the same parent rows build_graph emits as is-a triples
     parents_of: dict[str, list[str]] = {}
     for child_iri, _subj, parent_code in isa:
         parents_of.setdefault(child_iri, []).append(parent_code)
 
-    # positional CONCEPT_DICTIONARY fields: driver tuples and Spark Rows
-    # alike
     concept_list = []
     for iri, code, display, synonyms, deprecated, imported, root in sorted(
         dict_rows, key=lambda r: r[1]

@@ -216,12 +216,14 @@ def build_graph_resumable(
         meta_path.parent.mkdir(parents=True, exist_ok=True)
         meta_path.write_text(json.dumps({"n_chunks": n_chunks}))
 
-    stage = ontology_stage(concepts, edges, synonyms, cfg)
+    stage = ontology_stage(
+        concepts, edges, synonyms, cfg, hierarchy=ONTOLOGY_CHUNK not in done
+    )
     cfg = stage.cfg
     if ONTOLOGY_CHUNK not in done:
         write_committed_chunk(
             spark, output_dir, ONTOLOGY_CHUNK, triples_with_key(stage.triples()),
-            stage.concept_count(), run_id,
+            stage.n_concepts, run_id,
         )
 
     # Stage the input ONCE, partitioned by the chunk key: one scan of the

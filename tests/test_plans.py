@@ -54,29 +54,13 @@ def test_mentions_no_shuffle_before_udf(spark, transcripts_parquet):
 
 
 def test_isa_parent_join_is_broadcast(spark, transcripts_parquet):
-    import dataclasses
     import re
-
-    from fhir_owl_spark.operators.hierarchy import build_hierarchy
-    from fhir_owl_spark.plans.build_graph import isa_rows
 
     ont, cfg = fx.pizza_fixture()
     concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
-    # The Spark-column stage (above small_graph_threshold) joins ontology
-    # frames for the is-a parent rule: every such join is broadcast — a
-    # SortMergeJoin means a size hint went missing (both sides are
-    # ontology-bounded by contract; the checkpointed dictionary has no
-    # size stats)
-    cfg = dataclasses.replace(cfg, has_imports=False)
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint()
-    isa_plan = plan_of(
-        isa_rows(dictionary, build_hierarchy(concepts, edges, cfg), concepts, cfg)
-    )
-    assert "BroadcastHashJoin" in isa_plan
-    assert "SortMergeJoin" not in isa_plan, isa_plan
-
-    # Below the gate the stage's dictionary and is-a rows are local
-    # relations: the pipeline plan has no join at all
+    # The is-a parent rule runs on the driver and the stage hands its rows
+    # over as local relations: the pipeline plan joins no ontology frames
+    # at all, so no join can lose its broadcast hint
     tdf = spark.read.parquet(transcripts_parquet)
     plan = plan_of(build_graph(spark, concepts, edges, synonyms, tdf, cfg))
     tree = plan.split("\n\n")[0]
@@ -505,13 +489,21 @@ def test_bpe_pairs_plan_take_ordered(spark):
 
 # Spark jobs per call, counted by this test (Spark 4, local session of
 # conftest.py); the counts repeat exactly. They are the tree whose
-# ontology stage runs as one driver pass below small_graph_threshold:
-# the fixture frames are local relations, so the stage's collects, the
-# dictionary and the is-a rows run no job, and the export none at all
-# (the Spark-column stage measured build_graph_count 9, resumable 13,
-# export 7, refresh 17 on the same calls). A change may lower them,
-# never raise them.
-PARENT_JOBS = {"build_graph_count": 4, "resumable": 6, "export": 0, "refresh": 12}
+# ontology stage is one driver pass: the fixture frames are local
+# relations, so the stage's collects, the dictionary and the is-a rows
+# run no job, and the export none at all. export_above_gate is the
+# export with small_graph_threshold=0 on materialized (checkpointed)
+# frames: two collects plus the distributed hierarchy. The Spark-column
+# stage measured build_graph_count 9, resumable 13, export 7, refresh
+# 17 and export_above_gate 75 on the same calls. A change may lower
+# them, never raise them.
+PARENT_JOBS = {
+    "build_graph_count": 4,
+    "resumable": 6,
+    "export": 0,
+    "refresh": 12,
+    "export_above_gate": 54,
+}
 
 
 def test_pipeline_job_counts(spark, tmp_path):
@@ -519,8 +511,10 @@ def test_pipeline_job_counts(spark, tmp_path):
     count, a one-chunk resumable build, the CodeSystem export, and a
     refresh of a committed build onto a relabelled release committed
     through write_committed_chunk, each on fresh pizza fixture frames,
-    counted by job group."""
+    counted by job group; and the export above the hierarchy's size gate
+    on materialized frames."""
     import copy
+    import dataclasses
     import uuid
 
     from fhir_owl_spark.plans.export import export_codesystem
@@ -530,6 +524,7 @@ def test_pipeline_job_counts(spark, tmp_path):
         read_triples,
         write_committed_chunk,
     )
+    from fhir_owl_spark.plans.build_graph import materialize_ontology_inputs
     from fhir_owl_spark.plans.refresh import refresh_graph
 
     ont, cfg = fx.pizza_fixture()
@@ -540,11 +535,15 @@ def test_pipeline_job_counts(spark, tmp_path):
     ont2.synonym(ont2.concepts[2]["iri"], "brand new synonym")
     sc = spark.sparkContext
 
-    def jobs(fn, ont=ont) -> int:
+    def jobs(fn, ont=ont, materialized=False) -> int:
+        frames = fx.ontology_dfs(spark, ont)
+        if materialized:
+            frames = materialize_ontology_inputs(*frames)
+        tdf = fx.transcripts_df(spark, turns)
         group = f"job-count-{uuid.uuid4().hex}"
         sc.setJobGroup(group, group)
         try:
-            fn(*fx.ontology_dfs(spark, ont), fx.transcripts_df(spark, turns))
+            fn(*frames, tdf)
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
         return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -569,6 +568,12 @@ def test_pipeline_job_counts(spark, tmp_path):
         ),
         "export": jobs(lambda c, e, s, t: export_codesystem(spark, c, e, s, cfg)),
         "refresh": jobs(refresh, ont=ont2),
+        "export_above_gate": jobs(
+            lambda c, e, s, t: export_codesystem(
+                spark, c, e, s, dataclasses.replace(cfg, small_graph_threshold=0)
+            ),
+            materialized=True,
+        ),
     }
     print("job counts", got)
     assert all(got[k] <= PARENT_JOBS[k] for k in PARENT_JOBS), (got, PARENT_JOBS)

@@ -19,10 +19,11 @@ from hypothesis import strategies as st
 
 from fhir_owl_spark import fixtures as fx
 from fhir_owl_spark.config import PipelineConfig
+from fhir_owl_spark.operators.dictionary import build_concept_dictionary
 from fhir_owl_spark.operators.hierarchy import HierarchyCycleError
 from fhir_owl_spark.plans.build_graph import build_graph, ontology_stage
 from fhir_owl_spark.plans.export import export_codesystem
-from fhir_owl_spark.schemas import OWL_NOTHING, OWL_THING
+from fhir_owl_spark.schemas import CONCEPT_DICTIONARY, OWL_NOTHING, OWL_THING
 
 NS = "http://example.org/prop#"
 LABEL_POOL = ["alpha beta", "Gamma", "delta", "EPSILON zeta", "eta", "wiki", "Theta"]
@@ -334,9 +335,11 @@ def test_dangling_parent_not_rerooted_both_paths(spark):
 
 
 # ---------------------------------------------------------------------------
-# The ontology stage on both sides of its gate: the driver pass (default
-# small_graph_threshold) and the Spark-column stage (threshold 0) must give
-# the same dictionary rows, is-a rows and export, and agree with the model.
+# The ontology stage on both sides of the hierarchy's gate: the driver
+# kernel (default small_graph_threshold) and the distributed hierarchy
+# (threshold 0) must give the same dictionary rows, is-a rows and export,
+# the Spark-column dictionary the stage's dictionary rows, and all of them
+# agree with the model.
 # ---------------------------------------------------------------------------
 
 
@@ -382,17 +385,22 @@ def _export_triples(cs) -> set:
     return out
 
 
+def _dictionary_key(frame):
+    return sorted(
+        (r[0], r[1], r[2], tuple(r[3]), r[4], r[5], r[6])
+        for r in frame.select(*CONCEPT_DICTIONARY.fieldNames()).collect()
+    )
+
+
 def _stage_both_paths(spark, ont, cfg):
-    """Dictionary rows, is-a rows and export of the driver pass; asserts
-    the Spark-column stage gives the same three."""
+    """Dictionary rows, is-a rows and export of the stage with the driver
+    hierarchy; asserts the distributed hierarchy gives the same three and
+    the Spark-column dictionary (``build_concept_dictionary``) the same
+    dictionary rows."""
     sides = []
     for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
         stage = ontology_stage(*fx.ontology_dfs(spark, ont), c)
-        assert (stage.rows is None) == (c.small_graph_threshold == 0)
-        dictionary = sorted(
-            (r[0], r[1], r[2], tuple(r[3]), r[4], r[5], r[6])
-            for r in stage.dictionary.collect()
-        )
+        dictionary = _dictionary_key(stage.dictionary)
         isa = sorted(tuple(r) for r in stage.isa.collect())
         cs = export_codesystem(spark, *fx.ontology_dfs(spark, ont), c)
         sides.append((dictionary, isa, cs))
@@ -400,6 +408,10 @@ def _stage_both_paths(spark, ont, cfg):
     assert d_rows == s_rows
     assert d_isa == s_isa
     assert _export_key(d_cs) == _export_key(s_cs)
+    concepts, _, synonyms = fx.ontology_dfs(spark, ont)
+    assert _dictionary_key(
+        build_concept_dictionary(concepts, synonyms, stage.cfg)
+    ) == d_rows
     return d_rows, d_isa, d_cs
 
 
@@ -426,8 +438,8 @@ def _assert_stage_equals_model(ont, cfg, rows, isa, cs):
 def test_ontology_stage_paths_equal_model(spark, ont, cfg):
     """Random ontologies × code_prop, code_replace, main_namespaces,
     labels_to_exclude, include_deprecated and has_imports: both sides of
-    the gate and the model give the same dictionary, is-a rows and
-    export."""
+    the hierarchy's gate, the Spark-column dictionary and the model give
+    the same dictionary, is-a rows and export."""
     _assert_stage_equals_model(ont, cfg, *_stage_both_paths(spark, ont, cfg))
 
 
@@ -480,7 +492,8 @@ def _empty_label():
 )
 def test_ontology_stage_edge_case_both_paths(spark, case, include_deprecated):
     """One input per corner of the dictionary and parent rules. Both
-    sides of the gate agree on all of them; the model agrees only on the
+    hierarchy paths and the Spark-column dictionary agree on all of them;
+    the model agrees only on the
     deprecated parent. On the other four it departs from the engine (an
     IRI code where the shortform is "", the shortform of an undeclared
     parent, owl:Thing for a child of an undeclared owl:Nothing, the code
