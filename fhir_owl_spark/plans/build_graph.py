@@ -325,11 +325,11 @@ def materialize_ontology_inputs(
     exact input schema).
 
     No pipeline calls this. Checkpointed frames are no longer local
-    relations, so every bounded collect of the ontology stage becomes a
-    job. Spark jobs per call without → with this call first, its own job
-    included (Spark 4, local mode, pizza fixture frames):
-    ``build_graph(...).count()`` 4 → 12, a one-chunk
-    ``build_graph_resumable`` 6 → 14 and ``export_codesystem`` 0 → 8.
+    relations, so every collect and bounded probe of the ontology stage
+    becomes a job. Spark jobs per call without → with this call first,
+    its own jobs included (Spark 4, local mode, pizza fixture frames):
+    ``build_graph(...).count()`` 4 → 10, a one-chunk
+    ``build_graph_resumable`` 6 → 12 and ``export_codesystem`` 0 → 6.
     Kept only for the benchmark's per-layer probes (perfbench/probes.py),
     which time the ontology frames as their own layer."""
     concepts = concepts.localCheckpoint(eager=False)
