@@ -639,7 +639,7 @@ def q_context_scores(spark, sf_dir) -> DataFrame:
     from .operators.hierarchy import build_hierarchy
     from .operators.mentions import score_mentions_with_context
 
-    dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint()
+    dictionary = build_concept_dictionary(concepts, synonyms, cfg)
     direct = build_hierarchy(concepts, edges, cfg)
     code_of = dictionary.select("iri", "code")
     isa = (

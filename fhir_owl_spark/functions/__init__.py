@@ -1,7 +1,9 @@
 """Scalar/column function surface (SURVEY.md §2.3).
 
 One importable namespace for every reusable Column-expression function in
-the engine — all JVM-side, Catalyst-optimizable, UDF-free.
+the engine — all JVM-side, Catalyst-optimizable, UDF-free. The ontology
+dictionary's rules are not among them: they run in one driver pass
+(operators/dictionary.py), of which only ``shortform`` has a Column form.
 """
 
 from ..operators.dedup import (  # noqa: F401
@@ -9,13 +11,7 @@ from ..operators.dedup import (  # noqa: F401
     simhash_col,
     word_shingles_col,
 )
-from ..operators.dictionary import (  # noqa: F401
-    imported_col,
-    local_code_col,
-    parent_code_col,
-    shortform,
-    special_display_col,
-)
+from ..operators.dictionary import shortform  # noqa: F401
 from ..operators.similarity import cosine_expr  # noqa: F401
 from ..operators.sampling import hash_bucket  # noqa: F401
 from ..operators.text import (  # noqa: F401
@@ -33,15 +29,11 @@ __all__ = [
     "redact_pii_col",
     "cosine_expr",
     "fingerprint_col",
-    "imported_col",
     "lang_id_col",
-    "local_code_col",
     "ngram_jaccard_col",
-    "parent_code_col",
     "quality_features",
     "shortform",
     "simhash_col",
-    "special_display_col",
     "whitespace_token_count",
     "word_shingles_col",
 ]

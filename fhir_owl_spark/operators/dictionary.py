@@ -1,32 +1,43 @@
-"""Concept canonicalization — the broadcast ontology dictionary.
+"""Concept canonicalization — the ontology dictionary.
 
 Re-expresses the reference's per-concept projection (processEntity,
 /root/reference/src/main/java/au/csiro/fhir/owl/FhirOwlService.java:803-903)
-as pure Column expressions + two tiny groupBy joins. Everything here is
-Catalyst-optimizable; no UDFs. ``dictionary_rows`` is the same program
-on driver rows: the ontology stage every pipeline shares
-(plans/build_graph.py) runs it, and the column program serves callers
-that hold frames (the oracle queries, streaming).
+the way the reference runs it: one in-memory pass over the concept and
+synonym rows (``dictionary_rows``). ``dictionary_pass`` collects the two
+tables once each and runs it; the ontology stage every pipeline shares
+(plans/build_graph.py) and ``build_concept_dictionary`` — the frame form
+for callers that hold frames (the oracle queries, streaming) — both
+call it, so each dictionary rule is written once.
 
 Scale note: the ontology side is the SMALL side by design (HPO ≈ 18k
 concepts, reference README.md:98-104; even giant ontologies are ≤10^7
-rows). Every join of this output against transcript-scale data must be a
-broadcast hash join — callers go through ``broadcast_dictionary``.
+rows), which is what makes the driver pass — and the collect of the
+whole dictionary that ``linkable_terms`` and the export need anyway —
+affordable. Every join of this output against transcript-scale data must
+be a broadcast hash join — callers go through ``broadcast_dictionary``.
 """
 
 from __future__ import annotations
+
+import dataclasses
 
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
 from ..schemas import (
+    CONCEPT_DICTIONARY,
     OWL_NOTHING,
     SPECIAL_DISPLAYS,
     TOP_ENTITIES,
 )
+from ..session import local_frame
 
 # OWL API IRI.getShortForm: fragment after '#', else last '/' segment
 SHORTFORM_REGEX = r"([^/#]+)$"
+
+# the positional rows the dictionary pass collects
+CONCEPT_COLS = ("iri", "label", "deprecated", "imported", "unsatisfiable")
+SYNONYM_COLS = ("iri", "synonym", "prop")
 
 
 def shortform(col):
@@ -40,185 +51,69 @@ def shortform_str(iri: str) -> str:
     return iri[max(iri.rfind("/"), iri.rfind("#")) + 1 :]
 
 
-def derive_has_imports(concepts: DataFrame, cfg: PipelineConfig) -> bool:
-    """hasImports (FhirOwlService.java:505): with no imports, nothing is
-    imported regardless of set membership. One tiny action on the small
-    ontology table."""
+def with_has_imports(cfg: PipelineConfig, concept_rows: list[tuple]):
+    """cfg with has_imports derived unless it is set — hasImports
+    (FhirOwlService.java:505): true iff some concept row (CONCEPT_COLS
+    order) is imported; with no imports nothing is imported regardless
+    of set membership."""
     if cfg.has_imports is not None:
-        return cfg.has_imports
-    row = concepts.agg(F.max(F.coalesce("imported", F.lit(False))).alias("h")).first()
-    return bool(row["h"]) if row and row["h"] is not None else False
-
-
-def imported_col(cfg: PipelineConfig, has_imports: bool, iri_col="iri"):
-    """isImported (FhirOwlService.java:784-801): prefix mode when main
-    namespaces are configured, else set-difference membership (the
-    ``imported`` column), always false when the ontology has no imports."""
-    if cfg.main_namespaces:
-        cond = F.lit(False)
-        for ns in cfg.main_namespaces:
-            cond = cond | F.col(iri_col).startswith(ns)
-        return ~cond
-    if not has_imports:
-        return F.lit(False)
-    return F.coalesce(F.col("imported"), F.lit(False))
+        return cfg
+    return dataclasses.replace(
+        cfg, has_imports=any(bool(r[3]) for r in concept_rows)
+    )
 
 
 def imported_flag(iri: str, imported: bool | None, cfg: PipelineConfig) -> bool:
-    """``imported_col`` for one driver row (``cfg.has_imports`` derived)."""
+    """isImported (FhirOwlService.java:784-801): prefix mode when main
+    namespaces are configured, else set-difference membership (the
+    ``imported`` column), always false when the ontology has no imports
+    (``cfg.has_imports`` derived)."""
     if cfg.main_namespaces:
         return not any(iri.startswith(ns) for ns in cfg.main_namespaces)
     return bool(cfg.has_imports and imported)
 
 
 def local_code_str(code: str, cfg: PipelineConfig) -> str:
-    """``local_code_col`` for one driver value (Spark's replace leaves
-    the string as it is when the search string is empty)."""
+    """codeReplace on LOCAL codes only — literal, non-regex replace
+    (FhirOwlService.java:844-846); an empty search string leaves the
+    code as it is."""
     if cfg.code_replace and cfg.code_replace[0]:
         return code.replace(*cfg.code_replace)
     return code
 
 
-def local_code_col(code_col, cfg: PipelineConfig):
-    """codeReplace on LOCAL codes only — literal, non-regex replace
-    (FhirOwlService.java:844-846; F.replace keeps literal semantics)."""
-    if cfg.code_replace:
-        old, new = cfg.code_replace
-        return F.replace(code_col, F.lit(old), F.lit(new))
-    return code_col
+def parent_code_str(iri: str, imported: bool | None, cfg: PipelineConfig) -> str:
+    """Parent-code asymmetry: parents NEVER use the code annotation —
+    imported ⇒ full IRI, local ⇒ shortform + codeReplace
+    (addHierarchyFields, FhirOwlService.java:633-647 vs processEntity
+    :834-841). ``cfg.has_imports`` derived."""
+    if imported_flag(iri, imported, cfg):
+        return iri
+    return local_code_str(shortform_str(iri), cfg)
 
 
-def special_display_col(code_col):
-    """Hardcoded top-entity displays keyed on the CODE — they only fire
-    when the code is the full IRI, i.e. for imported top entities
-    (FhirOwlService.java:852-858)."""
-    expr = F.lit(None).cast("string")
-    for full_iri, disp in SPECIAL_DISPLAYS.items():
-        expr = F.when(code_col == full_iri, disp).otherwise(expr)
-    return expr
+def dictionary_pass(
+    concepts: DataFrame, synonyms: DataFrame, cfg: PipelineConfig
+) -> tuple[PipelineConfig, list[tuple], list[tuple]]:
+    """The dictionary step of the ontology stage: collect the concept
+    (CONCEPT_COLS) and synonym (SYNONYM_COLS) rows once each — a collect
+    of a local relation runs no Spark job — derive has_imports and run
+    ``dictionary_rows``. → (cfg with has_imports derived, concept rows,
+    dictionary rows)."""
+    concept_rows = concepts.select(*CONCEPT_COLS).collect()
+    synonym_rows = synonyms.select(*SYNONYM_COLS).collect()
+    cfg = with_has_imports(cfg, concept_rows)
+    return cfg, concept_rows, dictionary_rows(concept_rows, synonym_rows, cfg)
 
 
 def build_concept_dictionary(
     concepts: DataFrame, synonyms: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """ontology_concepts + ontology_synonyms → CONCEPT_DICTIONARY rows
-    (one per EMITTED concept).
-
-    Stages (all on the small side; one shuffle on iri for the groupBys):
-      F1/F2  drop unsatisfiable + owl:Nothing
-      F3     drop deprecated unless include_deprecated
-      F5     imported flag
-      F7     code := code-annotation | (imported ? IRI : shortform), then
-             codeReplace on local codes only
-      A1     preferred term = lexicographic min of display-prop literals
-             minus excluded labels (TreeSet.first, FhirOwlService.java:706-724)
-      A2     synonyms = union over synonym props minus exclusions minus
-             the display (FhirOwlService.java:726-742); empty-preferred
-             promotion uses deterministic min (see fixtures docstring)
-      F8/A4  display fallback: label column (closure display map analog)
-             → special top-entity display → code
-    """
-    has_imports = derive_has_imports(concepts, cfg)
-    excluded = list(cfg.labels_to_exclude)
-
-    base = concepts.filter(
-        (F.col("iri") != OWL_NOTHING) & ~F.coalesce("unsatisfiable", F.lit(False))
-    )
-    if not cfg.include_deprecated:
-        base = base.filter(~F.coalesce("deprecated", F.lit(False)))
-
-    syn = synonyms.filter(F.col("synonym").isNotNull())
-    if excluded:
-        not_excluded = ~F.col("synonym").isin(excluded)
-    else:
-        not_excluded = F.lit(True)
-
-    # A1 + A2 + F7 in ONE conditional-aggregation pass — one shuffle on iri
-    # and one join instead of three of each (aggregates skip the rows their
-    # WHEN masks to null; collect_set drops nulls, preserving the old
-    # per-predicate-filtered semantics exactly):
-    #   A1 preferred = min display-prop literal (TreeSet.first,
-    #      FhirOwlService.java:706-724)
-    #   A2 syn_set/min_syn over the synonym props (:726-742)
-    #   F7 code annotation = deterministic min over candidates (the
-    #      reference takes the first it sees, :695-704)
-    is_display = (F.col("prop") == cfg.display_prop) & not_excluded
-    is_syn = F.col("prop").isin(list(cfg.synonym_props)) & not_excluded
-    aggs = [
-        F.min(F.when(is_display, F.col("synonym"))).alias("preferred"),
-        F.collect_set(F.when(is_syn, F.col("synonym"))).alias("syn_set"),
-        F.min(F.when(is_syn, F.col("synonym"))).alias("min_syn"),
-    ]
-    if cfg.code_prop:
-        aggs.append(
-            F.min(F.when(F.col("prop") == cfg.code_prop, F.col("synonym"))).alias(
-                "code_anno"
-            )
-        )
-    per_iri = syn.groupBy("iri").agg(*aggs)
-
-    df = base.join(per_iri, "iri", "left")
-    if not cfg.code_prop:
-        df = df.withColumn("code_anno", F.lit(None).cast("string"))
-
-    imported = imported_col(cfg, has_imports).alias("imported_flag")
-    df = df.withColumn("imported_flag", imported)
-
-    iri_code = F.when(F.col("imported_flag"), F.col("iri")).otherwise(shortform(F.col("iri")))
-    raw_code = F.coalesce(F.col("code_anno"), iri_code)
-    code = F.when(
-        F.col("imported_flag"), raw_code
-    ).otherwise(local_code_col(raw_code, cfg))
-    df = df.withColumn("code", code)
-
-    syn_set = F.coalesce(F.col("syn_set"), F.array().cast("array<string>"))
-    has_syns = F.size(syn_set) > 0
-    display = (
-        F.when(F.col("preferred").isNotNull(), F.col("preferred"))
-        .when(has_syns, F.col("min_syn"))
-        .otherwise(
-            F.coalesce(
-                F.col("label"),
-                special_display_col(F.col("code")),
-                F.col("code"),
-            )
-        )
-    )
-    df = df.withColumn("display", display)
-    # synonyms minus the chosen display (covers both the normal removal and
-    # the promoted-synonym removal)
-    df = df.withColumn(
-        "synonyms", F.array_sort(F.array_except(syn_set, F.array(F.col("display"))))
-    )
-    df = df.withColumn("root", F.col("iri").isin(list(TOP_ENTITIES)))
-
-    return df.select(
-        "iri",
-        "code",
-        "display",
-        "synonyms",
-        F.coalesce("deprecated", F.lit(False)).alias("deprecated"),
-        F.col("imported_flag").alias("imported"),
-        "root",
-    )
-
-
-def parent_code_col(cfg: PipelineConfig, has_imports: bool, iri_col="iri"):
-    """Parent-code asymmetry: parents NEVER use the code annotation —
-    imported ⇒ full IRI, local ⇒ shortform + codeReplace
-    (addHierarchyFields, FhirOwlService.java:633-647 vs processEntity :834-841).
-    """
-    imported = imported_col(cfg, has_imports, iri_col)
-    return F.when(imported, F.col(iri_col)).otherwise(
-        local_code_col(shortform(F.col(iri_col)), cfg)
-    )
-
-
-def parent_code_str(iri: str, imported: bool | None, cfg: PipelineConfig) -> str:
-    """``parent_code_col`` for one driver row (``cfg.has_imports`` derived)."""
-    if imported_flag(iri, imported, cfg):
-        return iri
-    return local_code_str(shortform_str(iri), cfg)
+    (one per EMITTED concept), as an Arrow-backed local relation: the
+    stage's ``dictionary_pass``, for callers that hold frames."""
+    _, _, rows = dictionary_pass(concepts, synonyms, cfg)
+    return local_frame(concepts.sparkSession, rows, CONCEPT_DICTIONARY)
 
 
 def dictionary_rows(
@@ -226,19 +121,33 @@ def dictionary_rows(
     synonym_rows: list[tuple],
     cfg: PipelineConfig,
 ) -> list[tuple]:
-    """``build_concept_dictionary`` on the driver, row for row →
-    CONCEPT_DICTIONARY tuples. concept_rows are (iri, label, deprecated,
-    imported, unsatisfiable), synonym_rows (iri, synonym, prop);
-    ``cfg.has_imports`` must already be derived.
+    """Concept and synonym rows → CONCEPT_DICTIONARY tuples.
+    concept_rows are (iri, label, deprecated, imported, unsatisfiable),
+    synonym_rows (iri, synonym, prop); ``cfg.has_imports`` must already
+    be derived.
 
-    The same stages (F1–F8, A1–A4) with the Spark program's value
-    semantics: min is the binary string order, a code-annotation
-    candidate is never excluded, a label of "" still wins over the
-    code, and one output row is emitted per surviving concept row."""
+    Stages:
+      F1/F2  drop unsatisfiable + owl:Nothing
+      F3     drop deprecated unless include_deprecated
+      F5     imported flag (``imported_flag``)
+      F7     code := code-annotation | (imported ? IRI : shortform), then
+             codeReplace on local codes only; the annotation is the
+             min over candidates (the reference takes the first it sees,
+             FhirOwlService.java:695-704) and is never excluded
+      A1     preferred term = min display-prop literal minus excluded
+             labels (TreeSet.first, FhirOwlService.java:706-724)
+      A2     synonyms = union over synonym props minus exclusions minus
+             the display (FhirOwlService.java:726-742); empty-preferred
+             promotion uses deterministic min (see fixtures docstring)
+      F8/A4  display fallback: label column (closure display map analog;
+             a label of "" still wins) → special top-entity display, keyed
+             on the CODE so it fires only for imported top entities
+             (FhirOwlService.java:852-858) → code
+    min is the code-point order (Spark's binary string order); one output
+    row is emitted per surviving concept row."""
     excluded = set(cfg.labels_to_exclude)
     synonym_props = set(cfg.synonym_props)
-    # iri → [preferred, synonym set, code annotation]; one pass, the
-    # driver twin of the conditional aggregation
+    # iri → [preferred, synonym set, code annotation], in one pass
     per_iri: dict[str, list] = {}
     for iri, syn, prop in synonym_rows:
         if syn is None:

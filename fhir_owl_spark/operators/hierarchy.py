@@ -210,8 +210,9 @@ def transitive_closure(
             # distinct/out-degree stats in pandas instead of paying the
             # count_distinct Expand aggregation (3x the rows through two
             # exchanges; measured ~2x the plain count's cost).
-            edge_pdf = raw.toPandas()
-            pairs_pdf = edge_pdf.drop_duplicates()
+            # the raw frame is dropped as soon as its dedup exists, so
+            # the two never peak together in driver memory
+            pairs_pdf = raw.toPandas().drop_duplicates()
             n_pairs = len(pairs_pdf)
             broadcast_edges = True
             single_parent = (
@@ -634,8 +635,7 @@ def driver_direct_parents(
     Drops owl:Nothing, unsatisfiable nodes and self-loops, completes
     every parentless non-top node with an edge to owl:Thing, then
     reduces with ``_driver_hierarchy``. The one driver-side statement of
-    these semantics: ``build_hierarchy`` and the ontology stage of
-    plans/build_graph.py both call it."""
+    these semantics, behind the gate ``small_direct_parents``."""
     # positional access throughout: ~3× cheaper than by-name Row lookup
     # at HPO scale
     dropped = {
@@ -695,38 +695,52 @@ def build_hierarchy(
     has Thing among its superclasses (FhirOwlService.java:532-533) — this
     is what terminates every reference concept chain at Thing.
     """
-    mode = cfg.equivalence_mode
+    from ..schemas import ONTOLOGY_EDGES
+    from ..session import local_frame
+
+    direct = small_direct_parents(concepts, edges, cfg)
+    if direct is None:
+        return distributed_direct_parents(concepts, edges, cfg)
+    return local_frame(concepts.sparkSession, direct, ONTOLOGY_EDGES)
+
+
+def small_direct_parents(
+    concepts: DataFrame,
+    edges: DataFrame,
+    cfg: PipelineConfig,
+    concept_rows: list[tuple] | None = None,
+) -> list[tuple[str, str]] | None:
+    """The hierarchy's size gate, for every caller: at or below
+    ``small_graph_threshold`` concept rows and edge rows, the driver
+    kernel's direct parents (``driver_direct_parents``); above it None,
+    and the caller runs ``distributed_direct_parents``.
+
+    Each side is probed with a bounded ``limit(threshold + 1).collect()``,
+    the edges first; a caller already holding every concept row as
+    (iri, unsatisfiable) passes ``concept_rows`` and the concepts need no
+    probe. The ontology side is broadcast-class data by contract (the
+    reference holds the whole graph in one JVM — GraphUtils.java:72-74);
+    bounded collects on the base tables beat a tree of tiny broadcast
+    joins, which costs seconds of pure scheduling latency at this size."""
     th = cfg.small_graph_threshold
-
-    # Driver path: collect the RAW bounded inputs and assemble
-    # dropped/nodes/parentless in Python. The ontology side is
-    # broadcast-class data by contract (the reference holds the whole
-    # graph in one JVM — GraphUtils.java:72-74); two bounded collects on
-    # the base tables beat a tree of tiny broadcast joins + a global
-    # limit, which costs seconds of pure scheduling latency at this size.
-    edge_head = edges.select("child_iri", "parent_iri").limit(th + 1).collect()
-    if len(edge_head) <= th:
-        concept_head = (
-            concepts.select("iri", "unsatisfiable").limit(th + 1).collect()
-        )
-        if len(concept_head) <= th:
-            from ..schemas import ONTOLOGY_EDGES
-            from ..session import local_frame
-
-            return local_frame(
-                concepts.sparkSession,
-                driver_direct_parents(concept_head, edge_head, mode),
-                ONTOLOGY_EDGES,
-            )
-    return distributed_direct_parents(concepts, edges, cfg)
+    if concept_rows is not None and len(concept_rows) > th:
+        return None
+    edge_rows = edges.select("child_iri", "parent_iri").limit(th + 1).collect()
+    if len(edge_rows) > th:
+        return None
+    if concept_rows is None:
+        concept_rows = concepts.select("iri", "unsatisfiable").limit(th + 1).collect()
+        if len(concept_rows) > th:
+            return None
+    return driver_direct_parents(concept_rows, edge_rows, cfg.equivalence_mode)
 
 
 def distributed_direct_parents(
     concepts: DataFrame, edges: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """``build_hierarchy``'s distributed path, the set logic of
-    ``driver_direct_parents`` as DataFrame programs; for a caller that
-    has already applied the size gate."""
+    ``driver_direct_parents`` as DataFrame programs; for a caller whose
+    size gate (``small_direct_parents``) said no."""
     mode = cfg.equivalence_mode
     dropped = concepts.filter(
         (F.col("iri") == OWL_NOTHING) | F.coalesce("unsatisfiable", F.lit(False))

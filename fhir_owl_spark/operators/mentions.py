@@ -156,29 +156,23 @@ def linkable_terms(dictionary: DataFrame, cfg: PipelineConfig) -> list[tuple[str
     d = dictionary
     if not cfg.link_deprecated:
         d = d.filter(~F.col("deprecated"))
-    terms = (
-        d.select(
-            F.explode(
-                F.array_union(
-                    F.array(F.col("display")), F.coalesce("synonyms", F.array())
-                )
-            ).alias("term"),
-            "code",
-        )
-        .filter(F.col("term").isNotNull())
-        .select(F.lower("term").alias("term"), "code")
-        .filter(F.length("term") >= cfg.min_term_chars)
-    )
+    # one projection, which the optimizer folds into a local relation (no
+    # job); the explode, the null/length filter, the stop terms and the
+    # dedup run on the collected rows. Lower-casing stays Spark's; Spark
+    # ``length`` and Python ``len`` both count code points.
+    rows = d.select(
+        F.lower("display"), F.transform("synonyms", F.lower), "code"
+    ).collect()
     stop = {t.lower() for t in cfg.link_stop_terms}
-    # dedup DRIVER-side (a Python set over the collected rows): the
-    # collect is ontology-bounded with or without a distinct, and
-    # dropping the distinct removes one Exchange + aggregate from every
-    # mention-pass construction (mentions/kg_build/pmi/refresh all pay
-    # this collect) — the explode→collect is then a single map-only job
-    pairs = sorted(
-        {(r[0], r[1]) for r in terms.collect() if r[0] not in stop}
+    n = cfg.min_term_chars
+    return sorted(
+        {
+            (term, code)
+            for display, synonyms, code in rows
+            for term in [display, *(synonyms or ())]
+            if term is not None and len(term) >= n and term not in stop
+        }
     )
-    return pairs
 
 
 # ---------------------------------------------------------------------------

@@ -11,15 +11,17 @@ Every entry point — ``build_graph`` here, ``build_graph_resumable``
 ``mention_triples``, the one mentions-in projection. The stage
 (``ontology_rows``) is the reference's one in-memory pass
 (FhirOwlService.java:299-591): the concept and synonym tables are
-collected once, as positional rows, and the driver derives has_imports,
-the dictionary rows (``dictionary_rows``) and the is-a rows
-(``isa_rows``: parent codes, Nothing and deprecated parents dropped,
-undeclared parents as their IRI). The ontology is broadcast-class data
-by contract, and ``linkable_terms`` and the export hold the whole
-dictionary on the driver anyway, so the dictionary runs there at every
-size. The only size gate is the hierarchy's: the direct parents come
-from the driver kernel at or below ``small_graph_threshold`` concept and
-edge rows, else from the distributed program, collected.
+collected once, as positional rows, and the driver derives has_imports
+and the dictionary rows (``dictionary_pass``, the one dictionary
+program, which ``build_concept_dictionary`` runs as well) and the is-a
+rows (``isa_rows``: parent codes, Nothing and deprecated parents
+dropped, undeclared parents as their IRI). The ontology is
+broadcast-class data by contract, and ``linkable_terms`` and the export
+hold the whole dictionary on the driver anyway, so the dictionary runs
+there at every size. The only size gate is the hierarchy's, decided in
+operators/hierarchy.py (``small_direct_parents``): the direct parents
+come from the driver kernel below it, else from the distributed
+program, collected.
 
 The export renders the rows directly (no Spark job on local-relation
 inputs); ``ontology_stage`` hands the other entry points the dictionary
@@ -39,7 +41,6 @@ Physical shape at 10^12-turn scale:
 
 from __future__ import annotations
 
-import dataclasses
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -47,11 +48,13 @@ from pyspark.sql.types import StringType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..config import PipelineConfig
-from ..operators.dictionary import dictionary_rows, parent_code_str
-from ..operators.hierarchy import (
-    distributed_direct_parents,
-    driver_direct_parents,
+from ..operators.dictionary import (
+    CONCEPT_COLS,
+    dictionary_pass,
+    parent_code_str,
+    with_has_imports,
 )
+from ..operators.hierarchy import distributed_direct_parents, small_direct_parents
 from ..operators.mentions import extract_mentions
 from ..schemas import CONCEPT_DICTIONARY, OWL_NOTHING
 from ..session import local_frame
@@ -95,8 +98,6 @@ ISA_ROWS = StructType(
         StructField("parent_code", StringType(), nullable=False),
     ]
 )
-_CONCEPT_COLS = ("iri", "label", "deprecated", "imported", "unsatisfiable")
-_SYNONYM_COLS = ("iri", "synonym", "prop")
 
 
 class OntologyRows(NamedTuple):
@@ -131,32 +132,24 @@ def ontology_rows(
 ) -> OntologyRows:
     """The ontology stage every entry point shares, in one driver pass.
 
-    Concepts and synonyms are collected once each, as positional tuples
-    (a collect of a local relation runs no Spark job). has_imports is
-    derived ONCE from the concept rows, into the returned cfg; then the
-    dictionary rows (``dictionary_rows``) and, unless ``hierarchy`` is
-    off (a resume whose ontology chunk is committed needs only the
-    dictionary), the direct parents (``_direct_parents``) and the is-a
-    rows (``isa_rows``)."""
-    concept_rows = concepts.select(*_CONCEPT_COLS).collect()
-    synonym_rows = synonyms.select(*_SYNONYM_COLS).collect()
-    cfg = _with_has_imports(cfg, concept_rows)
-    dict_rows = dictionary_rows(concept_rows, synonym_rows, cfg)
+    ``dictionary_pass`` collects concepts and synonyms once each, as
+    positional tuples, derives has_imports ONCE into the returned cfg and
+    builds the dictionary rows. Unless ``hierarchy`` is off (a resume
+    whose ontology chunk is committed needs only the dictionary), the
+    direct parents follow — the hierarchy's gate (``small_direct_parents``)
+    on the concept rows already held, else the distributed program,
+    collected (its output is ontology-scale) — and the is-a rows
+    (``isa_rows``)."""
+    cfg, concept_rows, dict_rows = dictionary_pass(concepts, synonyms, cfg)
     isa = None
     if hierarchy:
-        direct = _direct_parents(concepts, edges, concept_rows, cfg)
+        direct = small_direct_parents(
+            concepts, edges, cfg, [(r[0], r[4]) for r in concept_rows]
+        )
+        if direct is None:
+            direct = distributed_direct_parents(concepts, edges, cfg).collect()
         isa = isa_rows(dict_rows, direct, concept_rows, cfg)
     return OntologyRows(cfg, dict_rows, isa, len(concept_rows))
-
-
-def _with_has_imports(cfg: PipelineConfig, concept_rows: list[tuple]):
-    """cfg with has_imports derived from the concept rows
-    (``derive_has_imports`` on the driver) unless it is set."""
-    if cfg.has_imports is not None:
-        return cfg
-    return dataclasses.replace(
-        cfg, has_imports=any(bool(r[3]) for r in concept_rows)
-    )
 
 
 def ontology_stage(
@@ -176,29 +169,6 @@ def ontology_stage(
         None if rows.isa is None else local_frame(spark, rows.isa, ISA_ROWS),
         rows.n_concepts,
     )
-
-
-def _direct_parents(
-    concepts: DataFrame,
-    edges: DataFrame,
-    concept_rows: list[tuple],
-    cfg: PipelineConfig,
-) -> list[tuple[str, str]]:
-    """``build_hierarchy`` on concepts the stage already holds: the same
-    gate (``small_graph_threshold`` concept and edge rows) with the
-    concept side counted for free, so only the edges get the bounded
-    probe. At or below it the driver kernel; above it the distributed
-    program, collected (its output is ontology-scale)."""
-    th = cfg.small_graph_threshold
-    if len(concept_rows) <= th:
-        edge_rows = edges.select("child_iri", "parent_iri").limit(th + 1).collect()
-        if len(edge_rows) <= th:
-            return driver_direct_parents(
-                [(r[0], r[4]) for r in concept_rows],
-                edge_rows,
-                cfg.equivalence_mode,
-            )
-    return distributed_direct_parents(concepts, edges, cfg).collect()
 
 
 def isa_rows(
@@ -304,8 +274,8 @@ def concept_triples(
     caller holding its own dictionary and hierarchy frames (the
     pipelines use ``ontology_stage``). The three are ontology-scale:
     they are collected and the parent rule is ``isa_rows``."""
-    concept_rows = concepts.select(*_CONCEPT_COLS).collect()
-    cfg = _with_has_imports(cfg, concept_rows)
+    concept_rows = concepts.select(*CONCEPT_COLS).collect()
+    cfg = with_has_imports(cfg, concept_rows)
     isa = isa_rows(
         dictionary.select("iri", "code", "root").collect(),
         direct_parents.select("child_iri", "parent_iri").collect(),

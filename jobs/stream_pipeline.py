@@ -181,7 +181,7 @@ def main(argv=None) -> int:
                 "qops": fx.query_ops_fixture,
             }[args.fixture]()
             concepts, _, synonyms = fx.ontology_dfs(spark, ont)
-        dictionary = build_concept_dictionary(concepts, synonyms, cfg).localCheckpoint()
+        dictionary = build_concept_dictionary(concepts, synonyms, cfg)
         stream = read_transcript_stream(spark, args.input)
         q = writer(stream_mention_triples(stream, dictionary, cfg)).start()
     elif args.cmd == "sessionize":

@@ -18,6 +18,7 @@ from fhir_owl_spark.operators.mentions import (
     _trie_layer_regex,
     _trie_patterns_for,
     extract_mentions,
+    linkable_terms,
 )
 from fhir_owl_spark.schemas import OWL_THING
 
@@ -197,3 +198,68 @@ def test_pairs_only_equals_distinct_pairs(spark):
         for r in extract_mentions(tdf, d, cfg, pairs_only=True).distinct().collect()
     }
     assert a == b and a
+
+
+# sha256 of json.dumps(linkable_terms(...)) on each fixture's dictionary
+# and config, as computed by the explode-then-collect form of
+# linkable_terms (term counts: pizza 20, duo 8, query_ops 26)
+LINKABLE_TERMS_SHA256 = {
+    "pizza_fixture": "e2c9f2a79cd9fd655dde7e045df2d968f4a83239030112caf1f2667ecc5933db",
+    "duo_fixture": "63b43c6f8886952df3f24164c22848d556b02e528ff8b2fe1a25a3dab4e99d8e",
+    "query_ops_fixture": "53b146784c0fbc63cb52a2d3f32dda31afc7fbbc3eec1a88db71651ba112710d",
+}
+
+
+@pytest.mark.parametrize("fixture", sorted(LINKABLE_TERMS_SHA256))
+def test_linkable_terms_pinned(spark, fixture):
+    import hashlib
+    import json
+
+    from fhir_owl_spark import fixtures as fx
+
+    ont, cfg = getattr(fx, fixture)()
+    concepts, _, synonyms = fx.ontology_dfs(spark, ont)
+    terms = linkable_terms(build_concept_dictionary(concepts, synonyms, cfg), cfg)
+    digest = hashlib.sha256(json.dumps(terms).encode()).hexdigest()
+    assert digest == LINKABLE_TERMS_SHA256[fixture], terms
+
+
+def test_linkable_terms_unicode(spark):
+    """Lower-casing is Spark's (İ → i + U+0307, final Σ → ς, ẞ → ß), the
+    length filter counts code points AFTER it (combining marks count),
+    and stop terms are lower-cased in Python; expected lists as computed
+    by the explode-then-collect form of linkable_terms."""
+    import dataclasses
+
+    from fhir_owl_spark.schemas import CONCEPT_DICTIONARY
+    from fhir_owl_spark.session import local_frame
+
+    rows = [
+        ("u:1", "c1", "\u0130stanbul",
+         ["\u0130", "\u0130\u0130", "\u039f\u0394\u039f\u03a3"], False, False, False),
+        ("u:2", "c2", "STRASSE",
+         ["Stra\u00dfe", "\u1e9e", "\u1e9e\u1e9e\u1e9e"], False, False, False),
+        ("u:3", "c3", "Cafe\u0301",
+         ["e\u0301", "E\u0301E\u0301", "\u03a3\u03a3"], True, False, False),
+        ("u:4", "c4", None, ["Ab", "a"], False, False, False),
+        ("u:5", "c5", "\u041e\u0414\u041e\u0421", [], False, False, False),
+    ]
+    d = local_frame(spark, rows, CONCEPT_DICTIONARY)
+    base = PipelineConfig()
+    every = dataclasses.replace(base, min_term_chars=2, link_deprecated=True)
+    assert linkable_terms(d, every) == [
+        ("ab", "c4"), ("cafe\u0301", "c3"), ("e\u0301", "c3"),
+        ("e\u0301e\u0301", "c3"), ("i\u0307", "c1"), ("i\u0307i\u0307", "c1"),
+        ("i\u0307stanbul", "c1"), ("strasse", "c2"), ("stra\u00dfe", "c2"),
+        ("\u00df\u00df\u00df", "c2"), ("\u03bf\u03b4\u03bf\u03c2", "c1"),
+        ("\u03c3\u03c2", "c3"), ("\u043e\u0434\u043e\u0441", "c5"),
+    ]
+    guarded = dataclasses.replace(
+        base,
+        min_term_chars=3,
+        link_stop_terms=("\u039f\u0394\u039f\u03a3", "stra\u00dfe", "\u0130\u0130"),
+    )
+    assert linkable_terms(d, guarded) == [
+        ("i\u0307stanbul", "c1"), ("strasse", "c2"),
+        ("\u00df\u00df\u00df", "c2"), ("\u043e\u0434\u043e\u0441", "c5"),
+    ]

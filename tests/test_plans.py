@@ -491,16 +491,21 @@ def test_bpe_pairs_plan_take_ordered(spark):
 # conftest.py); the counts repeat exactly. They are the tree whose
 # ontology stage is one driver pass: the fixture frames are local
 # relations, so the stage's collects, the dictionary and the is-a rows
-# run no job, and the export none at all. export_above_gate is the
+# run no job, the mention-term collect none, and the export and a
+# collect of ``build_concept_dictionary`` (the same driver pass) none at
+# all. The refresh's mention terms come from a join against checkpointed
+# affected codes, so they still cost a job. export_above_gate is the
 # export with small_graph_threshold=0 on materialized (checkpointed)
 # frames: two collects plus the distributed hierarchy. The Spark-column
 # stage measured build_graph_count 9, resumable 13, export 7, refresh
-# 17 and export_above_gate 75 on the same calls. A change may lower
-# them, never raise them.
+# 17 and export_above_gate 75 on the same calls, and the Spark-column
+# dictionary 3 for dictionary_collect. A change may lower them, never
+# raise them.
 PARENT_JOBS = {
-    "build_graph_count": 4,
-    "resumable": 6,
+    "build_graph_count": 3,
+    "resumable": 5,
     "export": 0,
+    "dictionary_collect": 0,
     "refresh": 12,
     "export_above_gate": 54,
 }
@@ -510,9 +515,10 @@ def test_pipeline_job_counts(spark, tmp_path):
     """Job-count guard for the ontology entry points: build_graph then
     count, a one-chunk resumable build, the CodeSystem export, and a
     refresh of a committed build onto a relabelled release committed
-    through write_committed_chunk, each on fresh pizza fixture frames,
-    counted by job group; and the export above the hierarchy's size gate
-    on materialized frames."""
+    through write_committed_chunk and a collect of the concept
+    dictionary, each on fresh pizza fixture frames, counted by job group;
+    and the export above the hierarchy's size gate on materialized
+    frames."""
     import copy
     import dataclasses
     import uuid
@@ -567,6 +573,9 @@ def test_pipeline_job_counts(spark, tmp_path):
             )
         ),
         "export": jobs(lambda c, e, s, t: export_codesystem(spark, c, e, s, cfg)),
+        "dictionary_collect": jobs(
+            lambda c, e, s, t: build_concept_dictionary(c, s, cfg).collect()
+        ),
         "refresh": jobs(refresh, ont=ont2),
         "export_above_gate": jobs(
             lambda c, e, s, t: export_codesystem(

@@ -395,8 +395,8 @@ def _dictionary_key(frame):
 def _stage_both_paths(spark, ont, cfg):
     """Dictionary rows, is-a rows and export of the stage with the driver
     hierarchy; asserts the distributed hierarchy gives the same three and
-    the Spark-column dictionary (``build_concept_dictionary``) the same
-    dictionary rows."""
+    ``build_concept_dictionary`` on checkpointed (non-local) frames, whose
+    collects run Spark jobs, the same dictionary rows."""
     sides = []
     for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
         stage = ontology_stage(*fx.ontology_dfs(spark, ont), c)
@@ -410,7 +410,9 @@ def _stage_both_paths(spark, ont, cfg):
     assert _export_key(d_cs) == _export_key(s_cs)
     concepts, _, synonyms = fx.ontology_dfs(spark, ont)
     assert _dictionary_key(
-        build_concept_dictionary(concepts, synonyms, stage.cfg)
+        build_concept_dictionary(
+            concepts.localCheckpoint(), synonyms.localCheckpoint(), cfg
+        )
     ) == d_rows
     return d_rows, d_isa, d_cs
 
