@@ -211,13 +211,19 @@ def lsh_candidate_pairs(
     ``_lsh_observation`` attribute (readable after any action, costs no
     extra job); pass max_bucket_size=None for unconditional all-pairs.
 
-    The signature frame is persisted (LAZY — plan construction stays
-    free, the first action populates the cache) because it feeds BOTH
-    sides of the self-join plus the band-count probe: unpersisted, the
-    upstream pandas-UDF minhash stage is recomputed 2-3× per action
-    (measured 40% of pipeline time at sf0.1). Cache cost is
-    O(rows × n_hashes × 8B) — independent of text size, cluster-feasible
-    at any corpus scale; MEMORY_AND_DISK spills instead of OOMing.
+    The banded frame — (id, band_idx, band_hash) per band, repartitioned
+    on the bucket key — is persisted (LAZY — plan construction stays
+    free, the first action populates the cache): it feeds the
+    bucket-size probe, BOTH sides of the self-join
+    and the star path's window, which all need its partitioning, so the
+    upstream pandas-UDF minhash stage runs once rather than 2-3× per
+    action (measured 40% of pipeline time at sf0.1 when recomputed).
+    Cache cost is O(rows × n_bands) rows — independent of text size;
+    MEMORY_AND_DISK spills instead of OOMing. The self-join over the
+    co-partitioned cache has no exchange for AQE to re-split, so the
+    oversized-bucket cap is its skew defense. The star path caches its
+    window-tagged frame (bucket size and minimum id per row) as well, and
+    a call releases the previous call's caches when it starts.
     """
     from pyspark import StorageLevel
     from pyspark.sql import Observation
@@ -344,7 +350,7 @@ def lsh_candidate_pairs(
     # tagged feeds three subtrees (self-join left/right + star branch);
     # only its Exchange is reusable — the Sort+Window would run three
     # times. LAZY cache computes the window once; footprint is
-    # n_bands × rows × ~50 B, same magnitude as the signature cache,
+    # n_bands × rows × ~50 B, same magnitude as the banded cache,
     # MEMORY_AND_DISK spills instead of OOMing.
     tagged = register_persisted(
         "lsh_candidate_pairs", tagged.persist(StorageLevel.MEMORY_AND_DISK)

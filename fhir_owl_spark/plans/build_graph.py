@@ -25,15 +25,21 @@ program, collected.
 
 The export renders the rows directly (no Spark job on local-relation
 inputs); ``ontology_stage`` hands the other entry points the dictionary
-and is-a rows as Arrow-backed local relations, so their joins and the
-mention-term collect plan over local data.
+as an Arrow-backed local relation, so their joins and the mention-term
+collect plan over local data, and the ontology-side triples already
+keyed and deduplicated (``ontology_triple_rows`` + ``triple_key``, the
+driver twin of ``triple_key_col``) as one single-partition local
+relation.
 
 Physical shape at 10^12-turn scale:
   * ontology stages touch only the small side (broadcast-class data);
+    their triples are built, keyed and deduplicated on the driver, so
+    the ontology side runs no shuffle at all;
   * mention extraction is map-only over transcripts — no shuffle;
-  * ONE transcript-scale shuffle exists in the whole job: the final
+  * ONE transcript-scale shuffle exists in the whole job: the mention
     dedup, hash-partitioned on key_hash (uniform by construction — SHA256
-    of the triple — so no skew);
+    of the triple — so no skew). Mention and ontology triples share no
+    predicate, so deduplicating each side on its own is the global dedup;
   * the optional turn-ordering invariant check (W2) shuffles on conv_id;
     it is an assertion stage, disabled on the hot path by default and run
     as a separate validation pass.
@@ -41,6 +47,7 @@ Physical shape at 10^12-turn scale:
 
 from __future__ import annotations
 
+import hashlib
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -65,13 +72,21 @@ KEY_SEP = "\x1f"
 
 
 def triple_key_col() -> "F.Column":
-    """THE canonical triple key expression — shared by the build dedup
+    """THE canonical triple key expression — shared by the mention dedup
     and the incremental refresh's map-side key recompute so the two can
-    never diverge."""
+    never diverge; ``triple_key`` is its driver twin."""
     return F.sha2(
         F.concat_ws(KEY_SEP, F.col("subj"), F.col("pred"), F.coalesce("obj", F.lit(""))),
         256,
     )
+
+
+def triple_key(subj: str, pred: str, obj: str | None) -> str:
+    """``triple_key_col`` on the driver, for non-null ``subj`` and
+    ``pred``: hex SHA-256 of the UTF-8 ``subj␟pred␟obj``, a null obj
+    keyed as ""."""
+    obj = "" if obj is None else obj
+    return hashlib.sha256(f"{subj}{KEY_SEP}{pred}{KEY_SEP}{obj}".encode()).hexdigest()
 
 
 def triples_with_key(triples: DataFrame) -> DataFrame:
@@ -88,14 +103,18 @@ def triples_with_key(triples: DataFrame) -> DataFrame:
     return keyed.dropDuplicates()
 
 
-# is-a rows of emitted non-root concepts (see isa_rows); the nullability
-# is the Spark program's, so the ontology chunk's parquet schema keeps
-# ``subj`` required
-ISA_ROWS = StructType(
+# The keyed ontology-side triples (``ontology_triple_rows``); the
+# nullability is the TRIPLES columns' as the Spark union derived it, so
+# the ontology chunk's parquet schema keeps ``subj`` and ``obj_type``
+# required
+ONTOLOGY_TRIPLES = StructType(
     [
-        StructField("child_iri", StringType(), nullable=False),
         StructField("subj", StringType(), nullable=False),
-        StructField("parent_code", StringType(), nullable=False),
+        StructField("pred", StringType(), nullable=False),
+        StructField("obj", StringType()),
+        StructField("obj_type", StringType(), nullable=False),
+        StructField("conv_id", StringType()),
+        StructField("key_hash", StringType()),
     ]
 )
 
@@ -105,22 +124,20 @@ class OntologyRows(NamedTuple):
 
     cfg: PipelineConfig  # has_imports derived
     dictionary: list[tuple]  # CONCEPT_DICTIONARY order
-    isa: list[tuple] | None  # ISA_ROWS order; None unless hierarchy=True
+    # (child_iri, subj, parent_code) rows (``isa_rows``); None unless
+    # hierarchy=True
+    isa: list[tuple] | None
     n_concepts: int  # concept table rows
 
 
 class OntologyStage(NamedTuple):
     """The ontology stage as frames (``ontology_stage``): the dictionary
-    and is-a rows as Arrow-backed local relations."""
+    and the keyed ontology-side triples as Arrow-backed local relations."""
 
     cfg: PipelineConfig
     dictionary: DataFrame
-    isa: DataFrame | None
+    triples: DataFrame | None  # ONTOLOGY_TRIPLES; None unless hierarchy=True
     n_concepts: int
-
-    def triples(self) -> DataFrame:
-        """The ontology-side triples (``ontology_triples``)."""
-        return ontology_triples(self.dictionary, self.isa)
 
 
 def ontology_rows(
@@ -160,13 +177,20 @@ def ontology_stage(
     hierarchy: bool = True,
 ) -> OntologyStage:
     """``ontology_rows`` as local relations, for the entry points that
-    join or scan them; the driver rows are released on return."""
+    join, scan or write them; the driver rows are released on return.
+    The keyed triples are one partition, so the ontology chunk commits
+    one file per predicate."""
     rows = ontology_rows(concepts, edges, synonyms, cfg, hierarchy)
     spark = concepts.sparkSession
+    triples = None
+    if rows.isa is not None:
+        triples = local_frame(
+            spark, ontology_triple_rows(rows.dictionary, rows.isa), ONTOLOGY_TRIPLES
+        ).coalesce(1)
     return OntologyStage(
         rows.cfg,
         local_frame(spark, rows.dictionary, CONCEPT_DICTIONARY),
-        None if rows.isa is None else local_frame(spark, rows.isa, ISA_ROWS),
+        triples,
         rows.n_concepts,
     )
 
@@ -205,6 +229,40 @@ def isa_rows(
     return out
 
 
+def ontology_triple_rows(dict_rows: list[tuple], isa: list[tuple]) -> list[tuple]:
+    """Dictionary rows + is-a rows → the ontology-side triples as
+    ONTOLOGY_TRIPLES rows: deduplicated, sorted by (pred, subj, obj) and
+    keyed by ``triple_key``.
+
+    Emits per concept: has-display, imported, deprecated, root,
+    synonym-of*, and is-a* for non-root concepts (the parent rule is
+    ``isa_rows``).
+    """
+    flag = ("false", "true")
+    display, imported, deprecated, root, synonym_of = (set() for _ in range(5))
+    for _iri, code, disp, synonyms, dep, imp, is_root in dict_rows:
+        display.add((code, disp))
+        imported.add((code, flag[imp]))
+        deprecated.add((code, flag[dep]))
+        root.add((code, flag[is_root]))
+        synonym_of.update((code, s) for s in synonyms)
+    is_a = {(subj, parent_code) for _child_iri, subj, parent_code in isa}
+    # (subj, obj) pairs per predicate, predicates in sorted order
+    by_pred = (
+        ("deprecated", "boolean", deprecated),
+        ("has-display", "string", display),
+        ("imported", "boolean", imported),
+        ("is-a", "code", is_a),
+        ("root", "boolean", root),
+        ("synonym-of", "string", synonym_of),
+    )
+    return [
+        (subj, pred, obj, obj_type, None, triple_key(subj, pred, obj))
+        for pred, obj_type, pairs in by_pred
+        for subj, obj in sorted(pairs)
+    ]
+
+
 def mention_triples(pairs: DataFrame) -> DataFrame:
     """(code, conv_id) mention pairs → mentions-in triples."""
     return pairs.select(
@@ -216,75 +274,29 @@ def mention_triples(pairs: DataFrame) -> DataFrame:
     )
 
 
-def ontology_triples(dictionary: DataFrame, isa: DataFrame) -> DataFrame:
-    """Dictionary + is-a rows → ontology-side triples.
-
-    Emits per concept: has-display, imported, deprecated, root,
-    synonym-of*, and is-a* for non-root concepts (the parent rule is
-    ``isa_rows``).
-    """
-    d = dictionary
-
-    def lit_triple(pred: str, obj_col, obj_type: str) -> DataFrame:
-        return d.select(
-            F.col("code").alias("subj"),
-            F.lit(pred).alias("pred"),
-            obj_col.cast("string").alias("obj"),
-            F.lit(obj_type).alias("obj_type"),
-            F.lit(None).cast("string").alias("conv_id"),
-        )
-
-    def bool_str(col):
-        return F.when(col, "true").otherwise("false")
-
-    parts = [
-        lit_triple("has-display", F.col("display"), "string"),
-        lit_triple("imported", bool_str(F.col("imported")), "boolean"),
-        lit_triple("deprecated", bool_str(F.col("deprecated")), "boolean"),
-        lit_triple("root", bool_str(F.col("root")), "boolean"),
-        d.select(
-            F.col("code").alias("subj"),
-            F.lit("synonym-of").alias("pred"),
-            F.explode("synonyms").alias("obj"),
-            F.lit("string").alias("obj_type"),
-            F.lit(None).cast("string").alias("conv_id"),
-        ),
-        isa.select(
-            "subj",
-            F.lit("is-a").alias("pred"),
-            F.col("parent_code").alias("obj"),
-            F.lit("code").alias("obj_type"),
-            F.lit(None).cast("string").alias("conv_id"),
-        ),
-    ]
-
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def concept_triples(
     dictionary: DataFrame,
     direct_parents: DataFrame,
     concepts: DataFrame,
     cfg: PipelineConfig,
 ) -> DataFrame:
-    """Dictionary + reduced hierarchy → ontology-side triples, for a
-    caller holding its own dictionary and hierarchy frames (the
+    """Dictionary + reduced hierarchy → ontology-side triples (no key),
+    for a caller holding its own dictionary and hierarchy frames (the
     pipelines use ``ontology_stage``). The three are ontology-scale:
-    they are collected and the parent rule is ``isa_rows``."""
+    they are collected, and the rules are ``isa_rows`` and
+    ``ontology_triple_rows``."""
     concept_rows = concepts.select(*CONCEPT_COLS).collect()
     cfg = with_has_imports(cfg, concept_rows)
+    dict_rows = dictionary.select(*CONCEPT_DICTIONARY.fieldNames()).collect()
     isa = isa_rows(
-        dictionary.select("iri", "code", "root").collect(),
+        dict_rows,
         direct_parents.select("child_iri", "parent_iri").collect(),
         concept_rows,
         cfg,
     )
-    return ontology_triples(
-        dictionary, local_frame(dictionary.sparkSession, isa, ISA_ROWS)
-    )
+    return local_frame(
+        dictionary.sparkSession, ontology_triple_rows(dict_rows, isa), ONTOLOGY_TRIPLES
+    ).drop("key_hash")
 
 
 def materialize_ontology_inputs(
@@ -371,16 +383,16 @@ def build_graph(
 
     stage = ontology_stage(concepts, edges, synonyms, cfg)
     cfg = stage.cfg
-    onto = stage.triples()
 
     # pairs_only: batch-local dedup inside the UDF (hub terms repeat in
     # most turns of a conversation) — global dedup still happens in the
-    # final key-hash dropDuplicates, one shuffle, map-side combined.
+    # mention side's key-hash dropDuplicates, one shuffle, map-side
+    # combined.
     pairs = extract_mentions(transcripts, stage.dictionary, cfg, pairs_only=True)
     if related_npmi is not None:
         pairs = pairs.localCheckpoint(eager=True)
 
-    all_triples = onto.unionByName(mention_triples(pairs))
+    corpus_triples = mention_triples(pairs)
     if related_npmi is not None:
         from ..operators.graph import pmi_edges
 
@@ -395,5 +407,7 @@ def build_graph(
                 F.lit(None).cast("string").alias("conv_id"),
             )
         )
-        all_triples = all_triples.unionByName(related)
-    return triples_with_key(all_triples)
+        corpus_triples = corpus_triples.unionByName(related)
+    # the ontology triples come keyed and deduplicated, and share no
+    # predicate with the corpus-side ones
+    return stage.triples.unionByName(triples_with_key(corpus_triples))

@@ -221,9 +221,9 @@ def build_graph_resumable(
     )
     cfg = stage.cfg
     if ONTOLOGY_CHUNK not in done:
+        # keyed and deduplicated on the driver: the commit is one write job
         write_committed_chunk(
-            spark, output_dir, ONTOLOGY_CHUNK, triples_with_key(stage.triples()),
-            stage.n_concepts, run_id,
+            spark, output_dir, ONTOLOGY_CHUNK, stage.triples, stage.n_concepts, run_id
         )
 
     # Stage the input ONCE, partitioned by the chunk key: one scan of the

@@ -25,10 +25,10 @@ so no v1 ontology tables are needed at refresh time.
 
 Scale shape: ontology-side rebuild (broadcast-class) + ONE anti-join of
 the v1 mention partition against the (tiny, broadcast) affected-code
-set + mention extraction over the delta dictionary + the usual key-hash
-dedup. The corpus-scale win is that the Arrow mention UDF runs with a
-delta dictionary; the carried-over mentions are a columnar re-scan of
-the committed v1 output, not a recompute.
+set + mention extraction over the delta dictionary + the key-hash dedup
+of the delta mentions. The corpus-scale win is that the Arrow mention
+UDF runs with a delta dictionary; the carried-over mentions are a
+columnar re-scan of the committed v1 output, not a recompute.
 """
 
 from __future__ import annotations
@@ -139,7 +139,6 @@ def refresh_graph(
 
     stage = ontology_stage(concepts, edges, synonyms, cfg)
     cfg, dictionary = stage.cfg, stage.dictionary
-    onto = stage.triples()
 
     affected = affected_codes(old_triples, dictionary).localCheckpoint(
         eager=True
@@ -155,34 +154,37 @@ def refresh_graph(
         .select(*TRIPLE_COLS)
     )
 
-    n_affected = affected.count()
+    # the affected codes are ontology-bounded: collected once, they give
+    # the delta size and a filter the local-relation dictionary folds in,
+    # so the delta's mention-term collect runs no Spark job
+    codes = [r["code"] for r in affected.collect()]
+    n_affected = len(codes)
     if n_affected == 0:
         # hierarchy-only / metadata-only release: NO corpus scan at all —
         # the refresh cost is the ontology-side rebuild plus a columnar
-        # re-scan of the v1 mention partition (the count is free: the
-        # affected frame is already checkpointed)
+        # re-scan of the v1 mention partition
         from ..schemas import TRIPLES
 
         new_mentions = spark.createDataFrame(
             [], TRIPLES
         ).select(*TRIPLE_COLS)
     else:
-        delta_dict = dictionary.join(F.broadcast(affected), "code", "semi")
+        delta_dict = dictionary.filter(F.col("code").isin(codes))
         new_mentions = mention_triples(
             extract_mentions(transcripts, delta_dict, cfg, pairs_only=True)
         )
 
-    # The key-hash DEDUP runs only over the FRESH rows (ontology triples
-    # + delta mentions): the carried-over mentions were already deduped
-    # by the v1 build, and the three parts are pairwise disjoint by
-    # construction — kept rows have unaffected subjects, fresh mention
-    # rows have affected subjects, ontology rows have non-mention preds.
-    # Re-shuffling the full-corpus carry-over through dropDuplicates
-    # would make refresh cost O(|v1 output|) for nothing (measured: the
-    # 7.1M-row dedup dominated at 6M turns, 17.5 s → ~rebuild-class).
-    # Kept rows get the key column recomputed MAP-SIDE (same expression,
-    # no shuffle).
-    fresh = triples_with_key(onto.unionByName(new_mentions))
+    # The key-hash DEDUP runs only over the delta mentions: the ontology
+    # triples come keyed and deduplicated from the stage, the
+    # carried-over mentions were already deduped by the v1 build, and the
+    # three parts are pairwise disjoint by construction — kept rows have
+    # unaffected subjects, fresh mention rows have affected subjects,
+    # ontology rows have non-mention preds. Re-shuffling the full-corpus
+    # carry-over through dropDuplicates would make refresh cost
+    # O(|v1 output|) for nothing (measured: the 7.1M-row dedup dominated
+    # at 6M turns, 17.5 s → ~rebuild-class). Kept rows get the key column
+    # recomputed MAP-SIDE (same expression, no shuffle).
+    fresh = stage.triples.unionByName(triples_with_key(new_mentions))
     kept_keyed = kept_mentions.withColumn("key_hash", triple_key_col())
     out = fresh.unionByName(kept_keyed)
     # expose the already-computed delta so callers (the CLI summary)

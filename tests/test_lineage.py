@@ -263,3 +263,27 @@ def test_rejects_parquet_lineage_log(spark, tmp_path):
         completed_chunks(spark, str(tmp_path))
     with pytest.raises(ValueError, match="older layout"):
         read_lineage(spark, str(tmp_path))
+
+
+def test_ontology_chunk_layout(spark, inputs, tmp_path):
+    """The ontology chunk of a one-chunk build is one part file per
+    predicate it holds, and its parquet schema keeps ``subj`` and
+    ``obj_type`` required and ``obj``, ``conv_id`` and ``key_hash``
+    optional (``pred`` is the partition directory)."""
+    import pyarrow.parquet as pq
+
+    for i, (concepts, edges, synonyms, tdf, cfg) in enumerate(inputs):
+        out = str(tmp_path / f"graph-{i}")
+        build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=1)
+        chunk = Path(out, "triples", "chunk=-1")
+        preds = {
+            r["pred"] for r in spark.read.parquet(str(chunk)).select("pred").distinct().collect()
+        }
+        parts = sorted(chunk.glob("pred=*/part-*.parquet"))
+        assert sorted(p.parent.name for p in parts) == sorted(f"pred={p}" for p in preds)
+        for part in parts:
+            schema = pq.read_schema(part)
+            assert {f.name: f.nullable for f in schema} == {
+                "subj": False, "obj": True, "obj_type": False,
+                "conv_id": True, "key_hash": True,
+            }, part

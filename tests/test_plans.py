@@ -490,23 +490,26 @@ def test_bpe_pairs_plan_take_ordered(spark):
 # Spark jobs per call, counted by this test (Spark 4, local session of
 # conftest.py); the counts repeat exactly. They are the tree whose
 # ontology stage is one driver pass: the fixture frames are local
-# relations, so the stage's collects, the dictionary and the is-a rows
-# run no job, the mention-term collect none, and the export and a
-# collect of ``build_concept_dictionary`` (the same driver pass) none at
-# all. The refresh's mention terms come from a join against checkpointed
-# affected codes, so they still cost a job. export_above_gate is the
-# export with small_graph_threshold=0 on materialized (checkpointed)
-# frames: two collects plus the distributed hierarchy. The Spark-column
-# stage measured build_graph_count 9, resumable 13, export 7, refresh
-# 17 and export_above_gate 75 on the same calls, and the Spark-column
-# dictionary 3 for dictionary_collect. A change may lower them, never
-# raise them.
+# relations, so the stage's collects, the dictionary, the is-a rows and
+# the keyed ontology triples run no job, the mention-term collect none,
+# the ontology chunk's commit one write job with no shuffle, and the
+# export and a collect of ``build_concept_dictionary`` (the same driver
+# pass) none at all. The refresh filters the dictionary by the collected
+# affected codes, so its mention terms cost no job either.
+# export_above_gate is the export with small_graph_threshold=0 on
+# materialized (checkpointed) frames: two collects plus the distributed
+# hierarchy. The Spark-column stage measured build_graph_count 9,
+# resumable 13, export 7, refresh 17 and export_above_gate 75 on the
+# same calls, and the Spark-column dictionary 3 for dictionary_collect;
+# the ontology triples as a Spark union keyed and deduplicated through a
+# shuffle measured resumable 5 and refresh 12. A change may lower them,
+# never raise them.
 PARENT_JOBS = {
     "build_graph_count": 3,
-    "resumable": 5,
+    "resumable": 4,
     "export": 0,
     "dictionary_collect": 0,
-    "refresh": 12,
+    "refresh": 9,
     "export_above_gate": 54,
 }
 

@@ -21,7 +21,13 @@ from fhir_owl_spark import fixtures as fx
 from fhir_owl_spark.config import PipelineConfig
 from fhir_owl_spark.operators.dictionary import build_concept_dictionary
 from fhir_owl_spark.operators.hierarchy import HierarchyCycleError
-from fhir_owl_spark.plans.build_graph import build_graph, ontology_stage
+from fhir_owl_spark.plans.build_graph import (
+    build_graph,
+    ontology_rows,
+    ontology_stage,
+    triple_key,
+    triple_key_col,
+)
 from fhir_owl_spark.plans.export import export_codesystem
 from fhir_owl_spark.schemas import CONCEPT_DICTIONARY, OWL_NOTHING, OWL_THING
 
@@ -337,9 +343,9 @@ def test_dangling_parent_not_rerooted_both_paths(spark):
 # ---------------------------------------------------------------------------
 # The ontology stage on both sides of the hierarchy's gate: the driver
 # kernel (default small_graph_threshold) and the distributed hierarchy
-# (threshold 0) must give the same dictionary rows, is-a rows and export,
-# the Spark-column dictionary the stage's dictionary rows, and all of them
-# agree with the model.
+# (threshold 0) must give the same dictionary rows, is-a rows, keyed
+# ontology triples and export, the Spark-column dictionary the stage's
+# dictionary rows, and all of them agree with the model.
 # ---------------------------------------------------------------------------
 
 
@@ -393,20 +399,29 @@ def _dictionary_key(frame):
 
 
 def _stage_both_paths(spark, ont, cfg):
-    """Dictionary rows, is-a rows and export of the stage with the driver
-    hierarchy; asserts the distributed hierarchy gives the same three and
-    ``build_concept_dictionary`` on checkpointed (non-local) frames, whose
-    collects run Spark jobs, the same dictionary rows."""
+    """Dictionary rows, is-a rows, keyed ontology triples and export of
+    the stage with the driver hierarchy; asserts the distributed
+    hierarchy gives the same four and ``build_concept_dictionary`` on
+    checkpointed (non-local) frames, whose collects run Spark jobs, the
+    same dictionary rows. The triples are distinct, each ``key_hash``
+    equals ``triple_key_col`` evaluated by Spark on its row, and
+    without the key they are the export's triples."""
     sides = []
     for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
         stage = ontology_stage(*fx.ontology_dfs(spark, ont), c)
         dictionary = _dictionary_key(stage.dictionary)
-        isa = sorted(tuple(r) for r in stage.isa.collect())
+        isa = sorted(ontology_rows(*fx.ontology_dfs(spark, ont), c).isa)
+        keyed = stage.triples.withColumn("_spark_key", triple_key_col()).collect()
+        assert all(r["key_hash"] == r["_spark_key"] for r in keyed)
+        triples = sorted(tuple(r)[:-2] for r in keyed)
+        assert len(set(triples)) == len(triples)
         cs = export_codesystem(spark, *fx.ontology_dfs(spark, ont), c)
-        sides.append((dictionary, isa, cs))
-    (d_rows, d_isa, d_cs), (s_rows, s_isa, s_cs) = sides
+        assert {(s, p, o) for s, p, o, *_ in triples} == _export_triples(cs)
+        sides.append((dictionary, isa, triples, cs))
+    (d_rows, d_isa, d_triples, d_cs), (s_rows, s_isa, s_triples, s_cs) = sides
     assert d_rows == s_rows
     assert d_isa == s_isa
+    assert d_triples == s_triples
     assert _export_key(d_cs) == _export_key(s_cs)
     concepts, _, synonyms = fx.ontology_dfs(spark, ont)
     assert _dictionary_key(
@@ -414,10 +429,10 @@ def _stage_both_paths(spark, ont, cfg):
             concepts.localCheckpoint(), synonyms.localCheckpoint(), cfg
         )
     ) == d_rows
-    return d_rows, d_isa, d_cs
+    return d_rows, d_isa, d_triples, d_cs
 
 
-def _assert_stage_equals_model(ont, cfg, rows, isa, cs):
+def _assert_stage_equals_model(ont, cfg, rows, isa, triples, cs):
     model = fx.model_concept_rows(ont, cfg)
     assert rows == sorted(
         (iri, r["code"], r["display"], tuple(sorted(r["synonyms"])),
@@ -428,6 +443,7 @@ def _assert_stage_equals_model(ont, cfg, rows, isa, cs):
     assert {(subj, code) for _, subj, code in isa} == {
         (s, o) for s, p, o in expected if p == "is-a"
     }
+    assert {(s, p, o) for s, p, o, *_ in triples} == expected
     assert _export_triples(cs) == expected
 
 
@@ -441,7 +457,7 @@ def test_ontology_stage_paths_equal_model(spark, ont, cfg):
     """Random ontologies × code_prop, code_replace, main_namespaces,
     labels_to_exclude, include_deprecated and has_imports: both sides of
     the hierarchy's gate, the Spark-column dictionary and the model give
-    the same dictionary, is-a rows and export."""
+    the same dictionary, is-a rows, ontology triples and export."""
     _assert_stage_equals_model(ont, cfg, *_stage_both_paths(spark, ont, cfg))
 
 
@@ -503,7 +519,7 @@ def test_ontology_stage_edge_case_both_paths(spark, case, include_deprecated):
     output instead."""
     ont = globals()[f"_{case}"]()
     cfg = PipelineConfig(include_deprecated=include_deprecated)
-    rows, isa, cs = _stage_both_paths(spark, ont, cfg)
+    rows, isa, triples, cs = _stage_both_paths(spark, ont, cfg)
     codes = {r[0]: r[1] for r in rows}
     parents = {(child, code) for child, _, code in isa}
     if case == "empty_shortform":
@@ -514,11 +530,38 @@ def test_ontology_stage_edge_case_both_paths(spark, case, include_deprecated):
     elif case == "deprecated_parent":
         # dropped without relinking unless deprecated concepts are kept
         assert parents == ({(f"{NS}C", "P"), (f"{NS}P", "Thing")} if include_deprecated else set())
-        _assert_stage_equals_model(ont, cfg, rows, isa, cs)
+        _assert_stage_equals_model(ont, cfg, rows, isa, triples, cs)
     elif case == "nothing_parent":
         assert parents == set()
     else:
         assert {r[0]: r[2] for r in rows}[f"{NS}E"] == ""
+
+
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.text(max_size=12),
+            st.text(max_size=12),
+            st.one_of(st.none(), st.text(max_size=12)),
+        ),
+        min_size=1,
+        max_size=30,
+    )
+)
+def test_triple_key_equals_spark_key(spark, rows):
+    """The driver key (``triple_key``, which keys the ontology triples)
+    equals ``triple_key_col`` evaluated by Spark (which keys the mention
+    triples and the rows a refresh carries over) on Unicode, empty and
+    null objects."""
+    rows = rows + [("Ünïcødé ✓", "is-a", None), ("", "", ""), ("码", "synonym-of", "𝔘")]
+    frame = spark.createDataFrame(rows, "subj string, pred string, obj string")
+    got = frame.select(triple_key_col().alias("k")).collect()
+    assert [r["k"] for r in got] == [triple_key(*r) for r in rows]
 
 
 # ---------------------------------------------------------------------------
