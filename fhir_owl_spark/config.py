@@ -3,7 +3,7 @@
 Mirrors the reference's job options (CLI → CodeSystemProperties /
 ConceptProperties, /root/reference/src/main/java/au/csiro/fhir/owl/
 Application.java:122-304, CodeSystemProperties.java, ConceptProperties.java)
-plus Spark-side scale knobs that have no reference counterpart.
+plus the mention-detection options, which have no reference counterpart.
 
 Defaults follow the reference's application.properties
 (/root/reference/src/main/resources/config/application.properties:2-8):
@@ -96,18 +96,6 @@ class PipelineConfig:
     #     which in the reference is a guard against malformed input that a
     #     reasoner can never produce.
     equivalence_mode: str = "group"
-
-    # ---- scale knobs -------------------------------------------------------
-    # Iteration cap of the Spark closure loops (the distributed hierarchy
-    # path above small_graph_threshold); exceeding it aborts like the
-    # reference's cycle error (GraphUtils.java:146). The driver kernel has
-    # no cap — like the reference, it detects cycles exactly at any depth.
-    max_closure_iterations: int = 64
-    # Ontology hierarchies at or below this many edges (and concepts) are
-    # reduced by the driver kernel (one bounded collect; the ontology is
-    # broadcast-class data by contract — see operators/hierarchy.py).
-    # Above it, the distributed iterative-self-join path runs.
-    small_graph_threshold: int = 100_000
 
     def __post_init__(self):
         # eager enum validation, mirroring the reference's argument setters

@@ -1,38 +1,35 @@
-"""Subsumption hierarchy: transitive closure + transitive reduction.
+"""Subsumption hierarchy: direct parents, plus Spark closure operators.
 
-The reference computes this via a reasoner's transitive superclass relation
-plus an in-memory reduction (GraphUtils.transitiveReduction,
-GraphUtils.java:53-175 — its own comment calls the core step "really
-doing a self-join", GraphUtils.java:131-133). ``build_hierarchy`` has two
-paths, split by ``PipelineConfig.small_graph_threshold`` (edge and concept
-rows):
+The reference computes the hierarchy via a reasoner's transitive
+superclass relation plus an in-memory reduction in one JVM
+(GraphUtils.transitiveReduction, GraphUtils.java:53-175, adjacency maps
+at :72-74). ``build_hierarchy`` and the ontology stage do the same with
+ONE kernel at every size, ``driver_direct_parents``: iterative Tarjan
+SCC condensation, then one big-int OR pass over the condensed DAG
+(direct = ancestors & ~indirect). Cycles are detected exactly, at any
+depth; no iteration cap applies.
 
-  driver      — at or below the threshold, like the reference, the whole
-                graph is reduced in driver memory by ONE kernel
-                (``_driver_hierarchy``): iterative Tarjan SCC condensation,
-                then one big-int OR pass over the condensed DAG
-                (direct = ancestors & ~indirect). Cycles are detected
-                exactly, at any depth; no iteration cap applies.
-  distributed — above it, set-oriented DataFrame programs:
-    closure   — semi-naive fixpoint: join only the frontier (new pairs) with
-                the base edges each round, exactly the reference's
-                queue-based BFS (GraphUtils.java:13-31) one frontier at a
-                time. Driver loops; ``localCheckpoint`` per iteration
-                truncates lineage so the plan does not grow with depth.
-                Iterations = hierarchy depth, capped by
-                ``max_closure_iterations``.
-    reduction — direct parents = closure MINUS (closure ∘ closure): one
-                self-join + one left-anti join, no recursion, no driver data.
+There is no distributed hierarchy program. The set-oriented one this
+module used to run above a 100k-row gate (semi-naive self-join closure,
+then closure MINUS closure ∘ closure) cost round latency, not data: on
+``synthetic_ontology(2000)`` it took 84 s and 130 Spark jobs where the
+kernel took 0.95 s and none, and on 110k classes it failed with
+``SparkOutOfMemoryError`` ("not enough memory to build hash map") after
+5 min 25 s, where the kernel took 5.7–7.1 s (single runs, ``local[2]``,
+8 GB driver, shared 4-vCPU VM).
 
-Scale note: ontology graphs are tiny next to transcripts (≤10^7 edges),
-but the distributed path handles a 10^9-edge hierarchy: each iteration is
-a shuffle-partitioned hash join, AQE coalesces the frontier as it shrinks.
+The Spark operators below — ``transitive_closure``,
+``transitive_reduction`` and the seeded-BFS family (``reachable_set``,
+``reachable_pairs``, ``k_hop``) — serve graph queries
+(plans/graph_queries.py) over graph-scale edge tables, not the
+ontology stage.
 
 Cycle parity: the reference aborts on a hierarchy cycle
-(RuntimeException "Cycle found...", GraphUtils.java:146). Both paths raise
+(RuntimeException "Cycle found...", GraphUtils.java:146). In ``abort``
+mode the kernel raises
 ``HierarchyCycleError("Cycle found in hierarchy involving: <member>")``
-naming a cycle member in ``abort`` mode: the driver kernel on the first
-strongly connected component with more than one member, the loop on the
+naming a member of the first strongly connected component with more
+than one member; ``transitive_closure`` raises the same error on the
 first child==parent closure row. ``group`` mode treats each cycle as an
 equivalence set instead (see ``PipelineConfig.equivalence_mode``).
 """
@@ -42,7 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..config import PipelineConfig
-from ..schemas import OWL_NOTHING, OWL_THING, TOP_ENTITIES
+from ..schemas import ONTOLOGY_EDGES, OWL_NOTHING, OWL_THING, TOP_ENTITIES
+from ..session import local_frame
 
 
 class HierarchyCycleError(RuntimeError):
@@ -154,7 +152,6 @@ def transitive_closure(
     child_col: str = "child_iri",
     parent_col: str = "parent_iri",
     broadcast_edges: bool | None = None,
-    allow_cycles: bool = False,
 ) -> DataFrame:
     """All (descendant, ancestor) pairs reachable through ``edges``.
 
@@ -180,8 +177,7 @@ def transitive_closure(
     # already unique (the common case for edge tables). Cycle parity
     # holds: on a functional graph a cycle surfaces as a child==parent
     # pair within cycle-length iterations, which the existing probe
-    # aborts on; with allow_cycles the anti-join is load-bearing for
-    # termination, so the fast path is skipped.
+    # aborts on.
     single_parent = False
     raw = (
         edges.select(
@@ -215,9 +211,7 @@ def transitive_closure(
             pairs_pdf = raw.toPandas().drop_duplicates()
             n_pairs = len(pairs_pdf)
             broadcast_edges = True
-            single_parent = (
-                n_pairs == pairs_pdf.iloc[:, 0].nunique() and not allow_cycles
-            )
+            single_parent = n_pairs == pairs_pdf.iloc[:, 0].nunique()
             base = raw if n_rows == n_pairs else (
                 raw.distinct().localCheckpoint(eager=True)
             )
@@ -241,7 +235,7 @@ def transitive_closure(
                 raw.distinct().localCheckpoint(eager=True)
             )
             broadcast_edges = stats["np"] <= BROADCAST_EDGE_ROW_LIMIT
-            single_parent = stats["np"] == stats["nc"] and not allow_cycles
+            single_parent = stats["np"] == stats["nc"]
     else:
         # explicit broadcast choice: no probe job — dedup unconditionally
         base = raw.distinct().localCheckpoint(eager=True)
@@ -309,13 +303,10 @@ def transitive_closure(
             )
             .first()
         )
-        if probe["cyc"] is not None and not allow_cycles:
+        if probe["cyc"] is not None:
             raise HierarchyCycleError(
                 f"Cycle found in hierarchy involving: {probe['cyc']}"
             )
-        # with allow_cycles the loop still terminates: the visited-set
-        # anti-join means each (child, ancestor) pair enters the frontier
-        # at most once, so the frontier empties at the graph's fixpoint
         if probe["n"] == 0:
             break
         # empty tail parts are harmless in the union; non-empty parts are
@@ -500,15 +491,14 @@ def _driver_hierarchy(
 
     The ontology side is broadcast-class data by contract (HPO ≈ 18k
     concepts; the reference itself holds the whole graph in one JVM —
-    GraphUtils.java:72-74), so at or below ``small_graph_threshold`` the
-    driver computes the hierarchy directly instead of scheduling ~4 Spark
-    jobs per depth level. Cycles are found exactly, at any depth: in
-    ``abort`` mode the first strongly connected component with more than
-    one member raises; in ``group`` mode its members share the component's
-    external direct parents, a child of the component gets every member as
-    a parent, and a declared member (in ``reroot_nodes``) left with no
-    parent re-roots at owl:Thing — the same strict-superclass semantics as
-    the distributed path.
+    GraphUtils.java:72-74), so the driver computes the hierarchy directly
+    at every size. Cycles are found exactly, at any depth: in ``abort``
+    mode the first strongly connected component with more than one member
+    raises; in ``group`` mode its members share the component's external
+    direct parents, a child of the component gets every member as a
+    parent, and a declared member (in ``reroot_nodes``) left with no
+    parent re-roots at owl:Thing — the reasoner's strict-superclass
+    semantics (see ``PipelineConfig.equivalence_mode``).
     """
     ids: dict[str, int] = {}
     names: list[str] = []
@@ -629,13 +619,14 @@ def driver_direct_parents(
     edge_rows: list[tuple],
     equivalence_mode: str,
 ) -> list[tuple[str, str]]:
-    """``build_hierarchy``'s driver path on collected rows: concept_rows
-    are (iri, unsatisfiable), edge_rows (child_iri, parent_iri).
+    """Direct parents from collected rows: concept_rows are
+    (iri, unsatisfiable), edge_rows (child_iri, parent_iri).
 
     Drops owl:Nothing, unsatisfiable nodes and self-loops, completes
     every parentless non-top node with an edge to owl:Thing, then
-    reduces with ``_driver_hierarchy``. The one driver-side statement of
-    these semantics, behind the gate ``small_direct_parents``."""
+    reduces with ``_driver_hierarchy``. The one statement of these
+    semantics: ``build_hierarchy`` and the ontology stage
+    (plans/build_graph.py ``ontology_rows``) both call it."""
     # positional access throughout: ~3× cheaper than by-name Row lookup
     # at HPO scale
     dropped = {
@@ -683,7 +674,9 @@ def build_hierarchy(
     concepts: DataFrame, edges: DataFrame, cfg: PipelineConfig
 ) -> DataFrame:
     """Asserted subClassOf → direct-parent edges (child_iri, parent_iri)
-    over all non-Nothing, non-unsatisfiable nodes.
+    over all non-Nothing, non-unsatisfiable nodes: ``driver_direct_parents``
+    on the collected (iri, unsatisfiable) and (child_iri, parent_iri) rows,
+    as a local relation. On local-relation inputs it runs no Spark job.
 
     Deprecated nodes stay IN the graph — the reference reduces over all
     classes and filters deprecated parents only at emission
@@ -695,121 +688,12 @@ def build_hierarchy(
     has Thing among its superclasses (FhirOwlService.java:532-533) — this
     is what terminates every reference concept chain at Thing.
     """
-    from ..schemas import ONTOLOGY_EDGES
-    from ..session import local_frame
-
-    direct = small_direct_parents(concepts, edges, cfg)
-    if direct is None:
-        return distributed_direct_parents(concepts, edges, cfg)
+    direct = driver_direct_parents(
+        concepts.select("iri", "unsatisfiable").collect(),
+        edges.select("child_iri", "parent_iri").collect(),
+        cfg.equivalence_mode,
+    )
     return local_frame(concepts.sparkSession, direct, ONTOLOGY_EDGES)
-
-
-def small_direct_parents(
-    concepts: DataFrame,
-    edges: DataFrame,
-    cfg: PipelineConfig,
-    concept_rows: list[tuple] | None = None,
-) -> list[tuple[str, str]] | None:
-    """The hierarchy's size gate, for every caller: at or below
-    ``small_graph_threshold`` concept rows and edge rows, the driver
-    kernel's direct parents (``driver_direct_parents``); above it None,
-    and the caller runs ``distributed_direct_parents``.
-
-    Each side is probed with a bounded ``limit(threshold + 1).collect()``,
-    the edges first; a caller already holding every concept row as
-    (iri, unsatisfiable) passes ``concept_rows`` and the concepts need no
-    probe. The ontology side is broadcast-class data by contract (the
-    reference holds the whole graph in one JVM — GraphUtils.java:72-74);
-    bounded collects on the base tables beat a tree of tiny broadcast
-    joins, which costs seconds of pure scheduling latency at this size."""
-    th = cfg.small_graph_threshold
-    if concept_rows is not None and len(concept_rows) > th:
-        return None
-    edge_rows = edges.select("child_iri", "parent_iri").limit(th + 1).collect()
-    if len(edge_rows) > th:
-        return None
-    if concept_rows is None:
-        concept_rows = concepts.select("iri", "unsatisfiable").limit(th + 1).collect()
-        if len(concept_rows) > th:
-            return None
-    return driver_direct_parents(concept_rows, edge_rows, cfg.equivalence_mode)
-
-
-def distributed_direct_parents(
-    concepts: DataFrame, edges: DataFrame, cfg: PipelineConfig
-) -> DataFrame:
-    """``build_hierarchy``'s distributed path, the set logic of
-    ``driver_direct_parents`` as DataFrame programs; for a caller whose
-    size gate (``small_direct_parents``) said no."""
-    mode = cfg.equivalence_mode
-    dropped = concepts.filter(
-        (F.col("iri") == OWL_NOTHING) | F.coalesce("unsatisfiable", F.lit(False))
-    ).select("iri")
-
-    nodes = concepts.join(dropped, "iri", "left_anti").select("iri")
-
-    # no .distinct() here: the driver kernel ignores duplicate edges and
-    # the distributed path's transitive_closure dedups its base — an extra
-    # shuffle would only add latency. (Duplicate rows count toward the
-    # small_graph_threshold limit probe — conservative: at worst a graph
-    # with <threshold unique edges but >threshold raw rows takes the
-    # distributed path, never the reverse.)
-    e = (
-        edges.filter(F.col("child_iri") != F.col("parent_iri"))
-        .join(dropped.withColumnRenamed("iri", "child_iri"), "child_iri", "left_anti")
-        .join(dropped.withColumnRenamed("iri", "parent_iri"), "parent_iri", "left_anti")
-        .select("child_iri", "parent_iri")
-    )
-
-    parentless = (
-        nodes.filter(~F.col("iri").isin(list(TOP_ENTITIES)))
-        .join(e.select(F.col("child_iri").alias("iri")), "iri", "left_anti")
-        .select(
-            F.col("iri").alias("child_iri"), F.lit(OWL_THING).alias("parent_iri")
-        )
-    )
-    completed = e.unionByName(parentless)
-
-    # broadcast-vs-shuffle for the loop's edge side is auto-selected by
-    # transitive_closure from the deduped edge count (≤5M rows → broadcast)
-    closure = transitive_closure(
-        completed,
-        cfg.max_closure_iterations,
-        allow_cycles=(mode == "group"),
-    )
-    if mode == "group":
-        # STRICT closure: drop mutually-reachable pairs — reasoner
-        # strict-superclass parity (see PipelineConfig.equivalence_mode).
-        # One self-join on the closure; the reverse side carries only
-        # equivalence pairs in practice, so the anti-join is cheap.
-        rev = closure.select(
-            F.col("child_iri").alias("parent_iri"),
-            F.col("parent_iri").alias("child_iri"),
-        )
-        closure = (
-            closure.filter(F.col("child_iri") != F.col("parent_iri"))
-            .join(rev, ["child_iri", "parent_iri"], "left_anti")
-        )
-    direct = transitive_reduction(closure)
-
-    if mode == "group":
-        # an equivalence set whose only ancestors were in-set lost them all
-        # in the strict filter — re-root its members at owl:Thing, exactly
-        # where the reasoner would put the set's node (every class has
-        # Thing among its strict superclasses unless it IS Thing)
-        orphans = (
-            nodes.filter(~F.col("iri").isin(list(TOP_ENTITIES)))
-            .join(
-                direct.select(F.col("child_iri").alias("iri")).distinct(),
-                "iri",
-                "left_anti",
-            )
-            .select(
-                F.col("iri").alias("child_iri"), F.lit(OWL_THING).alias("parent_iri")
-            )
-        )
-        direct = direct.unionByName(orphans)
-    return direct
 
 
 def k_hop(

@@ -17,11 +17,10 @@ program, which ``build_concept_dictionary`` runs as well) and the is-a
 rows (``isa_rows``: parent codes, Nothing and deprecated parents
 dropped, undeclared parents as their IRI). The ontology is
 broadcast-class data by contract, and ``linkable_terms`` and the export
-hold the whole dictionary on the driver anyway, so the dictionary runs
-there at every size. The only size gate is the hierarchy's, decided in
-operators/hierarchy.py (``small_direct_parents``): the direct parents
-come from the driver kernel below it, else from the distributed
-program, collected.
+hold the whole dictionary on the driver anyway, so the stage runs there
+at every size, with no size gate: the direct parents come from the
+driver kernel (operators/hierarchy.py ``driver_direct_parents``) on the
+concept rows the pass already holds and the collected edge rows.
 
 The export renders the rows directly (no Spark job on local-relation
 inputs); ``ontology_stage`` hands the other entry points the dictionary
@@ -61,7 +60,7 @@ from ..operators.dictionary import (
     parent_code_str,
     with_has_imports,
 )
-from ..operators.hierarchy import distributed_direct_parents, small_direct_parents
+from ..operators.hierarchy import driver_direct_parents
 from ..operators.mentions import extract_mentions
 from ..schemas import CONCEPT_DICTIONARY, OWL_NOTHING
 from ..session import local_frame
@@ -153,18 +152,18 @@ def ontology_rows(
     positional tuples, derives has_imports ONCE into the returned cfg and
     builds the dictionary rows. Unless ``hierarchy`` is off (a resume
     whose ontology chunk is committed needs only the dictionary), the
-    direct parents follow — the hierarchy's gate (``small_direct_parents``)
-    on the concept rows already held, else the distributed program,
-    collected (its output is ontology-scale) — and the is-a rows
-    (``isa_rows``)."""
+    edges are collected once — no Spark job on a local relation — the
+    driver kernel (``driver_direct_parents``) reduces them against the
+    concept rows already held, and the is-a rows (``isa_rows``)
+    follow."""
     cfg, concept_rows, dict_rows = dictionary_pass(concepts, synonyms, cfg)
     isa = None
     if hierarchy:
-        direct = small_direct_parents(
-            concepts, edges, cfg, [(r[0], r[4]) for r in concept_rows]
+        direct = driver_direct_parents(
+            [(r[0], r[4]) for r in concept_rows],
+            edges.select("child_iri", "parent_iri").collect(),
+            cfg.equivalence_mode,
         )
-        if direct is None:
-            direct = distributed_direct_parents(concepts, edges, cfg).collect()
         isa = isa_rows(dict_rows, direct, concept_rows, cfg)
     return OntologyRows(cfg, dict_rows, isa, len(concept_rows))
 
@@ -307,11 +306,11 @@ def materialize_ontology_inputs(
     exact input schema).
 
     No pipeline calls this. Checkpointed frames are no longer local
-    relations, so every collect and bounded probe of the ontology stage
-    becomes a job. Spark jobs per call without → with this call first,
-    its own jobs included (Spark 4, local mode, pizza fixture frames):
-    ``build_graph(...).count()`` 4 → 10, a one-chunk
-    ``build_graph_resumable`` 6 → 12 and ``export_codesystem`` 0 → 6.
+    relations, so every collect of the ontology stage becomes a job.
+    Spark jobs per call without → with this call first, its own jobs
+    included (Spark 4, local mode, pizza fixture frames):
+    ``build_graph(...).count()`` 3 → 8, a one-chunk
+    ``build_graph_resumable`` 4 → 9 and ``export_codesystem`` 0 → 5.
     Kept only for the benchmark's per-layer probes (perfbench/probes.py),
     which time the ontology frames as their own layer."""
     concepts = concepts.localCheckpoint(eager=False)

@@ -8,8 +8,8 @@ ontology_rows), so the export and the triples cannot disagree.
 
 Driver-side by design: the concept list is ontology-scale (broadcast
 class), never transcript-scale. The stage is one driver pass, and the
-export renders its rows directly: on local-relation inputs at or below
-``small_graph_threshold`` it runs no Spark job at all. The designation
+export renders its rows directly: on local-relation inputs it runs no
+Spark job at all, at any size. The designation
 `use` coding mirrors the reference's fixed SNOMED 'Synonym' coding
 (addSynonyms, FhirOwlService.java:905-913); the property list mirrors
 processEntity (imported, root, deprecated, parent*).

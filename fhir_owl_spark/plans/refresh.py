@@ -23,10 +23,11 @@ Equivalence contract (tested): with the same transcripts and config,
 recovered from the v1 triples themselves (has-display + synonym-of),
 so no v1 ontology tables are needed at refresh time.
 
-Scale shape: ontology-side rebuild (broadcast-class) + ONE anti-join of
-the v1 mention partition against the (tiny, broadcast) affected-code
-set + mention extraction over the delta dictionary + the key-hash dedup
-of the delta mentions. The corpus-scale win is that the Arrow mention
+Scale shape: ontology-side rebuild (broadcast-class) + ONE collect of
+the affected codes + ONE anti-join of the v1 mention partition against
+them as a broadcast local relation (none when no code is affected) +
+mention extraction over the delta dictionary + the key-hash dedup of
+the delta mentions. The corpus-scale win is that the Arrow mention
 UDF runs with a delta dictionary; the carried-over mentions are a
 columnar re-scan of the committed v1 output, not a recompute.
 """
@@ -34,9 +35,11 @@ columnar re-scan of the committed v1 output, not a recompute.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..config import PipelineConfig
 from ..operators.mentions import extract_mentions
+from ..session import local_frame
 from .build_graph import (
     mention_triples,
     ontology_stage,
@@ -45,6 +48,7 @@ from .build_graph import (
 )
 
 TRIPLE_COLS = ("subj", "pred", "obj", "obj_type", "conv_id")
+SUBJ = StructType([StructField("subj", StringType())])
 
 
 def affected_codes(old_triples: DataFrame, dictionary: DataFrame) -> DataFrame:
@@ -140,25 +144,23 @@ def refresh_graph(
     stage = ontology_stage(concepts, edges, synonyms, cfg)
     cfg, dictionary = stage.cfg, stage.dictionary
 
-    affected = affected_codes(old_triples, dictionary).localCheckpoint(
-        eager=True
-    )
+    # the affected codes are ontology-bounded: collected once (one job),
+    # they give the delta size, the kept mentions' anti-join side as a
+    # local relation and a filter the local-relation dictionary folds in,
+    # so neither the anti-join nor the delta's mention-term collect
+    # recomputes them
+    codes = [r["code"] for r in affected_codes(old_triples, dictionary).collect()]
+    n_affected = len(codes)
 
-    kept_mentions = (
-        old_triples.filter(F.col("pred") == "mentions-in")
-        .join(
-            F.broadcast(affected.withColumnRenamed("code", "subj")),
+    kept_mentions = old_triples.filter(F.col("pred") == "mentions-in")
+    if codes:
+        kept_mentions = kept_mentions.join(
+            F.broadcast(local_frame(spark, [(c,) for c in codes], SUBJ)),
             "subj",
             "left_anti",
         )
-        .select(*TRIPLE_COLS)
-    )
+    kept_mentions = kept_mentions.select(*TRIPLE_COLS)
 
-    # the affected codes are ontology-bounded: collected once, they give
-    # the delta size and a filter the local-relation dictionary folds in,
-    # so the delta's mention-term collect runs no Spark job
-    codes = [r["code"] for r in affected.collect()]
-    n_affected = len(codes)
     if n_affected == 0:
         # hierarchy-only / metadata-only release: NO corpus scan at all —
         # the refresh cost is the ontology-side rebuild plus a columnar

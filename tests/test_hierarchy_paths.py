@@ -144,9 +144,6 @@ class TestFunctionalClosureFastPath:
         kw = dict(child_col="child", parent_col="parent")
         with pytest.raises(HierarchyCycleError):
             transitive_closure(cyc, **kw)
-        # allow_cycles must fall back to the anti-join loop and terminate
-        n = transitive_closure(cyc, allow_cycles=True, **kw).count()
-        assert n == 12  # every node reaches every cycle member
 
     def test_int64_ids_beyond_float53(self, spark):
         # ids that float64 cannot represent exactly: the chain walk must

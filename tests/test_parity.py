@@ -184,20 +184,6 @@ class TestDuoParity:
         assert "DUO:0000003" not in subjects
 
 
-class TestDistributedHierarchyPath:
-    def test_distributed_equals_driver_side(self, spark):
-        """The iterative-self-join path (small_graph_threshold=0) must
-        produce the same triples as the driver-side fast path and the
-        model."""
-        ont, cfg0 = fx.pizza_fixture()
-        import dataclasses
-
-        cfg = dataclasses.replace(cfg0, small_graph_threshold=0)
-        got = engine_triples(spark, ont, [], cfg)
-        expected = fx.model_build_graph(ont, [], cfg0)
-        assert got == expected
-
-
 class TestIncludeDeprecated:
     def test_deprecated_kept_and_flagged(self, spark):
         ont, cfg0 = fx.pizza_fixture()
@@ -216,13 +202,7 @@ class TestIncludeDeprecated:
 class TestSyntheticScale:
     def test_18k_paths_agree_sampled(self, spark):
         """HPO-scale sanity (BASELINE.md anchor): a 2k-concept slice of the
-        synthetic ontology — driver fast path ≡ distributed path ≡ model."""
-        import dataclasses
-
+        synthetic ontology — engine ≡ model."""
         ont, cfg = fx.synthetic_ontology(2_000)
         expected = fx.model_build_graph(ont, [], cfg)
-        got_fast = engine_triples(spark, ont, [], cfg)
-        assert got_fast == expected
-        cfg2 = dataclasses.replace(cfg, small_graph_threshold=0)
-        got_dist = engine_triples(spark, ont, [], cfg2)
-        assert got_dist == expected
+        assert engine_triples(spark, ont, [], cfg) == expected

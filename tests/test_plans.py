@@ -494,23 +494,25 @@ def test_bpe_pairs_plan_take_ordered(spark):
 # the keyed ontology triples run no job, the mention-term collect none,
 # the ontology chunk's commit one write job with no shuffle, and the
 # export and a collect of ``build_concept_dictionary`` (the same driver
-# pass) none at all. The refresh filters the dictionary by the collected
-# affected codes, so its mention terms cost no job either.
-# export_above_gate is the export with small_graph_threshold=0 on
-# materialized (checkpointed) frames: two collects plus the distributed
-# hierarchy. The Spark-column stage measured build_graph_count 9,
-# resumable 13, export 7, refresh 17 and export_above_gate 75 on the
-# same calls, and the Spark-column dictionary 3 for dictionary_collect;
-# the ontology triples as a Spark union keyed and deduplicated through a
-# shuffle measured resumable 5 and refresh 12. A change may lower them,
-# never raise them.
+# pass) none at all. The refresh collects the affected codes once and
+# filters the dictionary and anti-joins the kept mentions by that list,
+# so its mention terms cost no job either. export_materialized is the
+# export on materialized (checkpointed) frames: one collect each of the
+# concepts, synonyms and edges, the hierarchy from the driver kernel.
+# The Spark-column stage measured build_graph_count 9, resumable 13,
+# export 7 and refresh 17 on the same calls, and the Spark-column
+# dictionary 3 for dictionary_collect; the ontology triples as a Spark
+# union keyed and deduplicated through a shuffle measured resumable 5
+# and refresh 12; the affected codes checkpointed, then collected,
+# refresh 9; the hierarchy behind a size gate, with bounded probes,
+# export_materialized 5. A change may lower them, never raise them.
 PARENT_JOBS = {
     "build_graph_count": 3,
     "resumable": 4,
     "export": 0,
     "dictionary_collect": 0,
-    "refresh": 9,
-    "export_above_gate": 54,
+    "refresh": 8,
+    "export_materialized": 3,
 }
 
 
@@ -520,10 +522,8 @@ def test_pipeline_job_counts(spark, tmp_path):
     refresh of a committed build onto a relabelled release committed
     through write_committed_chunk and a collect of the concept
     dictionary, each on fresh pizza fixture frames, counted by job group;
-    and the export above the hierarchy's size gate on materialized
-    frames."""
+    and the export on materialized frames."""
     import copy
-    import dataclasses
     import uuid
 
     from fhir_owl_spark.plans.export import export_codesystem
@@ -580,10 +580,8 @@ def test_pipeline_job_counts(spark, tmp_path):
             lambda c, e, s, t: build_concept_dictionary(c, s, cfg).collect()
         ),
         "refresh": jobs(refresh, ont=ont2),
-        "export_above_gate": jobs(
-            lambda c, e, s, t: export_codesystem(
-                spark, c, e, s, dataclasses.replace(cfg, small_graph_threshold=0)
-            ),
+        "export_materialized": jobs(
+            lambda c, e, s, t: export_codesystem(spark, c, e, s, cfg),
             materialized=True,
         ),
     }

@@ -11,7 +11,6 @@ are expensive → bounded examples, no shrinking timeout surprises.
 from __future__ import annotations
 
 import dataclasses
-import json
 
 import pytest
 from hypothesis import HealthCheck, given, settings
@@ -104,25 +103,6 @@ def test_engine_equals_model(spark, ont, cfg):
     )
 
 
-@settings(
-    max_examples=6,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture, HealthCheck.too_slow],
-)
-@given(ont=ontologies(), cfg=configs(), data=st.data())
-def test_distributed_hierarchy_equals_model(spark, ont, cfg, data):
-    """Same property through the DISTRIBUTED closure/reduction path."""
-    cfg = dataclasses.replace(cfg, small_graph_threshold=0)
-    expected = fx.model_build_graph(ont, [], cfg)
-    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
-    tdf = fx.transcripts_df(spark, [])
-    got = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in build_graph(spark, concepts, edges, synonyms, tdf, cfg).collect()
-    }
-    assert got == expected
-
-
 def test_cycle_aborts_both_paths(spark):
     ont, cfg = fx.cycle_fixture()
     concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
@@ -153,13 +133,11 @@ def _triples_or_cycle(spark, ont, cfg):
 )
 @given(ont=ontologies(cyclic=True), cfg=configs())
 def test_cyclic_group_mode_paths_equal_model(spark, ont, cfg):
-    """group mode on random CYCLIC ontologies: the driver kernel, the
-    distributed path and the model give the same triples."""
+    """group mode on random CYCLIC ontologies: the driver kernel and the
+    model give the same triples."""
     cfg = dataclasses.replace(cfg, equivalence_mode="group")
     expected = fx.model_build_graph(ont, [], cfg)
     assert _triples_or_cycle(spark, ont, cfg) == expected
-    dist = dataclasses.replace(cfg, small_graph_threshold=0)
-    assert _triples_or_cycle(spark, ont, dist) == expected
 
 
 @settings(
@@ -169,25 +147,24 @@ def test_cyclic_group_mode_paths_equal_model(spark, ont, cfg):
 )
 @given(ont=ontologies(cyclic=True), cfg=configs())
 def test_cyclic_abort_mode_paths_raise_with_model(spark, ont, cfg):
-    """abort mode on random CYCLIC ontologies: both engine paths raise
-    HierarchyCycleError exactly when the model raises, and equal the model
+    """abort mode on random CYCLIC ontologies: the engine raises
+    HierarchyCycleError exactly when the model raises, and equals the model
     otherwise."""
     cfg = dataclasses.replace(cfg, equivalence_mode="abort")
     try:
         expected = fx.model_build_graph(ont, [], cfg)
     except RuntimeError:
         expected = None
-    for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
-        got = _triples_or_cycle(spark, ont, c)
-        if expected is None:
-            assert isinstance(got, HierarchyCycleError)
-        else:
-            assert got == expected
+    got = _triples_or_cycle(spark, ont, cfg)
+    if expected is None:
+        assert isinstance(got, HierarchyCycleError)
+    else:
+        assert got == expected
 
 
 def test_cycle_message_names_member_both_paths(spark):
-    """abort mode names a CYCLE MEMBER on both paths — never the child
-    below the cycle or the parent above it."""
+    """abort mode names a CYCLE MEMBER — never the child below the cycle
+    or the parent above it."""
     from fhir_owl_spark.operators.hierarchy import build_hierarchy
 
     ont = fx.Ontology()
@@ -202,16 +179,15 @@ def test_cycle_message_names_member_both_paths(spark):
     concepts, edges, _ = fx.ontology_dfs(spark, ont)
     cfg = PipelineConfig(equivalence_mode="abort")
     prefix = "Cycle found in hierarchy involving: "
-    for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
-        with pytest.raises(HierarchyCycleError, match=prefix) as err:
-            build_hierarchy(concepts, edges, c).collect()
-        assert str(err.value).split(prefix, 1)[1] in cycle
+    with pytest.raises(HierarchyCycleError, match=prefix) as err:
+        build_hierarchy(concepts, edges, cfg).collect()
+    assert str(err.value).split(prefix, 1)[1] in cycle
 
 
 def test_deep_chain_driver_path_equals_model(spark):
-    """A 100-level chain (deeper than max_closure_iterations) through the
-    driver kernel equals the model: like the reference, the driver path
-    has no depth cap."""
+    """A 100-level chain (deeper than the Spark closure loops' default
+    cap of 64 iterations) through the driver kernel equals the model:
+    like the reference, the kernel has no depth cap."""
     from fhir_owl_spark.operators.hierarchy import build_hierarchy
 
     ont = fx.Ontology()
@@ -224,7 +200,7 @@ def test_deep_chain_driver_path_equals_model(spark):
         if i >= 10 and i % 10 == 0:
             ont.edge(iri, chain[i - 10])  # redundant: reduced away
     cfg = PipelineConfig()
-    assert cfg.max_closure_iterations < len(chain)
+    assert 64 < len(chain)
     concepts, edges, _ = fx.ontology_dfs(spark, ont)
     got = {
         (r["child_iri"], r["parent_iri"])
@@ -258,23 +234,6 @@ def test_equivalence_group_mode_both_paths(spark):
     assert ("Margherita", "Veggie") in isa and ("Margherita", "Vegetarian") in isa
     # isolated 2-cycle re-roots at Thing
     assert ("X", "Thing") in isa and ("Y", "Thing") in isa
-
-
-def test_equivalence_group_mode_distributed_path(spark):
-    """Same fixture forced onto the distributed closure path
-    (small_graph_threshold=0) — must equal the driver fast path."""
-    import dataclasses
-
-    ont, cfg = fx.equivalence_fixture()
-    cfg_dist = dataclasses.replace(cfg, small_graph_threshold=0)
-    expected = fx.model_build_graph(ont, [], cfg)
-    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
-    tdf = fx.transcripts_df(spark, [])
-    got = {
-        (r["subj"], r["pred"], r["obj"])
-        for r in build_graph(spark, concepts, edges, synonyms, tdf, cfg_dist).collect()
-    }
-    assert got == expected
 
 
 def test_equivalent_class_axiom_parsed(spark, tmp_path):
@@ -315,10 +274,7 @@ def test_equivalent_class_axiom_parsed(spark, tmp_path):
 
 def test_dangling_parent_not_rerooted_both_paths(spark):
     """group mode: an edge to an UNDECLARED parent (unmapped import) must
-    not invent a Thing re-root for the dangling endpoint — and the driver
-    fast path must agree with the distributed path."""
-    import dataclasses
-
+    not invent a Thing re-root for the dangling endpoint."""
     ont = fx.Ontology()
     ont.concept(fx.OWL_THING, "x", label="Thing")
     ont.concept("http://x#A", "x", label="A")
@@ -330,22 +286,16 @@ def test_dangling_parent_not_rerooted_both_paths(spark):
 
     fast = {(r["child_iri"], r["parent_iri"])
             for r in build_hierarchy(concepts, edges, cfg).collect()}
-    dist = {(r["child_iri"], r["parent_iri"])
-            for r in build_hierarchy(
-                concepts, edges, dataclasses.replace(cfg, small_graph_threshold=0)
-            ).collect()}
-    assert fast == dist
     assert ("http://imported#Gone", fx.OWL_THING) not in fast
     # A keeps its asserted (dangling) parent
     assert ("http://x#A", "http://imported#Gone") in fast
 
 
 # ---------------------------------------------------------------------------
-# The ontology stage on both sides of the hierarchy's gate: the driver
-# kernel (default small_graph_threshold) and the distributed hierarchy
-# (threshold 0) must give the same dictionary rows, is-a rows, keyed
-# ontology triples and export, the Spark-column dictionary the stage's
-# dictionary rows, and all of them agree with the model.
+# The ontology stage on local-relation frames and the dictionary on
+# checkpointed frames, whose collects run Spark jobs, must give the same
+# dictionary rows; the stage's dictionary rows, is-a rows, keyed ontology
+# triples and export agree with the model.
 # ---------------------------------------------------------------------------
 
 
@@ -360,19 +310,6 @@ def stage_configs(draw):
             st.sampled_from([(), (NS,), ("http://elsewhere.example/",)])
         ),
         has_imports=draw(st.sampled_from([None, True, False])),
-    )
-
-
-def _export_key(cs):
-    """An export with its concept list as a multiset plus its code
-    sequence: concepts are sorted by code only, so the order of concepts
-    that share a code is not part of the output's contract."""
-    concepts = cs["concept"]
-    rest = {k: v for k, v in cs.items() if k != "concept"}
-    return (
-        rest,
-        [c["code"] for c in concepts],
-        sorted(json.dumps(c, sort_keys=True) for c in concepts),
     )
 
 
@@ -400,36 +337,27 @@ def _dictionary_key(frame):
 
 def _stage_both_paths(spark, ont, cfg):
     """Dictionary rows, is-a rows, keyed ontology triples and export of
-    the stage with the driver hierarchy; asserts the distributed
-    hierarchy gives the same four and ``build_concept_dictionary`` on
-    checkpointed (non-local) frames, whose collects run Spark jobs, the
-    same dictionary rows. The triples are distinct, each ``key_hash``
-    equals ``triple_key_col`` evaluated by Spark on its row, and
-    without the key they are the export's triples."""
-    sides = []
-    for c in (cfg, dataclasses.replace(cfg, small_graph_threshold=0)):
-        stage = ontology_stage(*fx.ontology_dfs(spark, ont), c)
-        dictionary = _dictionary_key(stage.dictionary)
-        isa = sorted(ontology_rows(*fx.ontology_dfs(spark, ont), c).isa)
-        keyed = stage.triples.withColumn("_spark_key", triple_key_col()).collect()
-        assert all(r["key_hash"] == r["_spark_key"] for r in keyed)
-        triples = sorted(tuple(r)[:-2] for r in keyed)
-        assert len(set(triples)) == len(triples)
-        cs = export_codesystem(spark, *fx.ontology_dfs(spark, ont), c)
-        assert {(s, p, o) for s, p, o, *_ in triples} == _export_triples(cs)
-        sides.append((dictionary, isa, triples, cs))
-    (d_rows, d_isa, d_triples, d_cs), (s_rows, s_isa, s_triples, s_cs) = sides
-    assert d_rows == s_rows
-    assert d_isa == s_isa
-    assert d_triples == s_triples
-    assert _export_key(d_cs) == _export_key(s_cs)
+    the stage; asserts ``build_concept_dictionary`` on checkpointed
+    (non-local) frames, whose collects run Spark jobs, gives the same
+    dictionary rows. The triples are distinct, each ``key_hash`` equals
+    ``triple_key_col`` evaluated by Spark on its row, and without the
+    key they are the export's triples."""
+    stage = ontology_stage(*fx.ontology_dfs(spark, ont), cfg)
+    rows = _dictionary_key(stage.dictionary)
+    isa = sorted(ontology_rows(*fx.ontology_dfs(spark, ont), cfg).isa)
+    keyed = stage.triples.withColumn("_spark_key", triple_key_col()).collect()
+    assert all(r["key_hash"] == r["_spark_key"] for r in keyed)
+    triples = sorted(tuple(r)[:-2] for r in keyed)
+    assert len(set(triples)) == len(triples)
+    cs = export_codesystem(spark, *fx.ontology_dfs(spark, ont), cfg)
+    assert {(s, p, o) for s, p, o, *_ in triples} == _export_triples(cs)
     concepts, _, synonyms = fx.ontology_dfs(spark, ont)
     assert _dictionary_key(
         build_concept_dictionary(
             concepts.localCheckpoint(), synonyms.localCheckpoint(), cfg
         )
-    ) == d_rows
-    return d_rows, d_isa, d_triples, d_cs
+    ) == rows
+    return rows, isa, triples, cs
 
 
 def _assert_stage_equals_model(ont, cfg, rows, isa, triples, cs):
@@ -455,9 +383,9 @@ def _assert_stage_equals_model(ont, cfg, rows, isa, triples, cs):
 @given(ont=ontologies(), cfg=stage_configs())
 def test_ontology_stage_paths_equal_model(spark, ont, cfg):
     """Random ontologies × code_prop, code_replace, main_namespaces,
-    labels_to_exclude, include_deprecated and has_imports: both sides of
-    the hierarchy's gate, the Spark-column dictionary and the model give
-    the same dictionary, is-a rows, ontology triples and export."""
+    labels_to_exclude, include_deprecated and has_imports: the stage,
+    the dictionary on checkpointed frames and the model give the same
+    dictionary, is-a rows, ontology triples and export."""
     _assert_stage_equals_model(ont, cfg, *_stage_both_paths(spark, ont, cfg))
 
 
@@ -509,8 +437,8 @@ def _empty_label():
      ("nothing_parent", False), ("empty_label", False)],
 )
 def test_ontology_stage_edge_case_both_paths(spark, case, include_deprecated):
-    """One input per corner of the dictionary and parent rules. Both
-    hierarchy paths and the Spark-column dictionary agree on all of them;
+    """One input per corner of the dictionary and parent rules. The
+    stage and the dictionary on checkpointed frames agree on all of them;
     the model agrees only on the
     deprecated parent. On the other four it departs from the engine (an
     IRI code where the shortform is "", the shortform of an undeclared
