@@ -28,6 +28,21 @@ snapshot id for byte-identical resume reads):
     non-committed chunks are deleted and rewritten (write-ahead dirs,
     commit via lineage) — exactly-once output regardless of where the
     previous run died.
+  * Overlap: the staging write of the input runs on a background thread
+    while the caller's thread runs the ontology stage (a driver pass with
+    no Spark job), and the ontology chunk's commit runs on a background
+    thread beside the transcript chunks. Background jobs inherit the
+    caller's job group and tags. Each chunk still commits through its
+    own write and lineage file, so the rules above hold unchanged. On
+    failure:
+      - the ontology stage raises → the staging job is cancelled by its
+        tag and the error raised at once, with nothing committed; a
+        staging cut short has no ``_counts.json`` and is staged again;
+      - a transcript chunk raises → the in-flight ontology commit is
+        waited for, then the error raised;
+      - the ontology commit raises → its error is raised once the
+        transcript chunks are through; they stay committed, and a rerun
+        commits the ontology chunk alone.
 """
 
 from __future__ import annotations
@@ -37,8 +52,10 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor, wait
 from pathlib import Path
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
@@ -216,40 +233,77 @@ def build_graph_resumable(
         meta_path.parent.mkdir(parents=True, exist_ok=True)
         meta_path.write_text(json.dumps({"n_chunks": n_chunks}))
 
-    stage = ontology_stage(
-        concepts, edges, synonyms, cfg, hierarchy=ONTOLOGY_CHUNK not in done
-    )
-    cfg = stage.cfg
-    if ONTOLOGY_CHUNK not in done:
-        # keyed and deduplicated on the driver: the commit is one write job
-        write_committed_chunk(
-            spark, output_dir, ONTOLOGY_CHUNK, stage.triples, stage.n_concepts, run_id
-        )
-
     # Stage the input ONCE, partitioned by the chunk key: one scan of the
     # transcripts total, and every per-chunk read below is a pruned scan
     # of a single _chunk directory (filtering the raw input per chunk
     # would re-scan everything n_chunks times). The staging dir is also
     # the pinned-input checkpoint: a resumed run reads the identical bytes
-    # (the Iceberg analog is a snapshot-id-pinned read).
+    # (the Iceberg analog is a snapshot-id-pinned read). The staging write
+    # and the ontology commit depend on nothing the other steps produce,
+    # so they run in the background while the caller's thread runs the
+    # ontology stage and then the transcript chunks.
     todo = [c for c in range(n_chunks) if c not in done]
     staging = f"{output_dir}/_staged_input"
-    input_rows = _stage_input(transcripts, staging, n_chunks) if todo else []
-    for written, chunk in enumerate(todo, 1):
-        part = (
-            spark.read.schema(transcripts.schema)
-            .parquet(f"{staging}/_chunk={chunk}")
-            if Path(f"{staging}/_chunk={chunk}").exists()
-            else transcripts.limit(0)
+    sc = spark.sparkContext
+    staging_tag = f"stage-input-{uuid.uuid4().hex}"
+
+    def stage_input() -> list[int]:
+        sc.addJobTag(staging_tag)  # this thread's own copy of the properties
+        return _stage_input(transcripts, staging, n_chunks)
+
+    def in_background(fn, *args):
+        # wrapped per call: each target gets its own copy of the caller's
+        # local properties (job group, tags), so the staging tag stays on
+        # the staging job
+        return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        staged = in_background(stage_input) if todo else None
+        try:
+            stage = ontology_stage(
+                concepts, edges, synonyms, cfg, hierarchy=ONTOLOGY_CHUNK not in done
+            )
+        except BaseException:
+            # a bad ontology fails the build at once: cancel the staging
+            # write rather than wait it out, until the worker returns (its
+            # job may not be submitted yet). A staging left without its
+            # _counts.json is staged again by the next run.
+            while staged is not None and not staged.done():
+                sc.cancelJobsWithTag(staging_tag)
+                wait([staged], timeout=0.1)
+            raise
+        cfg = stage.cfg
+        # keyed and deduplicated on the driver: the commit is one write job
+        ontology_commit = (
+            in_background(
+                write_committed_chunk, spark, output_dir, ONTOLOGY_CHUNK,
+                stage.triples, stage.n_concepts, run_id,
+            )
+            if ONTOLOGY_CHUNK not in done
+            else None
         )
-        # pairs_only: batch-local dedup inside the UDF (same as build_graph)
-        pairs = extract_mentions(part, stage.dictionary, cfg, pairs_only=True)
-        write_committed_chunk(
-            spark, output_dir, chunk, triples_with_key(mention_triples(pairs)),
-            input_rows[chunk], run_id,
-        )
-        if fail_after_chunks is not None and written >= fail_after_chunks:
-            raise RuntimeError(f"simulated failure after {written} chunks")
+        try:
+            input_rows = staged.result() if staged is not None else []
+            for written, chunk in enumerate(todo, 1):
+                part = (
+                    spark.read.schema(transcripts.schema)
+                    .parquet(f"{staging}/_chunk={chunk}")
+                    if Path(f"{staging}/_chunk={chunk}").exists()
+                    else transcripts.limit(0)
+                )
+                # pairs_only: batch-local dedup inside the UDF (same as build_graph)
+                pairs = extract_mentions(part, stage.dictionary, cfg, pairs_only=True)
+                write_committed_chunk(
+                    spark, output_dir, chunk, triples_with_key(mention_triples(pairs)),
+                    input_rows[chunk], run_id,
+                )
+                if fail_after_chunks is not None and written >= fail_after_chunks:
+                    raise RuntimeError(f"simulated failure after {written} chunks")
+        finally:
+            # whatever became of the transcript chunks, the ontology commit
+            # finishes before the call returns, and its failure is raised
+            if ontology_commit is not None:
+                ontology_commit.result()
     # every chunk is committed once the loop returns → the staged input
     # has served its purpose
     shutil.rmtree(staging, ignore_errors=True)

@@ -22,6 +22,7 @@ from fhir_owl_spark.plans.lineage import (
     read_lineage,
     read_triples,
 )
+from fhir_owl_spark.schemas import TRIPLES
 
 
 @pytest.fixture(scope="module")
@@ -287,3 +288,63 @@ def test_ontology_chunk_layout(spark, inputs, tmp_path):
                 "subj": False, "obj": True, "obj_type": False,
                 "conv_id": True, "key_hash": True,
             }, part
+
+
+def test_cyclic_ontology_fails_before_any_commit(spark, tmp_path):
+    """A cyclic ontology in abort mode raises from the ontology stage
+    while the input is being staged: the staging write is cancelled, and
+    nothing is committed. A rerun on the fixed ontology restages the
+    input or reuses a staging that completed, and commits every chunk
+    once."""
+    from fhir_owl_spark.operators.hierarchy import HierarchyCycleError
+
+    ont, cfg = fx.cycle_fixture()
+    tdf = fx.transcripts_df(
+        spark, fx.make_transcripts(ont, cfg, n_conv=40, seed=42)
+    ).localCheckpoint()
+    out = str(tmp_path / "graph")
+    with pytest.raises(HierarchyCycleError):
+        build_graph_resumable(spark, *fx.ontology_dfs(spark, ont), tdf, out, cfg, n_chunks=4)
+    assert not list(Path(out).glob("_lineage/part-*.json"))
+
+    back_edge = (fx.PIZZA_NS + "B", fx.PIZZA_NS + "A")
+    ont.edges = [e for e in ont.edges if (e["child_iri"], e["parent_iri"]) != back_edge]
+    concepts, edges, synonyms = fx.ontology_dfs(spark, ont)
+    build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=4)
+    assert_lineage_counts(spark, out, concepts, tdf, 4)
+    assert triple_set(read_triples(spark, out)) == triple_set(
+        build_graph(spark, concepts, edges, synonyms, tdf, cfg)
+    )
+
+
+def test_ontology_commit_failure_is_raised(spark, inputs, tmp_path, monkeypatch):
+    """The ontology chunk commits on a background thread; its failure is
+    raised by the call once the transcript chunks are through. Those stay
+    committed, and a rerun commits the ontology chunk exactly once."""
+    from fhir_owl_spark.plans import lineage
+
+    concepts, edges, synonyms, tdf, cfg = inputs[0]
+    out = str(tmp_path / "graph")
+    commit = lineage.write_committed_chunk
+    failed = []
+
+    def fail_ontology_commit_once(spark, output_dir, chunk, *args):
+        if chunk == lineage.ONTOLOGY_CHUNK and not failed:
+            failed.append(chunk)
+            raise OSError("ontology commit failed")
+        return commit(spark, output_dir, chunk, *args)
+
+    monkeypatch.setattr(lineage, "write_committed_chunk", fail_ontology_commit_once)
+    with pytest.raises(OSError, match="ontology commit failed"):
+        build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=4)
+    assert completed_chunks(spark, out) == {0, 1, 2, 3}
+
+    build_graph_resumable(spark, concepts, edges, synonyms, tdf, out, cfg, n_chunks=4)
+    ids = [r["partition_id"] for r in lineage_rows(out)]
+    assert sorted(ids) == [-1, 0, 1, 2, 3]
+    assert_lineage_counts(spark, out, concepts, tdf, 4)
+    assert not Path(f"{out}/_staged_input").exists()
+    cols = TRIPLES.fieldNames()
+    assert sorted(read_triples(spark, out).select(cols).collect()) == sorted(
+        build_graph(spark, concepts, edges, synonyms, tdf, cfg).select(cols).collect()
+    )
